@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `base/`:
   *   - `data_v{N}/`  immutable data versions (parquet)
-  *   - `VERSION`     one-line pointer to the current N — the
-  *                   manifest-last commit (the O-24 pattern): a data
-  *                   rewrite is invisible until this file flips
+  *   - `_MANIFEST`   the [[MergeableStore]] pointer to the current N —
+  *                   the manifest-last commit (the O-24 pattern): a
+  *                   data rewrite is invisible until this file flips
   *   - `LAYOUT`      optional declared clustering ([[Layout.Spec]]);
   *                   every rewrite (create, compact) reproduces it,
   *                   so zone-map pruning survives maintenance
@@ -34,10 +34,11 @@ import org.apache.spark.sql.functions._
   *     replaces itself instead of duplicating (the [[JoinView]]
   *     recipe).
   *   - COMPACTION crash windows: compact writes `data_v{N+1}`, flips
-  *     `VERSION`, then clears the ledger — in that order. A crash
+  *     the pointer, then clears the ledger — in that order. A crash
   *     before the flip leaves the old version + full ledger (nothing
-  *     lost); a crash after the flip but before the clear leaves the
-  *     new data AND the stale ledger, and re-applying a delete of
+  *     lost; the orphan dir is replaced by the retry); a crash after
+  *     the flip but before the clear leaves the new data AND the
+  *     stale ledger, and re-applying a delete of
   *     keys that no longer exist is a no-op anti-join (spec-proven).
   *     The unsafe order (clear first) would lose deletes — documented
   *     so nobody "optimizes" the sequence.
@@ -69,33 +70,18 @@ object DeleteLedger {
     * null the other era's keys out of the reconcile anti-join. */
   private val LedgerKeyCol = "pk"
 
-  private def versionFile(base: String) = Paths.get(base, "VERSION")
   private def deletesDir(base: String) = s"$base/deletes"
   private def upsertsDir(base: String) = s"$base/upserts"
 
   /** Current data version, or -1 before [[create]] committed. */
-  def currentVersion(base: String): Int = {
-    val p = versionFile(base)
-    if (Files.exists(p)) new String(Files.readAllBytes(p), "UTF-8").trim.toInt
-    else -1
-  }
+  def currentVersion(base: String): Int = MergeableStore.version(base).toInt
 
-  def dataDir(base: String): String =
-    s"$base/data_v${currentVersion(base)}"
-
-  /** Atomic-enough pointer flip: write a temp file, rename over. */
-  private def writeVersion(base: String, v: Int): Unit = {
-    val tmp = Paths.get(base, s".VERSION.tmp")
-    Files.write(tmp, v.toString.getBytes("UTF-8"))
-    Files.move(tmp, versionFile(base), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+  def dataDir(base: String): String = MergeableStore.liveDir(base)
 
   // -----------------------------------------------------------------
-  // Declared layout: a TABLE PROPERTY (`LAYOUT` file beside VERSION),
-  // not a call-site argument. The round-9 failure mode this retires:
-  // compact wrote each new version as a plain parquet dump, so the
+  // Declared layout: a TABLE PROPERTY (`LAYOUT` file beside the
+  // pointer), not a call-site argument. The round-9 failure mode this
+  // retires: compact wrote each new version as a plain parquet dump, so the
   // first maintenance cycle silently destroyed the range/Z-order
   // clustering the zone map prunes on — every post-compaction file
   // spanned the whole key domain and file skipping dropped to ~zero
@@ -131,14 +117,15 @@ object DeleteLedger {
   def create(spark: SparkSession, base: String, df: DataFrame,
       layout: Option[Layout.Spec] = None): Unit = {
     new File(base).mkdirs()
-    layout match {
-      case Some(spec) =>
-        Layout.write(df, s"$base/data_v0", spec)
-        setLayout(base, spec)
-      case None =>
-        df.write.mode(SaveMode.Overwrite).parquet(s"$base/data_v0")
+    MergeableStore.commitNext(base) { dir =>
+      layout match {
+        case Some(spec) =>
+          Layout.write(df, dir, spec)
+          setLayout(base, spec)
+        case None => df.write.parquet(dir)
+      }
     }
-    writeVersion(base, 0)
+    ()
   }
 
   /** Append one delete batch: `keys` is a single-column frame of the
@@ -286,14 +273,13 @@ object DeleteLedger {
   def compact(spark: SparkSession, base: String, pk: String,
       layout: Option[Layout.Spec] = None,
       maxBroadcast: Long = BroadcastDeleteRows): Int = {
-    val next = currentVersion(base) + 1
     val live = read(spark, base, pk, maxBroadcast)
-    layout.orElse(declaredLayout(base)) match {
-      case Some(spec) => Layout.write(live, s"$base/data_v$next", spec)
-      case None => live.write.mode(SaveMode.Overwrite)
-        .parquet(s"$base/data_v$next")
+    val next = MergeableStore.commitNext(base) { dir =>
+      layout.orElse(declaredLayout(base)) match {
+        case Some(spec) => Layout.write(live, dir, spec)
+        case None => live.write.parquet(dir)
+      }
     }
-    writeVersion(base, next)
     // clear order is LOAD-BEARING: upserts BEFORE deletes. A crash
     // leaving both ledgers replays consistently (the delete re-beats
     // the upsert, same winners as the fold); a crash leaving deletes
@@ -303,7 +289,7 @@ object DeleteLedger {
     // (spec-pinned: the crash-schedule test replays each window).
     Fs.deleteRecursively(new File(upsertsDir(base)))
     Fs.deleteRecursively(new File(deletesDir(base)))
-    next
+    next.toInt
   }
 
   // -----------------------------------------------------------------
@@ -351,20 +337,11 @@ object DeleteLedger {
     * `keyExpr` is a SQL expression over the feed's columns producing
     * the table's pk. */
   def start(spark: SparkSession, feedDir: String, base: String,
-      keyExpr: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(feedDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        delete(batch.sparkSession, base,
-          batch.select(expr(keyExpr).as("pk")), s"s$id")
-      }
-      .option("checkpointLocation", s"$base/__delete_checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      keyExpr: String): org.apache.spark.sql.streaming.StreamingQuery =
+    MergeableStore.stream(spark, feedDir, s"$base/__delete_checkpoint") {
+      (batch, id) => delete(batch.sparkSession, base,
+        batch.select(expr(keyExpr).as("pk")), s"s$id")
+    }
 
   /** Streaming twin for the UPSERT feed (the CDC-update side of the
     * mutation story): full-table-schema row batches from `feedDir`
@@ -375,17 +352,8 @@ object DeleteLedger {
     * latest-wins contract [[upsert]] documents. Exactly-once by the
     * same composition as the delete feed. */
   def startUpserts(spark: SparkSession, feedDir: String, base: String,
-      pk: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(feedDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsert(batch.sparkSession, base, batch, pk, s"u$id", seq = id)
-      }
-      .option("checkpointLocation", s"$base/__upsert_checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      pk: String): org.apache.spark.sql.streaming.StreamingQuery =
+    MergeableStore.stream(spark, feedDir, s"$base/__upsert_checkpoint") {
+      (batch, id) => upsert(batch.sparkSession, base, batch, pk, s"u$id", seq = id)
+    }
 }

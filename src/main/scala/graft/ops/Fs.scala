@@ -11,27 +11,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Fs {
 
   /** THE store-read convention (schema evolution contract for every
-    * self-managed parquet store — CDC, quantile/histogram/CMS/HLL
-    * sketch stores, roll-ups, delete ledgers, zone-map catalogs,
-    * ingest ledgers):
+    * self-managed parquet store — the [[MergeableStore]] versions of
+    * the CDC, quantile/histogram/CMS/HLL sketch, checksum and roll-up
+    * stores and the delete ledger's data, plus the append-only
+    * zone-map catalogs and ingest ledgers):
     *
-    *   - stores are append-only directories of immutable parquet
-    *     partitions; SCHEMA EVOLUTION means adding nullable columns
-    *     in new partitions, never renaming/retyping existing ones;
-    *   - every reader goes through this helper, which merges the
-    *     schemas of ALL partitions — a plain read samples one footer
-    *     and would silently DROP a column present only in the other
-    *     era's partitions (the VectorIngest mixed-era ledger bug,
-    *     round 8: the replay guard read zero admitted docs and
-    *     re-admitted duplicates);
-    *   - a column missing in an old partition reads as NULL there;
-    *     each store declares its null semantics at the call site
+    *   - a mergeable store is a `_MANIFEST` pointer naming immutable
+    *     version dirs (`data_v{N}`, or one per live partition), each
+    *     written once by the store's SINGLE writer and collected once
+    *     the pointer moves past it; the other stores are append-only
+    *     dirs of immutable parquet files. SCHEMA EVOLUTION means adding
+    *     nullable columns in new files, never renaming/retyping
+    *     existing ones;
+    *   - every reader goes through this helper (a mergeable store
+    *     through [[MergeableStore.read]], which resolves the pointer
+    *     and lands here), which merges the schemas of ALL files — a
+    *     plain read samples one footer and would silently DROP a
+    *     column present only in the other era's files (the
+    *     VectorIngest mixed-era ledger bug, round 8: the replay guard
+    *     read zero admitted docs and re-admitted duplicates);
+    *   - a column missing in an old file reads as NULL there; each
+    *     store declares its null semantics at the call site
     *     (typically coalesce(col, bootstrap-default)).
     *
     * The merge is a footer-only operation (one small read per file —
     * store file counts are bounded by construction), not a data scan. */
   def readStore(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(dir)
+
+  /** [[readStore]] over chosen partition dirs below `basePath` (their
+    * hive partition columns still resolve). */
+  def readStore(spark: SparkSession, basePath: String,
+      dirs: Seq[String]): DataFrame =
+    spark.read.option("mergeSchema", "true").option("basePath", basePath)
+      .parquet(dirs: _*)
 
   private val artifactMemo = BuildOnce.memo[(Int, String), DataFrame]()
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.graft.PlanBridge
   * scratch is rewritten by the optimizer to probe the incrementally
   * maintained store instead — the 100 TB answer to repeated dashboard
   * aggregates over an append-heavy fact log. The engine already KEEPS
-  * such stores fresh ([[graft.streaming.RollupMaintenance]] overwrites
+  * such stores fresh ([[graft.streaming.RollupMaintenance]] republishes
   * only changed (hour, type) partitions per micro-batch / delta
   * merge); this rule is what makes a plain user query benefit without
   * targeting the store explicitly.
@@ -29,9 +29,10 @@ import org.apache.spark.sql.graft.PlanBridge
   * differs structurally and is left alone.
   *
   * Staleness gating: the rewrite fires only while the store is FRESH —
-  * every source root's latest file mtime must be ≤ the store's. An
-  * append to the source flips the gate off (queries silently fall back
-  * to the from-scratch scan — correctness never depends on the store);
+  * every source root's latest file mtime must be ≤ the store's
+  * publish time (its manifest's mtime). An append to the source flips
+  * the gate off (queries silently fall back to the from-scratch scan —
+  * correctness never depends on the store);
   * the next maintenance cycle ([[graft.streaming.RollupMaintenance.mergeDelta]]
   * or the streaming maintainer) flips it back on. File mtimes are the
   * local-FS stand-in for a catalog high-watermark stamp; the check is
@@ -357,14 +358,16 @@ object MatViewRewriteRule extends Rule[LogicalPlan] {
       else kids.map(latestMtime).max
     } else f.lastModified()
 
-  /** Fresh ⇔ the store exists (committed parquet) and no source root
-    * has a file newer than the store's newest file. */
+  /** Fresh ⇔ the store has a published version and no source root
+    * has a file newer than that publish. A [[graft.ops.MergeableStore]]
+    * stamps its publish on the manifest; a view store outside the
+    * kernel ([[graft.ops.JoinView]]) by its newest committed file. */
   private[plans] def isFresh(v: ServedView): Boolean = {
     val storeRoot = new java.io.File(v.storeDir)
-    graft.ops.Fs.hasCommittedParquet(storeRoot) && {
-      val storeM = latestMtime(storeRoot)
-      v.sourceRoots.forall(r => latestMtime(toLocalFile(r)) <= storeM)
-    }
+    graft.ops.MergeableStore.publishedAt(v.storeDir)
+      .orElse(Some(storeRoot).filter(graft.ops.Fs.hasCommittedParquet)
+        .map(latestMtime))
+      .exists(m => v.sourceRoots.forall(r => latestMtime(toLocalFile(r)) <= m))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =

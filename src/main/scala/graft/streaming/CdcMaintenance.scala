@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Fs
+import graft.ops.MergeableStore
 
 /** Incrementally-maintained CDC state (the streaming twin of
   * [[graft.pipeline.CdcMerge]]): a keyed latest-state table kept
@@ -16,13 +16,10 @@ import graft.ops.Fs
   * sequence number that produced it, and a merge keeps the HIGHER
   * sequence per key (ties → store wins). A replayed batch re-offers
   * rows whose sequences the store already absorbed — a no-op rewrite
-  * of identical rows — and a crash mid-write re-merges exactly the
-  * bucket partitions that missed the first attempt (same
-  * read-modify-write-trap analysis as
-  * [[RollupMaintenance.mergeDelta]], but the guard is the CDC log's
-  * own ordering instead of a batch stamp, so even OUT-OF-ORDER batch
-  * replays converge — the ⊔-idempotent store class of
-  * [[HllMaintenance]]).
+  * of identical rows — and because the guard is the CDC log's own
+  * ordering instead of a batch stamp, even OUT-OF-ORDER batch replays
+  * (or a replay over partially-applied buckets) converge — the
+  * ⊔-idempotent store class of [[HllMaintenance]].
   *
   * Deletes are TOMBSTONES: the key stays in the store with op='D' and
   * its delete sequence, so a replayed pre-delete batch cannot
@@ -35,9 +32,9 @@ import graft.ops.Fs
   * key. Per batch: the batch collapses to its per-key latest rows
   * (one max_by shuffle, map-side partial), only the AFFECTED buckets
   * of the store are read back (partition-pruned semi-join), the merge
-  * is one equi-join on the key, and dynamic partition overwrite
-  * rewrites only those buckets. Writes are proportional to touched
-  * buckets, never the table.
+  * is one equi-join on the key, and a [[MergeableStore]] partition
+  * publish rewrites only those buckets. Writes are proportional to
+  * touched buckets, never the table.
   */
 object CdcMaintenance {
 
@@ -50,40 +47,33 @@ object CdcMaintenance {
   private def bucketOf(keys: Seq[String], buckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(buckets))
 
+  private val Parts = Seq("bucket")
+
   /** Initial store load from a base snapshot (payload columns only —
     * rows enter as op='U' at the minimum sequence, so ANY log entry
     * outranks them). */
   def buildStore(base: DataFrame, keys: Seq[String], storeDir: String,
       buckets: Int): Unit =
-    base
+    MergeableStore.publish(storeDir, base
       .withColumn("op", lit("U"))
       .withColumn("seq", lit(Long.MinValue))
-      .withColumn("bucket", bucketOf(keys, buckets))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(storeDir)
+      .withColumn("bucket", bucketOf(keys, buckets)), Parts)
 
   /** Initial store load from a CHANGELOG prefix, keeping its op/seq
     * (unlike [[buildStore]], whose snapshot rows enter at
-    * Long.MinValue): the bootstrap for maintainers whose sequences
-    * carry semantics of their own — e.g. [[ExperimentMonitor]]'s
-    * monotone-OR encoding, where a MinValue bootstrap would let any
-    * later sighting revoke a first-batch conversion. A replayed
-    * bootstrap epoch re-runs as a normal [[mergeBatch]] and ties lose
-    * to the store, so convergence is unchanged. */
+    * Long.MinValue). [[mergeBatch]] into a store with no published
+    * version does the same after collapsing the batch per key. */
   def seedStore(delta: DataFrame, keys: Seq[String], storeDir: String,
       buckets: Int): Unit =
-    delta
-      .withColumn("bucket", bucketOf(keys, buckets))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(storeDir)
+    MergeableStore.publish(storeDir,
+      delta.withColumn("bucket", bucketOf(keys, buckets)), Parts)
 
   /** Fold one changelog micro-batch (keys ++ payload ++ op/seq) into
-    * the store. Replay-idempotent and out-of-order-safe by the
-    * monotone sequence guard; touches only the batch's buckets. */
+    * the store — the empty store before the first publish, so a
+    * first batch keeps its own op/seq (the bootstrap maintainers whose
+    * sequences carry semantics need, e.g. [[ExperimentMonitor]]'s
+    * monotone-OR encoding). Replay-idempotent and out-of-order-safe by
+    * the monotone sequence guard; touches only the batch's buckets. */
   def mergeBatch(spark: SparkSession, storeDir: String, batch: DataFrame,
       keys: Seq[String], buckets: Int): Unit = {
     if (batch.isEmpty) return
@@ -98,9 +88,10 @@ object CdcMaintenance {
         (Meta ++ payload).map(c => col(s"__last.$c").as(c)): _*)
       .withColumn("bucket", bucketOf(keys, buckets))
       .persist()
-    try {
+    try MergeableStore.merge(spark, storeDir,
+        MergeableStore.empty(spark, delta.schema), Parts) { store =>
       val affected = delta.select("bucket").distinct()
-      val base = Fs.readStore(spark, storeDir)
+      val base = store
         .join(affected, Seq("bucket"), "left_semi")
         .select((keys :+ "bucket").map(col) ++
           (Meta ++ payload).map(c => col(c).as(s"__b_$c")): _*)
@@ -108,42 +99,26 @@ object CdcMaintenance {
       // store wins ties (>=) — a replayed sequence is a no-op.
       val baseWins = col("__b_seq").isNotNull &&
         (col("seq").isNull || col("__b_seq") >= col("seq"))
-      val merged = base
+      Some(base
         .join(delta, keys :+ "bucket", "full_outer")
         .select((keys :+ "bucket").map(col) ++
           (Meta ++ payload).map(c =>
-            when(baseWins, col(s"__b_$c")).otherwise(col(c)).as(c)): _*)
-        .localCheckpoint(true)
-      merged.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(storeDir)
-      graft.ops.BuildOnce.releaseFrame(merged, blocking = false)
+            when(baseWins, col(s"__b_$c")).otherwise(col(c)).as(c)): _*))
     } finally delta.unpersist()
   }
 
   /** Start maintaining `storeDir` from the parquet changelog stream at
     * `sourceDir` (schema: keys ++ payload ++ op/seq). */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
-      keys: Seq[String], buckets: Int): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch.sparkSession, storeDir, batch, keys, buckets)
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      keys: Seq[String], buckets: Int): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+      (batch, _) => mergeBatch(batch.sparkSession, storeDir, batch, keys, buckets)
+    }
 
   /** Current state: tombstones filtered, internals dropped. */
   def read(spark: SparkSession, storeDir: String,
       keys: Seq[String]): DataFrame = {
-    val raw = Fs.readStore(spark, storeDir)
+    val raw = MergeableStore.read(spark, storeDir)
     raw.filter(col("op") =!= "D")
       .select((keys ++ payloadCols(raw, keys)).map(col): _*)
   }
@@ -179,7 +154,7 @@ object CdcMaintenance {
     * sits under the aggregation). */
   def asOfSeq(spark: SparkSession, storeDir: String, log: DataFrame,
       keys: Seq[String], asOf: Long): DataFrame = {
-    val raw = Fs.readStore(spark, storeDir)
+    val raw = MergeableStore.read(spark, storeDir)
     val payload = payloadCols(raw, keys)
     val cols = (keys ++ Meta ++ payload).map(col)
     val combined = raw.filter(col("seq") <= asOf).select(cols: _*)
@@ -195,11 +170,11 @@ object CdcMaintenance {
     * ABOVE the horizon stay: a replayed pre-delete batch inside the
     * replay window must still find the ordering evidence that stops it
     * resurrecting the key. Rewrites only the buckets that actually
-    * hold expired tombstones (partition-pruned, dynamic overwrite) —
+    * hold expired tombstones (partition-pruned, partition publish) —
     * a GC pass over a mostly-live store writes almost nothing. */
   def gcTombstones(spark: SparkSession, storeDir: String,
       horizon: Long): Unit = {
-    val raw = Fs.readStore(spark, storeDir)
+    val raw = MergeableStore.read(spark, storeDir)
     val expired = col("op") === "D" && col("seq") <= horizon
     // bounded driver state: bucket ids, never rows (partition-column
     // type is inference-dependent — int from a hive dir read — so go
@@ -207,23 +182,10 @@ object CdcMaintenance {
     val affected = raw.filter(expired).select("bucket").distinct()
       .collect().map(_.get(0).toString.toLong).toSet
     if (affected.isEmpty) return
-    val rewritten = raw
-      .filter(col("bucket").isin(affected.toSeq: _*) && !expired)
-      .localCheckpoint(true) // reads the files it overwrites
-    rewritten.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(storeDir)
-    // dynamic overwrite only rewrites partitions PRESENT in the data:
-    // a bucket whose every row expired writes nothing, so its stale
-    // dir is dropped explicitly (bucket ids from the checkpointed
-    // frame — the post-write store would still show the stale rows)
-    val survived = rewritten.select("bucket").distinct()
-      .collect().map(_.get(0).toString.toLong).toSet
-    graft.ops.BuildOnce.releaseFrame(rewritten, blocking = false)
-    (affected -- survived).foreach { b =>
-      graft.ops.Fs.deleteRecursively(
-        new java.io.File(s"$storeDir/bucket=$b"))
-    }
+    // a bucket whose every row expired writes nothing: it leaves the
+    // store as a dropped partition
+    MergeableStore.publish(storeDir,
+      raw.filter(col("bucket").isin(affected.toSeq: _*) && !expired),
+      Parts, dropped = affected.map(b => s"bucket=$b"))
   }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Fs
+import graft.ops.MergeableStore
 
 /** Incrementally-maintained table fingerprint: the streaming twin of
   * `q_checksum_delta`. The fingerprint is (row count, bit_xor of the
@@ -22,10 +22,9 @@ import graft.ops.Fs
   * Idempotency follows [[RollupMaintenance.mergeDelta]]'s stamp
   * guard: the store row records the last folded batch id; a retried
   * epoch sees its own stamp and rewrites the store unchanged instead
-  * of double-folding. (A mid-write crash loses only the store
-  * rewrite, not the source batch — the retry re-folds from the
-  * pre-crash store, which the overwrite never destroyed mid-epoch
-  * because the merged row is localCheckpoint'ed before the write.)
+  * of double-folding. (A mid-write crash loses only the new version,
+  * not the source batch — the retry re-folds from the pre-crash
+  * version, which [[MergeableStore]] publishes beside, never over.)
   */
 object ChecksumMaintenance {
 
@@ -42,58 +41,46 @@ object ChecksumMaintenance {
   /** Initial store build (or first-batch create with a real stamp). */
   def build(df: DataFrame, cols: Seq[Column], storeDir: String,
       stamp: String = "__init"): Unit =
-    fingerprint(df, cols).withColumn("last_batch", lit(stamp))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
+    MergeableStore.publish(storeDir,
+      fingerprint(df, cols).withColumn("last_batch", lit(stamp)).coalesce(1))
 
-  /** Fold one batch's fingerprint into the store. `sign` = +1 for
-    * appended rows, -1 for retracted rows (the xor fold is identical
-    * — only the count direction differs: x ^ x = 0 removes). */
+  /** Fold one batch's fingerprint into the store (the empty-table
+    * fingerprint before the first publish). `sign` = +1 for appended
+    * rows, -1 for retracted rows (the xor fold is identical — only the
+    * count direction differs: x ^ x = 0 removes). */
   def mergeDelta(spark: SparkSession, storeDir: String, delta: DataFrame,
       cols: Seq[Column], batchId: String, sign: Int = 1): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
     require(sign == 1 || sign == -1, s"bad sign $sign")
-    val base = Fs.readStore(spark, storeDir)
-      .select(col("n_rows").as("b_n"), col("xor60").as("b_x"),
+    val zero = spark.range(1).select(lit(0L).as("n_rows"), lit(0L).as("xor60"),
+      lit("__init").as("last_batch"))
+    MergeableStore.merge(spark, storeDir, zero) { store =>
+      val base = store.select(col("n_rows").as("b_n"), col("xor60").as("b_x"),
         col("last_batch"))
-    val d = fingerprint(delta, cols)
-      .select(col("n_rows").as("d_n"), col("xor60").as("d_x"))
-    // one-row × one-row cross: both sides are fingerprints already
-    val merged = base.crossJoin(d)
-      .select(
-        when(col("last_batch") === batchId, col("b_n"))
-          .otherwise(col("b_n") + lit(sign.toLong) * col("d_n"))
-          .as("n_rows"),
-        when(col("last_batch") === batchId, col("b_x"))
-          .otherwise(col("b_x").bitwiseXOR(col("d_x"))).as("xor60"),
-        lit(batchId).as("last_batch"))
-      // reads the file it overwrites — detach before the write
-      .localCheckpoint(true)
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
-    merged.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
+      val d = fingerprint(delta, cols)
+        .select(col("n_rows").as("d_n"), col("xor60").as("d_x"))
+      // one-row × one-row cross: both sides are fingerprints already
+      Some(base.crossJoin(d)
+        .select(
+          when(col("last_batch") === batchId, col("b_n"))
+            .otherwise(col("b_n") + lit(sign.toLong) * col("d_n"))
+            .as("n_rows"),
+          when(col("last_batch") === batchId, col("b_x"))
+            .otherwise(col("b_x").bitwiseXOR(col("d_x"))).as("xor60"),
+          lit(batchId).as("last_batch"))
+        .coalesce(1))
     }
   }
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`.
     * `colNames` resolve against each micro-batch. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
-      colNames: Seq[String]): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeDelta(batch.sparkSession, storeDir, batch,
-          colNames.map(col), s"b$id")
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      colNames: Seq[String]): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+      (batch, id) => mergeDelta(batch.sparkSession, storeDir, batch,
+        colNames.map(col), s"b$id")
+    }
 
   def read(spark: SparkSession, storeDir: String): DataFrame =
-    Fs.readStore(spark, storeDir).select("n_rows", "xor60", "last_batch")
+    MergeableStore.read(spark, storeDir).select("n_rows", "xor60", "last_batch")
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.PipelineOps
 
@@ -75,18 +75,8 @@ object CurationIngest {
     * replay harnesses; a production run would use a continuous
     * trigger). */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
-      ledgerDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, outDir, ledgerDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$outDir-__checkpoint")
-      .start()
-  }
+      ledgerDir: String): StreamingQuery =
+    graft.ops.MergeableStore.stream(spark, sourceDir, s"$outDir-__checkpoint") {
+      (batch, batchId) => processBatch(spark, batch, outDir, ledgerDir, batchId)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Fs
 
@@ -31,8 +31,8 @@ import graft.ops.Fs
   *   - signature index: same batch-keyed overwrite (IncrementalNearDup);
   *   - rollup: the `last_batch` stamp guard — a partition already
   *     carrying this batch's stamp passes through unmerged
-  *     (RollupMaintenance.mergeDelta), and the FIRST batch creates the
-  *     store stamped with its own id for the same reason;
+  *     (RollupMaintenance.mergeDelta; the FIRST batch merges into the
+  *     empty store, so its stamp guards its own replay too);
   *   - frequency sketch: the identical stamp guard on the dense CMS
   *     store (SketchMaintenance.mergeDelta) — a replayed fold is a
   *     rewrite-unchanged, so streamed-through-crashes cells stay
@@ -104,18 +104,10 @@ object CurationPipeline {
     try {
       // stage 3 — rollup: per-(hour, lang) admitted-doc metrics,
       // stamp-guarded so a replayed epoch can't double-merge. The
-      // bootstrap-vs-merge dispatch checks for COMMITTED parquet data,
-      // not bare directory existence: an all-filtered first batch (an
-      // empty partitioned write commits no data files) or a crash
-      // inside buildStore would otherwise leave a dataless directory
-      // that sends every retry down mergeDelta's store read — failing
-      // schema inference deterministically, wedging the stream.
+      // first epoch merges into the empty store — the bootstrap.
       val events = admitted.select(docTs.as("ts"),
         col("lang").as("event_type"), col("quality").cast("double").as("value"))
-      if (!Fs.hasCommittedParquet(new java.io.File(dirs.rollup)))
-        RollupMaintenance.buildStore(events, dirs.rollup, stamp = s"b$batchId")
-      else
-        RollupMaintenance.mergeDelta(spark, dirs.rollup, events, s"b$batchId")
+      RollupMaintenance.mergeDelta(spark, dirs.rollup, events, s"b$batchId")
 
       // stage 4 — frequency sketch: fold the admitted docs' source
       // keys into the CMS store ([[SketchMaintenance]] — the
@@ -123,18 +115,10 @@ object CurationPipeline {
       // probes). CMS linearity makes maintenance per-batch-local (no
       // history rescan); the same `last_batch` stamp guard as the
       // rollup makes a replayed epoch rewrite the store UNCHANGED
-      // instead of double-folding. The dense store always commits
-      // data files (1024 rows even from an all-filtered batch), so
-      // the bootstrap-vs-merge dispatch has no dataless-dir hazard —
-      // but the first build must still stamp the REAL batch id, or a
-      // crash-after-build retry would merge the same cells again.
+      // instead of double-folding.
       val admittedSrc = admitted.join(batch.select("doc_id", "source"), "doc_id")
-      if (!Fs.hasCommittedParquet(new java.io.File(dirs.sketch)))
-        SketchMaintenance.build(admittedSrc, col("source"), dirs.sketch,
-          stamp = s"b$batchId")
-      else
-        SketchMaintenance.mergeDelta(spark, dirs.sketch, admittedSrc,
-          col("source"), s"b$batchId")
+      SketchMaintenance.mergeDelta(spark, dirs.sketch, admittedSrc,
+        col("source"), s"b$batchId")
 
       // stage 5 — atomic publish: batch-keyed dir, pre-cleaned so a
       // replay REPLACES a previously-committed copy instead of adding
@@ -151,18 +135,8 @@ object CurationPipeline {
     * on the same checkpoint resumes at the first uncommitted epoch and
     * replays it through the idempotent [[processBatch]]. */
   def start(spark: SparkSession, sourceDir: String, dirs: Dirs,
-      tau: Double = 0.5): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, dirs, batchId, tau)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", dirs.checkpoint)
-      .start()
-  }
+      tau: Double = 0.5): StreamingQuery =
+    graft.ops.MergeableStore.stream(spark, sourceDir, dirs.checkpoint) {
+      (batch, batchId) => processBatch(spark, batch, dirs, batchId, tau)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming distribution-drift monitor COMPOSED from the maintained
   * stores: two [[HistogramMaintenance]] equi-width histograms (a
@@ -97,13 +97,9 @@ object DriftMonitor {
       storeA: String, storeB: String, alertDir: String,
       splitCol: String, refValue: String, valueName: String,
       lo: Long, width: Long, buckets: Int,
-      thrPermille: Long): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      thrPermille: Long): StreamingQuery =
+    graft.ops.MergeableStore.stream(spark, sourceDir, s"$alertDir-__checkpoint") {
+      (batch, id) =>
         val s = batch.sparkSession
         HistogramMaintenance.mergeDelta(s, storeA,
           batch.filter(col(splitCol) === refValue), col(valueName),
@@ -117,11 +113,7 @@ object DriftMonitor {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch")
           .parquet(alertDir)
-      }
-      .option("checkpointLocation", s"$alertDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** The alert log, one row per folded micro-batch. */
   def alerts(spark: SparkSession, alertDir: String): DataFrame =

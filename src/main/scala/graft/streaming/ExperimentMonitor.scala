@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming experiment readout COMPOSED from the maintained stores —
   * the streamed twin of the batch `q_ab_test`: a [[CdcMaintenance]]
@@ -22,12 +22,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * tie and lose to the store). Out-of-order and at-least-once safety
   * are inherited from the store, not re-proven here.
   *
-  * Bootstrap: the first committed batch enters via
-  * [[CdcMaintenance.seedStore]], which KEEPS the delta's op/seq — a
-  * buildStore-style Long.MinValue bootstrap would let any later
-  * sighting outrank (and revoke) a first-batch conversion, breaking
-  * the OR. A replayed bootstrap epoch re-runs as a normal merge,
-  * ties lose to the store, and the readout converges.
+  * Bootstrap: the first committed batch merges into the empty store,
+  * which KEEPS the delta's op/seq — a buildStore-style Long.MinValue
+  * bootstrap would let any later sighting outrank (and revoke) a
+  * first-batch conversion, breaking the OR. A replayed bootstrap epoch
+  * re-runs as a normal merge, ties lose to the store, and the readout
+  * converges.
   *
   * Scale shape per batch: one user-grain map-side rollup of the
   * batch, a bucket-pruned store merge (CdcMaintenance's shape), then
@@ -100,33 +100,20 @@ object ExperimentMonitor {
     * `sourceDir` and append one cumulative alert row per micro-batch
     * to `alertDir`. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
-      alertDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      alertDir: String): StreamingQuery =
+    graft.ops.MergeableStore.stream(spark, sourceDir, s"$alertDir-__checkpoint") {
+      (batch, id) =>
         val s = batch.sparkSession
-        val delta = conversions(
-          batch.select("user_id", "event_type", "value"))
-        if (!graft.ops.Fs.hasCommittedParquet(new java.io.File(storeDir)))
-          CdcMaintenance.seedStore(delta, Seq("user_id"), storeDir,
-            Buckets)
-        else
-          CdcMaintenance.mergeBatch(s, storeDir, delta,
-            Seq("user_id"), Buckets)
+        CdcMaintenance.mergeBatch(s, storeDir,
+          conversions(batch.select("user_id", "event_type", "value")),
+          Seq("user_id"), Buckets)
         alertRow(s, storeDir, id)
           .coalesce(1)
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch")
           .parquet(alertDir)
-      }
-      .option("checkpointLocation", s"$alertDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** The alert log, one cumulative readout per folded micro-batch. */
   def alerts(spark: SparkSession, alertDir: String): DataFrame =

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{Fs, QuantileSketch}
+import graft.ops.{MergeableStore, QuantileSketch}
 import graft.ops.QuantileSketch.QSketch
 
 /** Per-GROUP incrementally-maintained quantile store — the grouped
@@ -41,34 +41,38 @@ object GroupQuantileMaintenance {
     * single-line registry key can collide with it. */
   private val StampG = "\n__stamp"
 
-  private def writeStore(spark: SparkSession, sks: Map[String, QSketch],
-      storeDir: String, stamp: String): Unit = {
+  /** Per-group sketches in store rows, stamped. */
+  private def storeRows(spark: SparkSession, sks: Map[String, QSketch],
+      stamp: String): DataFrame = {
     import spark.implicits._
     val rows = (StampG, MetaH, 0L, 0L) +: sks.toSeq.flatMap { case (g, sk) =>
       (g, MetaH, sk.level.toLong, sk.total) +:
         sk.canonical.map { case (h, v) => (g, h, v, 0L) }
     }
     rows.toDF("g", "h", "v", "total")
-      .withColumn("last_batch", lit(stamp))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
+      .withColumn("last_batch", lit(stamp)).coalesce(1)
   }
 
-  /** Read the store back: per-group sketches + the idempotency stamp. */
-  def readSketches(spark: SparkSession, storeDir: String,
-      k: Int = QuantileSketch.DefaultK): (Map[String, QSketch], String) = {
-    val rows = Fs.readStore(spark, storeDir)
-      .select("g", "h", "v", "total", "last_batch").collect()
+  /** Store rows back to per-group sketches + the idempotency stamp. */
+  private def decode(store: DataFrame,
+      k: Int): (Map[String, QSketch], String) = {
+    val rows = store.select("g", "h", "v", "total", "last_batch").collect()
     val stamp = rows.head.getString(4)
     val byG = rows.filterNot(_.getString(0) == StampG)
       .groupBy(_.getString(0)).map { case (g, rs) =>
         val meta = rs.find(_.getLong(1) == MetaH)
-          .getOrElse(sys.error(s"group $g in $storeDir has no meta row"))
+          .getOrElse(sys.error(s"group $g has no meta row"))
         val items = rs.filter(_.getLong(1) != MetaH)
           .map(r => (r.getLong(1), r.getLong(2))).toVector
         g -> QSketch(k, meta.getLong(2).toInt, meta.getLong(3), items)
       }
     (byG, stamp)
   }
+
+  /** Read the store back: per-group sketches + the idempotency stamp. */
+  def readSketches(spark: SparkSession, storeDir: String,
+      k: Int = QuantileSketch.DefaultK): (Map[String, QSketch], String) =
+    decode(MergeableStore.read(spark, storeDir), k)
 
   /** Distributed batch → per-group sketches: ONE typed aggregation
     * whose partial buffers carry ≤k pairs per group, then a
@@ -92,7 +96,8 @@ object GroupQuantileMaintenance {
     * [[mergeDelta]] bootstraps group-by-group). */
   def build(rows: DataFrame, storeDir: String,
       k: Int = QuantileSketch.DefaultK, stamp: String = "__init"): Unit =
-    writeStore(rows.sparkSession, sketchesOf(rows, k), storeDir, stamp)
+    MergeableStore.publish(storeDir,
+      storeRows(rows.sparkSession, sketchesOf(rows, k), stamp))
 
   /** Bounded-registry ceiling for the DRIVER-side fold: at or below
     * it the per-group merge collects groups × k pairs (sources,
@@ -106,13 +111,6 @@ object GroupQuantileMaintenance {
     * spec-pinned bit-equal. */
   val MaxDriverGroups: Long = 8192L
 
-  /** The store's idempotency stamp alone — one filtered head, no
-    * group-domain-sized collect (the regime gate must not pay the
-    * collect it exists to avoid). */
-  private def readStamp(spark: SparkSession, storeDir: String): String =
-    Fs.readStore(spark, storeDir).filter(col("g") === lit(StampG))
-      .select("last_batch").head().getString(0)
-
   /** The distributed fold as a frame of store rows (g, h, v, total):
     * stored rows ⊎ the delta's distributed per-group sketch rows,
     * one groupByKey on g, per-group imperative rebuild + the SAME
@@ -120,10 +118,13 @@ object GroupQuantileMaintenance {
     * construction. private[graft] so the spec can plan-assert the
     * exchange + mapGroups shape. */
   private[graft] def mergedRowsDistributed(spark: SparkSession,
-      storeDir: String, delta: DataFrame, k: Int): DataFrame = {
+      storeDir: String, delta: DataFrame, k: Int): DataFrame =
+    foldDistributed(spark, MergeableStore.read(spark, storeDir), delta, k)
+
+  private def foldDistributed(spark: SparkSession, store: DataFrame,
+      delta: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    val stored = Fs.readStore(spark, storeDir)
-      .filter(col("g") =!= lit(StampG))
+    val stored = store.filter(col("g") =!= lit(StampG))
       .select(col("g"), col("h"), col("v"), col("total"),
         lit(0).as("side"))
     val agg = new QuantileSketch.QuantileSketchAgg(k)
@@ -160,41 +161,44 @@ object GroupQuantileMaintenance {
       .toDF("g", "h", "v", "total")
   }
 
-  /** Fold one batch of (g, h, v) rows into the store — idempotent per
-    * batchId; a group unseen so far merges from the empty sketch.
-    * Regime is gated on the MEASURED group count (stored meta rows +
-    * delta distinct groups — an upper bound on the union): at or
-    * under `maxDriverGroups` the original driver fold runs; above it
-    * the distributed fold (same rows, spec-pinned). */
+  /** Fold one batch of (g, h, v) rows into the store (the zero-group
+    * store before the first publish) — idempotent per batchId; a group
+    * unseen so far merges from the empty sketch. Regime is gated on
+    * the MEASURED group count (stored meta rows + delta distinct
+    * groups — an upper bound on the union): at or under
+    * `maxDriverGroups` the original driver fold runs; above it the
+    * distributed fold (same rows, spec-pinned). The stamp check is one
+    * filtered head — no group-domain-sized collect (the regime gate
+    * must not pay the collect it exists to avoid). */
   def mergeDelta(spark: SparkSession, storeDir: String, delta: DataFrame,
       batchId: String, k: Int = QuantileSketch.DefaultK,
       maxDriverGroups: Long = MaxDriverGroups): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
-    if (readStamp(spark, storeDir) == batchId) return
-    val storedGroups = Fs.readStore(spark, storeDir)
-      .filter(col("g") =!= lit(StampG) && col("h") === lit(MetaH)).count()
-    val deltaGroups = delta.select(col("g")).distinct().count()
-    if (storedGroups + deltaGroups <= maxDriverGroups) {
-      val (stored, _) = readSketches(spark, storeDir, k)
-      val fresh = sketchesOf(delta, k)
-      val merged = (stored.keySet ++ fresh.keySet).map { g =>
-        g -> stored.getOrElse(g, QSketch.empty(k))
-          .merge(fresh.getOrElse(g, QSketch.empty(k)))
-      }.toMap
-      writeStore(spark, merged, storeDir, batchId)
-    } else {
-      import spark.implicits._
-      val stampRow = Seq((StampG, MetaH, 0L, 0L))
-        .toDF("g", "h", "v", "total")
-      // localCheckpoint before the overwrite: the plan reads the very
-      // dir it replaces (the self-overwrite hazard), and the store
-      // must never be clobbered by a plan that still needs it
-      val out = mergedRowsDistributed(spark, storeDir, delta, k)
-        .union(stampRow)
-        .withColumn("last_batch", lit(batchId))
-        .localCheckpoint(true)
-      out.write.mode(SaveMode.Overwrite).parquet(storeDir)
-      out.unpersist()
+    MergeableStore.merge(spark, storeDir,
+        storeRows(spark, Map.empty, "__init")) { store =>
+      val stamp = store.filter(col("g") === lit(StampG))
+        .select("last_batch").head().getString(0)
+      if (stamp == batchId) None
+      else {
+        val storedGroups = store
+          .filter(col("g") =!= lit(StampG) && col("h") === lit(MetaH)).count()
+        val deltaGroups = delta.select(col("g")).distinct().count()
+        if (storedGroups + deltaGroups <= maxDriverGroups) {
+          val (stored, _) = decode(store, k)
+          val fresh = sketchesOf(delta, k)
+          Some(storeRows(spark, (stored.keySet ++ fresh.keySet).map { g =>
+            g -> stored.getOrElse(g, QSketch.empty(k))
+              .merge(fresh.getOrElse(g, QSketch.empty(k)))
+          }.toMap, batchId))
+        } else {
+          import spark.implicits._
+          val stampRow = Seq((StampG, MetaH, 0L, 0L))
+            .toDF("g", "h", "v", "total")
+          Some(foldDistributed(spark, store, delta, k)
+            .union(stampRow)
+            .withColumn("last_batch", lit(batchId)))
+        }
+      }
     }
   }
 
@@ -225,7 +229,7 @@ object GroupQuantileMaintenance {
     require(buckets >= 1, s"buckets $buckets")
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val store = Fs.readStore(spark, storeDir)
+    val store = MergeableStore.read(spark, storeDir)
       .filter(col("g") =!= StampG)
     val meta = store.filter(col("h") === MetaH)
       .select(col("g"), col("v").as("lstar"), col("total").as("n"))
@@ -253,21 +257,13 @@ object GroupQuantileMaintenance {
     * key. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
       gExpr: String, vExpr: String, keyExpr: String,
-      k: Int = QuantileSketch.DefaultK): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      k: Int = QuantileSketch.DefaultK): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+      (batch, id) =>
         val rows = batch.select(
           expr(gExpr).cast("string").as("g"),
           QuantileSketch.hash60(expr(keyExpr).cast("string")).as("h"),
           expr(vExpr).cast("long").as("v"))
         mergeDelta(batch.sparkSession, storeDir, rows, s"b$id", k)
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 }

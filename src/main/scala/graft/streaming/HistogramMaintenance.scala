@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Fs
+import graft.ops.MergeableStore
 
 /** Incrementally-maintained EQUI-WIDTH histogram — the streaming twin
   * of `ops/Histogram`'s equi-depth statistic, completing the stats
@@ -69,32 +69,29 @@ object HistogramMaintenance {
   /** Initial store build (empty `df` yields the all-zero store). */
   def build(df: DataFrame, v: Column, lo: Long, width: Long,
       buckets: Int, storeDir: String, stamp: String = "__init"): Unit =
-    dense(df.sparkSession, sparseCounts(df, v, lo, width, buckets), buckets)
-      .withColumn("last_batch", lit(stamp))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
+    MergeableStore.publish(storeDir,
+      dense(df.sparkSession, sparseCounts(df, v, lo, width, buckets), buckets)
+        .withColumn("last_batch", lit(stamp)).coalesce(1))
 
-  /** Fold one batch's counts into the store; `sign` = −1 retracts. */
+  /** Fold one batch's counts into the store (the all-zero store before
+    * the first publish); `sign` = −1 retracts. */
   def mergeDelta(spark: SparkSession, storeDir: String, delta: DataFrame,
       v: Column, lo: Long, width: Long, buckets: Int,
       batchId: String, sign: Int = 1): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
     require(sign == 1 || sign == -1, s"bad sign $sign")
-    val base = Fs.readStore(spark, storeDir)
-    val d = sparseCounts(delta, v, lo, width, buckets)
-      .select(col("bucket"), col("c").as("dc"))
-    val merged = base.join(broadcast(d), Seq("bucket"), "left")
-      .select(col("bucket"),
-        when(col("last_batch") === batchId, col("c"))
-          .otherwise(col("c") +
-            lit(sign.toLong) * coalesce(col("dc"), lit(0L))).as("c"),
-        lit(batchId).as("last_batch"))
-      // reads the file it overwrites — detach before the write
-      .localCheckpoint(true)
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
-    merged.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
+    val zero = spine(spark, buckets)
+      .select(col("bucket"), lit(0L).as("c"), lit("__init").as("last_batch"))
+    MergeableStore.merge(spark, storeDir, zero) { base =>
+      val d = sparseCounts(delta, v, lo, width, buckets)
+        .select(col("bucket"), col("c").as("dc"))
+      Some(base.join(broadcast(d), Seq("bucket"), "left")
+        .select(col("bucket"),
+          when(col("last_batch") === batchId, col("c"))
+            .otherwise(col("c") +
+              lit(sign.toLong) * coalesce(col("dc"), lit(0L))).as("c"),
+          lit(batchId).as("last_batch"))
+        .coalesce(1))
     }
   }
 
@@ -112,7 +109,7 @@ object HistogramMaintenance {
       lo: Long, width: Long, buckets: Int): (Long, Long) = {
     // bucket b covers [lo + b·width, lo + (b+1)·width); wholly ≤ x
     // iff its upper edge − 1 ≤ x
-    val r = Fs.readStore(spark, storeDir)
+    val r = MergeableStore.read(spark, storeDir)
       .agg(
         sum(when(col("bucket") < (buckets - 1) &&
           lit(lo) + (col("bucket") + 1) * width - 1 <= x, col("c"))
@@ -125,23 +122,14 @@ object HistogramMaintenance {
   }
 
   def read(spark: SparkSession, storeDir: String): DataFrame =
-    Fs.readStore(spark, storeDir)
+    MergeableStore.read(spark, storeDir)
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
       valueName: String, lo: Long, width: Long,
-      buckets: Int): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeDelta(batch.sparkSession, storeDir, batch, col(valueName),
-          lo, width, buckets, s"b$id")
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      buckets: Int): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+      (batch, id) => mergeDelta(batch.sparkSession, storeDir, batch,
+        col(valueName), lo, width, buckets, s"b$id")
+    }
 }

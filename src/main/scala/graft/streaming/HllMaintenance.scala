@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Fs
+import graft.ops.MergeableStore
 
 /** Incrementally-maintained per-group HyperLogLog register store —
   * the CARDINALITY twin of [[SketchMaintenance]]'s frequency CMS:
@@ -68,65 +68,52 @@ object HllMaintenance {
   def build(df: DataFrame, grp: Column, key: Column, storeDir: String,
       stamp: String = "__init"): Unit = {
     val sparse = registers(df, grp, key)
-    densify(sparse.select("grp").distinct(), sparse)
-      .withColumn("last_batch", lit(stamp))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
+    MergeableStore.publish(storeDir,
+      densify(sparse.select("grp").distinct(), sparse)
+        .withColumn("last_batch", lit(stamp)).coalesce(1))
   }
 
-  /** Max-merge one batch's registers into the store. Idempotent by
-    * the ⊔-semilattice algebra — a replayed epoch converges without
-    * a stamp guard (the stamp column is observability only). A group
-    * first seen in this delta is densified to its full 64 rows. */
+  /** Max-merge one batch's registers into the store (the zero-group
+    * store before the first publish). Idempotent by the ⊔-semilattice
+    * algebra — a replayed epoch converges without a stamp guard (the
+    * stamp column is observability only). A group first seen in this
+    * delta is densified to its full 64 rows. */
   def mergeDelta(spark: SparkSession, storeDir: String, delta: DataFrame,
-      grp: Column, key: Column, batchId: String): Unit = {
-    val base = Fs.readStore(spark, storeDir).select("grp", "bucket", "reg")
-    val d = registers(delta, grp, key)
-      .select(col("grp"), col("bucket"), col("reg").as("dreg"))
-    val grps = base.select("grp").unionByName(d.select("grp")).distinct()
-    val merged = grps
-      .select(col("grp"),
-        explode(sequence(lit(0L), lit(Buckets - 1L))).as("bucket"))
-      .join(base, Seq("grp", "bucket"), "left")
-      .join(d, Seq("grp", "bucket"), "left")
-      .select(col("grp"), col("bucket"),
-        greatest(coalesce(col("reg"), lit(0L)),
-          coalesce(col("dreg"), lit(0L))).as("reg"),
-        lit(batchId).as("last_batch"))
-      // reads the file it overwrites — detach before the write
-      .localCheckpoint(true)
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
-    merged.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
+      grp: Column, key: Column, batchId: String): Unit =
+    MergeableStore.merge(spark, storeDir, MergeableStore.empty(spark,
+        "grp string, bucket bigint, reg bigint, last_batch string")) { store =>
+      val base = store.select("grp", "bucket", "reg")
+      val d = registers(delta, grp, key)
+        .select(col("grp"), col("bucket"), col("reg").as("dreg"))
+      val grps = base.select("grp").unionByName(d.select("grp")).distinct()
+      Some(grps
+        .select(col("grp"),
+          explode(sequence(lit(0L), lit(Buckets - 1L))).as("bucket"))
+        .join(base, Seq("grp", "bucket"), "left")
+        .join(d, Seq("grp", "bucket"), "left")
+        .select(col("grp"), col("bucket"),
+          greatest(coalesce(col("reg"), lit(0L)),
+            coalesce(col("dreg"), lit(0L))).as("reg"),
+          lit(batchId).as("last_batch"))
+        .coalesce(1))
     }
-  }
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
-      grpName: String, keyName: String): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeDelta(batch.sparkSession, storeDir, batch,
-          col(grpName), col(keyName), s"b$id")
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      grpName: String, keyName: String): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+      (batch, id) => mergeDelta(batch.sparkSession, storeDir, batch,
+        col(grpName), col(keyName), s"b$id")
+    }
 
   def read(spark: SparkSession, storeDir: String): DataFrame =
-    Fs.readStore(spark, storeDir).select("grp", "bucket", "reg", "last_batch")
+    MergeableStore.read(spark, storeDir).select("grp", "bucket", "reg", "last_batch")
 
   /** Per-group distinct estimate from the dense store — the raw-HLL
     * form q_hll_distinct outputs (no small-range correction: that
     * needs a transcendental ln; the registers ARE the sketch). */
   def estimate(spark: SparkSession, storeDir: String): DataFrame =
-    Fs.readStore(spark, storeDir)
+    MergeableStore.read(spark, storeDir)
       .groupBy("grp")
       .agg(sum(when(col("reg") > 0L, 1L).otherwise(0L)).as("n_hit"),
         max(col("reg")).as("max_reg"),

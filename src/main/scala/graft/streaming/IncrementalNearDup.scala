@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.DedupFunctions
 import graft.functions.SigAgreement
@@ -120,21 +120,11 @@ object IncrementalNearDup {
 
   /** File-stream form over a parquet directory of documents. */
   def start(spark: SparkSession, sourceDir: String, indexDir: String,
-      admittedDir: String, tau: Double = 0.5): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      admittedDir: String, tau: Double = 0.5): StreamingQuery =
+    graft.ops.MergeableStore.stream(spark, sourceDir, s"$indexDir-__checkpoint") {
+      (batch, batchId) =>
         processBatch(spark, batch, indexDir, batchId, tau)
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$admittedDir/batch_id=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$indexDir-__checkpoint")
-      .start()
-  }
+    }
 }

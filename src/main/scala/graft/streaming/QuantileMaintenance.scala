@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{Fs, QuantileSketch}
+import graft.ops.{MergeableStore, QuantileSketch}
 import graft.ops.QuantileSketch.QSketch
 
 /** Incrementally-maintained quantile store: the streaming twin of the
@@ -28,36 +28,38 @@ import graft.ops.QuantileSketch.QSketch
   * its ≤k-row sketch ([[QuantileSketch.sketchRows]] — the same plan
   * the hash-gated query uses); the fold into the stored sketch is a
   * ≤2k-item driver-side merge (bounded driver state, the 1024-bucket
-  * LM class), written back from driver-local rows — the store never
-  * reads the file it overwrites.
+  * LM class), published from driver-local rows.
   */
 object QuantileMaintenance {
 
   /** Sentinel h for the meta row (real priorities are ≥ 0). */
   val MetaH = -1L
 
-  private def writeStore(spark: SparkSession, sk: QSketch,
-      storeDir: String, stamp: String): Unit = {
+  /** A sketch in store rows, stamped. */
+  private def storeRows(spark: SparkSession, sk: QSketch,
+      stamp: String): DataFrame = {
     import spark.implicits._
     val rows = (MetaH, sk.level.toLong, sk.total) +:
       sk.canonical.map { case (h, v) => (h, v, 0L) }
     rows.toDF("h", "v", "total")
-      .withColumn("last_batch", lit(stamp))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
+      .withColumn("last_batch", lit(stamp)).coalesce(1)
   }
 
-  /** Read the store back as a sketch value (+ its stamp). */
-  def readSketch(spark: SparkSession, storeDir: String,
-      k: Int = QuantileSketch.DefaultK): (QSketch, String) = {
-    val rows = Fs.readStore(spark, storeDir)
-      .select("h", "v", "total", "last_batch").collect()
+  /** Store rows back to a sketch value (+ its stamp). */
+  private def decode(store: DataFrame, k: Int): (QSketch, String) = {
+    val rows = store.select("h", "v", "total", "last_batch").collect()
     val stamp = rows.head.getString(3)
     val meta = rows.find(_.getLong(0) == MetaH)
-      .getOrElse(sys.error(s"quantile store $storeDir has no meta row"))
+      .getOrElse(sys.error("quantile store has no meta row"))
     val items = rows.filter(_.getLong(0) != MetaH)
       .map(r => (r.getLong(0), r.getLong(1))).toVector
     (QSketch(k, meta.getLong(1).toInt, meta.getLong(2), items), stamp)
   }
+
+  /** Read the store back as a sketch value (+ its stamp). */
+  def readSketch(spark: SparkSession, storeDir: String,
+      k: Int = QuantileSketch.DefaultK): (QSketch, String) =
+    decode(MergeableStore.read(spark, storeDir), k)
 
   /** The stored sketch as a [[QuantileSketch.sketchRows]]-shaped frame
     * (v, h, lstar, n) — what lets the maintained store SERVE derived
@@ -87,16 +89,21 @@ object QuantileMaintenance {
   /** Initial store build (empty `rows` yields the empty sketch). */
   def build(rows: DataFrame, storeDir: String,
       k: Int = QuantileSketch.DefaultK, stamp: String = "__init"): Unit =
-    writeStore(rows.sparkSession, sketchOf(rows, k), storeDir, stamp)
+    MergeableStore.publish(storeDir,
+      storeRows(rows.sparkSession, sketchOf(rows, k), stamp))
 
-  /** Fold one batch of (v, h) rows into the store — idempotent per
-    * batchId via the stamp guard. */
+  /** Fold one batch of (v, h) rows into the store (the empty sketch
+    * before the first publish) — idempotent per batchId via the stamp
+    * guard. */
   def mergeDelta(spark: SparkSession, storeDir: String, delta: DataFrame,
       batchId: String, k: Int = QuantileSketch.DefaultK): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
-    val (stored, stamp) = readSketch(spark, storeDir, k)
-    if (stamp != batchId)
-      writeStore(spark, stored.merge(sketchOf(delta, k)), storeDir, batchId)
+    MergeableStore.merge(spark, storeDir,
+        storeRows(spark, QSketch.empty(k), "__init")) { store =>
+      val (stored, stamp) = decode(store, k)
+      if (stamp == batchId) None
+      else Some(storeRows(spark, stored.merge(sketchOf(delta, k)), batchId))
+    }
   }
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`;
@@ -104,20 +111,12 @@ object QuantileMaintenance {
     * producing the sketched value and the unique hash key. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
       vExpr: String, keyExpr: String,
-      k: Int = QuantileSketch.DefaultK): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      k: Int = QuantileSketch.DefaultK): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+      (batch, id) =>
         val rows = batch.select(
           expr(vExpr).cast("long").as("v"),
           QuantileSketch.hash60(expr(keyExpr).cast("string")).as("h"))
         mergeDelta(batch.sparkSession, storeDir, rows, s"b$id", k)
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 }

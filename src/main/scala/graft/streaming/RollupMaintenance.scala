@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Fs
+import graft.ops.MergeableStore
 
 /** Incrementally-maintained rollup (streaming materialized view): the
   * hourly event rollup of [[EventsStream.hourlyRollup]] kept
@@ -13,16 +13,17 @@ import graft.ops.Fs
   *
   * Mechanics: a WATERMARKED streaming aggregation in update mode
   * emits, per micro-batch, only the (window, type) groups that
-  * changed; foreachBatch OVERWRITES exactly those windows' partitions
-  * of the store (directory-per-hour layout). Properties:
+  * changed; foreachBatch publishes exactly those groups' partitions
+  * as a new [[MergeableStore]] version (directory-per-(hour, type)
+  * layout; every other partition keeps its version). Properties:
   *
   *   - incremental: a batch touching 2 hours rewrites 2 small
   *     partitions, never the table;
   *   - late-data-correct within the watermark: a late event updates
-  *     its window's group, which re-emits and overwrites that
+  *     its window's group, which re-emits and replaces that
   *     partition with the corrected aggregate;
   *   - idempotent under retry: a replayed epoch re-emits the same
-  *     group rows and overwrites the same partitions — no
+  *     group rows and replaces the same partitions — no
   *     double-counting ([[CurationIngest]]'s batch-keyed variant of
   *     the same principle);
   *   - bounded state: watermark expiry drops closed windows from the
@@ -36,20 +37,16 @@ object RollupMaintenance {
   /** Partition column value for a window start (hour granularity). */
   private val hourCol = date_format(col("w.start"), "yyyy-MM-dd-HH")
 
-  /** One micro-batch of changed groups → overwrite their partitions.
-    * The store is partitioned by the FULL group key (hour,
-    * event_type): overwrite granularity must match group granularity,
-    * or a batch carrying only one changed type would wipe the hour's
-    * other types. */
+  /** The store is partitioned by the FULL group key (hour,
+    * event_type): replacement granularity must match group
+    * granularity, or a batch carrying only one changed type would wipe
+    * the hour's other types. */
+  private val Parts = Seq("hour", "event_type")
+
+  /** One micro-batch of changed groups → publish their partitions;
+    * partitions absent from the batch keep their version. */
   def upsertBatch(changed: DataFrame, storeDir: String): Unit =
-    changed.write
-      .mode(SaveMode.Overwrite)
-      // dynamic mode (per-write option, not session config): Overwrite
-      // replaces only partitions present in the batch — the
-      // incremental contract
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("hour", "event_type")
-      .parquet(storeDir)
+    MergeableStore.publish(storeDir, changed, Parts)
 
   /** The rollup aggregation in store shape — shared by the streaming
     * maintainer, the batch store builder, and the batch delta merge
@@ -63,58 +60,51 @@ object RollupMaintenance {
 
   /** Batch-build the store from an event frame (initial load). The
     * batch-maintained store carries a `last_batch` stamp column —
-    * the per-partition idempotency guard [[mergeDelta]] reads.
-    * `stamp` defaults to the init sentinel; a pipeline whose FIRST
-    * batch creates the store passes its own batch id instead, so a
-    * retry of that same batch is recognized by the stamp guard and
-    * does not double-merge ([[graft.streaming.CurationPipeline]]). */
+    * the per-partition idempotency guard [[mergeDelta]] reads. */
   def buildStore(events: DataFrame, storeDir: String,
       stamp: String = "__init"): Unit =
     upsertBatch(rollupShape(events)
       .withColumn("last_batch", lit(stamp)), storeDir)
 
   /** Batch twin of the streaming maintenance: fold a LATE/NEW events
-    * delta into the store without re-scanning the event log. Only the
-    * delta's exact (hour, type) groups are read back, merged, and
-    * overwritten (dynamic partition overwrite) — a partition the
-    * delta never mentions is neither read nor rewritten (spec-proven
-    * by file listing, including a touched-hour/other-type partition).
+    * delta into the store (the empty store before the first publish —
+    * so a pipeline's first batch is the bootstrap) without re-scanning
+    * the event log. Only the delta's exact (hour, type) groups are
+    * read back, merged, and republished — a partition the delta never
+    * mentions is neither read nor rewritten (spec-proven by file
+    * listing, including a touched-hour/other-type partition).
     *
     * IDEMPOTENT PER PARTITION under retry via the `batchId` stamp:
     * each written row records the batch that produced it, and the
     * merge KEEPS a base row whose stamp already equals this batchId
-    * instead of re-adding the delta. A retry after success is a
-    * no-op rewrite of identical rows; a retry after a MID-WRITE
-    * crash re-merges exactly the partitions that missed the first
-    * attempt and passes through the ones that got it — the
-    * read-modify-write trap (double-counting whatever the first
-    * attempt managed to write) cannot happen. Same principle as
+    * instead of re-adding the delta, so a retry after success is a
+    * no-op republish of identical rows. Same principle as
     * [[CurationIngest]]'s batch-keyed ledger.
     *
     * Merge math is exact: counts add as BIGINTs, totals re-enter
     * DECIMAL(12,2) before adding (the store's double is an exact
     * image of a 2-dp decimal at these magnitudes), so the result is
-    * bit-equal to a full recompute (spec-proven). The merged frame is
-    * localCheckpoint'ed before the write because it READS the same
-    * partitions it overwrites; it holds only the delta's affected
-    * groups — hours × types rows, aggregate-class, never
-    * event-class. */
+    * bit-equal to a full recompute (spec-proven). The merged frame
+    * holds only the delta's affected groups — hours × types rows,
+    * aggregate-class, never event-class. */
   def mergeDelta(spark: SparkSession, storeDir: String,
       delta: DataFrame, batchId: String): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
     // ONE materialization of the delta aggregation: both the
     // affected-group list and the merge read the persisted frame
     val d = rollupShape(delta).persist()
-    try {
+    val zero = MergeableStore.empty(spark, "n_events bigint, " +
+      "total_value double, last_batch string, hour string, event_type string")
+    try MergeableStore.merge(spark, storeDir, zero, Parts) { store =>
       val affected = d.select("hour", "event_type").distinct()
-      val base = Fs.readStore(spark, storeDir)
+      val base = store
         .join(affected, Seq("hour", "event_type"), "left_semi")
         .select(col("hour"), col("event_type"),
           col("n_events").as("b_n"), col("total_value").as("b_t"),
           col("last_batch"))
       // full outer: the delta can open brand-new (hour, type) groups
       val dec = lit(0).cast("decimal(12,2)")
-      val merged = base.join(
+      Some(base.join(
           d.select(col("hour"), col("event_type"),
             col("n_events").as("d_n"), col("total_value").as("d_t")),
           Seq("hour", "event_type"), "full_outer")
@@ -126,42 +116,23 @@ object RollupMaintenance {
             .otherwise((coalesce(col("b_t").cast("decimal(12,2)"), dec) +
               coalesce(col("d_t").cast("decimal(12,2)"), dec))
               .cast("double")).as("total_value"),
-          lit(batchId).as("last_batch"))
-        .localCheckpoint(true)
-      upsertBatch(merged, storeDir)
-      // deterministic release of the checkpoint blocks
-      // (Dataset.unpersist is a no-op for localCheckpoint data — same
-      // reach-through as PipelineOps.connectedComponents)
-      merged.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
+          lit(batchId).as("last_batch")))
     } finally d.unpersist()
   }
 
   /** Start maintaining `storeDir` from the parquet event stream at
     * `sourceDir`. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
-      watermark: String = "2 hours"): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    val rollup = rollupShape(spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .withWatermark("ts", watermark))
-    rollup.writeStream
-      .outputMode("update") // emit only changed groups per batch
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, storeDir)
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      watermark: String = "2 hours"): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint",
+        src => rollupShape(src.withWatermark("ts", watermark)),
+        outputMode = "update") { // emit only changed groups per batch
+      (batch, _) => upsertBatch(batch, storeDir)
+    }
 
   /** The store read back in [[EventsStream.hourlyRollup]]'s shape. */
   def read(spark: SparkSession, storeDir: String): DataFrame =
-    Fs.readStore(spark, storeDir)
+    MergeableStore.read(spark, storeDir)
       .select(concat(
           regexp_replace(col("hour"), "-(\\d\\d)$", " $1"), lit(":00:00"))
         .as("hour_start"),

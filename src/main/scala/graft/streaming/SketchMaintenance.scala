@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Fs
+import graft.ops.MergeableStore
 
 /** Incrementally-maintained Count-Min sketch: the streaming twin of
   * `q_countmin_heavy`. CMS is a LINEAR sketch — cell(corpus ∪ delta)
@@ -65,61 +65,49 @@ object SketchMaintenance {
   /** Initial store build (empty `df` yields the all-zero sketch). */
   def build(df: DataFrame, key: Column, storeDir: String,
       stamp: String = "__init"): Unit =
-    dense(df.sparkSession, sparseCells(df, key))
-      .withColumn("last_batch", lit(stamp))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
+    MergeableStore.publish(storeDir, dense(df.sparkSession, sparseCells(df, key))
+      .withColumn("last_batch", lit(stamp)).coalesce(1))
 
-  /** Fold one batch's cells into the store. `sign` = +1 appends,
-    * -1 retracts (cell-wise, by linearity). */
+  /** Fold one batch's cells into the store (the all-zero sketch before
+    * the first publish). `sign` = +1 appends, -1 retracts (cell-wise,
+    * by linearity). */
   def mergeDelta(spark: SparkSession, storeDir: String, delta: DataFrame,
       key: Column, batchId: String, sign: Int = 1): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
     require(sign == 1 || sign == -1, s"bad sign $sign")
-    val base = Fs.readStore(spark, storeDir)
-    val d = sparseCells(delta, key)
-      .select(col("i"), col("b"), col("c").as("dc"))
-    // dense store ⟕ sparse delta: ≤ d·w rows each side, broadcast
-    val merged = base.join(broadcast(d), Seq("i", "b"), "left")
-      .select(col("i"), col("b"),
-        when(col("last_batch") === batchId, col("c"))
-          .otherwise(col("c") +
-            lit(sign.toLong) * coalesce(col("dc"), lit(0L))).as("c"),
-        lit(batchId).as("last_batch"))
-      // reads the file it overwrites — detach before the write
-      .localCheckpoint(true)
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(storeDir)
-    merged.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
+    val zero = spine(spark)
+      .select(col("i"), col("b"), lit(0L).as("c"), lit("__init").as("last_batch"))
+    MergeableStore.merge(spark, storeDir, zero) { base =>
+      val d = sparseCells(delta, key)
+        .select(col("i"), col("b"), col("c").as("dc"))
+      // dense store ⟕ sparse delta: ≤ d·w rows each side, broadcast
+      Some(base.join(broadcast(d), Seq("i", "b"), "left")
+        .select(col("i"), col("b"),
+          when(col("last_batch") === batchId, col("c"))
+            .otherwise(col("c") +
+              lit(sign.toLong) * coalesce(col("dc"), lit(0L))).as("c"),
+          lit(batchId).as("last_batch"))
+        .coalesce(1))
     }
   }
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`. */
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
-      keyName: String): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeDelta(batch.sparkSession, storeDir, batch, col(keyName), s"b$id")
-      }
-      .option("checkpointLocation", s"$storeDir-__checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      keyName: String): StreamingQuery =
+    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+      (batch, id) => mergeDelta(batch.sparkSession, storeDir, batch,
+        col(keyName), s"b$id")
+    }
 
   def read(spark: SparkSession, storeDir: String): DataFrame =
-    Fs.readStore(spark, storeDir).select("i", "b", "c", "last_batch")
+    MergeableStore.read(spark, storeDir).select("i", "b", "c", "last_batch")
 
   /** Estimated count per probe key: min over the key's d cells —
     * probe keys fan out to d coordinate rows and join the 1024-row
     * store (broadcast); estimates never undershoot the true count. */
   def probe(spark: SparkSession, storeDir: String, keys: DataFrame,
       key: Column): DataFrame = {
-    val cells = Fs.readStore(spark, storeDir).select("i", "b", "c")
+    val cells = MergeableStore.read(spark, storeDir).select("i", "b", "c")
     keys.select(key.as("key"), explode(coords(key)).as("ib"))
       .select(col("key"), col("ib.i").as("i"), col("ib.b").as("b"))
       .join(broadcast(cells), Seq("i", "b"))

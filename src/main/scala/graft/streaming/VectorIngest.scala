@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.{Fs, VectorIndex}
 
@@ -103,22 +103,13 @@ object VectorIngest {
     * the float→double widening matches the batch index pipeline, so
     * the streamed layout is bit-comparable to a one-shot build. */
   def start(spark: SparkSession, sourceDir: String, indexDir: String,
-      ledgerDir: String, centroidsDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      ledgerDir: String, centroidsDir: String): StreamingQuery =
+    graft.ops.MergeableStore.stream(spark, sourceDir, s"$indexDir-__checkpoint") {
+      (batch, batchId) =>
         processBatch(
           batch.select(col("vec_id"),
             graft.ext.VectorFunctions.asDouble(col("embedding")).as("v")),
           indexDir, ledgerDir, centroidsDir, batchId)
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$indexDir-__checkpoint")
-      .start()
-  }
+    }
 }

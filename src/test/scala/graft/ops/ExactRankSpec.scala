@@ -188,6 +188,12 @@ class ExactRankSpec extends SparkSpec {
       .repartition(7, col("k0"))
       .select((col("k0") * 2 + 1).as("k"), col("one"))
     assert(ExactRank.expensiveChild(child), "gate must fire for this child")
+    // suites share one JVM-wide session, and earlier suites may leave
+    // owned holds (BuildOnce swap slots, train-once memos) registered:
+    // charge only what this call adds
+    def entries = org.apache.spark.sql.graft.CacheProbe.entries(spark)
+    val entriesBefore = entries
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val got = ExactRank
       .prefixSum(child, Seq(col("k"), col("one")), Seq("cum" -> col("one")))
       .groupBy("k").agg(max("cum").as("cum"))
@@ -199,7 +205,8 @@ class ExactRankSpec extends SparkSpec {
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq === want.toSeq)
     // the persist is scoped to job 1: nothing may stay registered
-    assert(spark.sharedState.cacheManager.isEmpty,
+    assert(entries === entriesBefore &&
+      spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
       "ExactRank must unpersist its gated child cache")
   }
 

@@ -116,7 +116,8 @@ class StoreSchemaEvolutionSpec extends SparkSpec {
     spark.range(1).select(lit(0).as("i"), lit(999L).as("b"),
       lit(0L).as("c"), lit("future").as("last_batch"),
       lit("tag").as("writer_tag"))
-      .coalesce(1).write.mode("append").parquet(store)
+      .coalesce(1).write.mode("append")
+      .parquet(MergeableStore.liveDir(store))
     val after = graft.streaming.SketchMaintenance
       .probe(spark, store, keys, col("grp")).orderBy("key").collect()
     assert(after.toSeq === before.toSeq,

@@ -66,14 +66,15 @@ class CdcMaintenanceSpec extends SparkSpec {
     val store = s"${Files.createTempDirectory("cdc_bucket")}/store"
     CdcMaintenance.buildStore(baseDf, keys, store, B)
     def files(b: Int) =
-      new java.io.File(s"$store/bucket=$b").listFiles()
+      new java.io.File(graft.ops.MergeableStore.partitionDir(store, s"bucket=$b").get)
+        .listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getName, f.lastModified())).toSet
     val single = Seq((2L, "u2", "U", 1L)).toDF("k", "payload", "op", "seq")
     val touched = single.select(
       pmod(hash(col("k")), lit(B)).cast("int")).head().getInt(0)
     val untouched = (0 until B).filter(_ != touched)
-      .filter(b => new java.io.File(s"$store/bucket=$b").exists())
+      .filter(b => graft.ops.MergeableStore.partitionDir(store, s"bucket=$b").isDefined)
     require(untouched.nonEmpty, "fixture must span several buckets")
     val before = untouched.map(b => b -> files(b)).toMap
     CdcMaintenance.mergeBatch(spark, store, single, keys, B)

@@ -46,8 +46,9 @@ class CurationPipelineSpec extends SparkSpec {
       .select(concat(lit("s"), (col("doc_id") % 2).cast("string")).as("source"))
     val refDir = Files.createTempDirectory("cms_ref").toString
     SketchMaintenance.build(expectFrame, col("source"), refDir)
-    val streamed = spark.read.parquet(dirs.sketch).select("i", "b", "c")
-    val ref = spark.read.parquet(refDir)
+    val streamed = spark.read.parquet(graft.ops.MergeableStore.liveDir(dirs.sketch))
+      .select("i", "b", "c")
+    val ref = spark.read.parquet(graft.ops.MergeableStore.liveDir(refDir))
       .select(col("i"), col("b"), col("c").as("c_ref"))
     assert(streamed.count() === 1024L)
     val mismatches = streamed.join(ref, Seq("i", "b"), "full")

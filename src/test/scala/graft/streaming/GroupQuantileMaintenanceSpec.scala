@@ -61,7 +61,8 @@ class GroupQuantileMaintenanceSpec extends SparkSpec {
     GroupQuantileMaintenance.mergeDelta(spark, storeB, delta, "b1", K,
       maxDriverGroups = 0L)
 
-    def rows(dir: String) = graft.ops.Fs.readStore(spark, dir)
+    def rows(dir: String) =
+      graft.ops.Fs.readStore(spark, graft.ops.MergeableStore.liveDir(dir))
       .select("g", "h", "v", "total", "last_batch")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getString(4))).sorted.toSeq

@@ -84,13 +84,14 @@ class RollupMaintenanceSpec extends SparkSpec {
 
     RollupMaintenance.buildStore(part1, store)
     def files(p: String) =
-      new java.io.File(p).listFiles().filter(_.getName.endsWith(".parquet"))
+      new java.io.File(graft.ops.MergeableStore.partitionDir(store, p).get)
+        .listFiles().filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getName, f.lastModified())).toSet
     // untouched in BOTH senses: a different hour, and the delta's own
     // hour but a type the delta does not carry — neither may be read
     // back and rewritten
-    val otherHour = files(s"$store/hour=2024-01-01-11/event_type=view")
-    val otherType = files(s"$store/hour=2024-01-01-10/event_type=view")
+    val otherHour = files("hour=2024-01-01-11/event_type=view")
+    val otherType = files("hour=2024-01-01-10/event_type=view")
 
     RollupMaintenance.mergeDelta(spark, store, part2, batchId = "b1")
 
@@ -101,8 +102,8 @@ class RollupMaintenanceSpec extends SparkSpec {
     val want = EventsStream.hourlyRollup(part1.unionByName(part2))
       .as[(String, String, Long, Double)].collect().toSet
     assert(state() === want)
-    assert(files(s"$store/hour=2024-01-01-11/event_type=view") === otherHour)
-    assert(files(s"$store/hour=2024-01-01-10/event_type=view") === otherType)
+    assert(files("hour=2024-01-01-11/event_type=view") === otherHour)
+    assert(files("hour=2024-01-01-10/event_type=view") === otherType)
 
     // retried batch (same batchId): the per-partition stamp keeps the
     // already-merged rows — no double counting, store unchanged
