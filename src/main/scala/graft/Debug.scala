@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only: run one named query and print result/plan/exception.
   *
   * `--time` switches to the Bench session shape (local[N], AQE on)
-  * and prints per-run wall times instead of rows — for profiling a
-  * single query without a full bench pass.
+  * and prints per-run wall times instead of rows, then the build-once
+  * artifact catalog's per-kind builds, hits and build ms — for
+  * profiling a single query without a full bench pass.
   */
 object Debug {
   def main(args: Array[String]): Unit = {
@@ -86,6 +87,12 @@ object Debug {
           val rows = SparkEntry.queries(name)(spark, sfDir).count()
           println(f"run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($rows rows)")
           spark.catalog.clearCache()
+        }
+        // the build-once artifact catalog's per-kind profile: a kind
+        // with builds after the warm run is rebuilding per call
+        graft.ops.BuildOnce.stats.foreach { k =>
+          println(f"artifact ${k.kind}%-18s builds=${k.builds}%d " +
+            f"hits=${k.hits}%d build_ms=${k.buildMs}%d")
         }
       } else {
         val df = SparkEntry.queries(name)(spark, sfDir)

@@ -26,54 +26,31 @@ trait QueryModule {
   * Plain `spark.read.parquet` — Catalyst pushes filters/projections
   * into the scan, so no extra plumbing is needed here.
   *
-  * The RESOLVED relation is memoized per (session, table file state):
-  * `spark.read.parquet` runs a footer/schema-inference job and builds
-  * a FileIndex on every call, and a bench/serving process re-resolves
-  * the same immutable table file for every query × run (measured:
-  * q_nation_revenue paid six sequential ~60 ms resolution jobs per
-  * run — ~0.4 s of its 1.1 s — before any data moved; the same tax on
-  * all 45 bench entries). This is the manifest-cache read shape the
-  * zone-map catalog snapshot already uses (guide §6: cache the
-  * listing, never results): the memo holds ONLY plan metadata — every
-  * execution still scans the parquet data — and is keyed on the
-  * file's exact (length, mtime) signature, so any rewrite forces a
-  * re-resolution. Bounded + clearable via BuildOnce (invariance specs
-  * reset it like every other memo).
+  * The RESOLVED relation is a [[graft.ops.BuildOnce]] value keyed on
+  * the session and the table file's signature: `spark.read.parquet`
+  * runs a footer/schema-inference job and builds a FileIndex on every
+  * call, which a bench/serving process would repay for every query ×
+  * run (measured: q_nation_revenue paid six sequential ~60 ms
+  * resolution jobs per run — ~0.4 s of its 1.1 s — before any data
+  * moved). Only plan metadata is kept — every execution still scans
+  * the parquet data. A rewritten file re-resolves; the bound and
+  * clearing are the catalog's, as for every other artifact.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val relMemo =
-    graft.ops.BuildOnce.memo[(Int, String), (Long, Long, DataFrame)]()
+  private def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** The files (or dirs) of the named tables in dataset dir `dir` —
+    * the sources an artifact built from those tables keys on. */
+  def paths(dir: String, names: String*): Seq[String] = names.map(path(dir, _))
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    // driver-side file signature (one getFileStatus, no Spark job):
-    // the validity key — a missing file delegates straight to the
-    // resolver so its error surfaces unchanged
-    val sig =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p)
-        Some((st.getLen, st.getModificationTime))
-      } catch { case _: java.io.IOException => None }
-    sig match {
-      case None => resolve(spark, path, name)
-      case Some((len, mtime)) =>
-        val key = (System.identityHashCode(spark), path)
-        relMemo.get(key) match {
-          case Some((l, m, df)) if l == len && m == mtime => df
-          case _ =>
-            val df = resolve(spark, path, name)
-            if (relMemo.size >= graft.ops.BuildOnce.MemoMaxEntries)
-              relMemo.clear()
-            relMemo.put(key, (len, mtime, df))
-            df
-        }
-    }
+    val p = path(dir, name)
+    graft.ops.BuildOnce.value("table", spark, Seq(p), spark)(
+      resolve(spark, p, name))
   }
 
   private def resolve(spark: SparkSession, path: String,

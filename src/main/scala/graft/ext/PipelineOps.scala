@@ -1230,14 +1230,6 @@ object PipelineQueries extends QueryModule {
   private val lastFunnelFlags =
     graft.ops.BuildOnce.swapRef()
 
-  /** Build-once memo for the incrementally-built join view (one per
-    * dataset dir). Orders split by KEY parity, lineitems by
-    * LINENUMBER parity — orthogonal splits, so batch 1 exercises
-    * dA x dB (even orders meet their odd-numbered lines) and batch 2
-    * exercises all three delta terms (dA x B_old, A_old x dB,
-    * dA x dB all non-empty). */
-  private val joinViewMemo = graft.ops.BuildOnce.memo[String, String]()
-
   /** The canonical from-scratch orders><lineitem join — ONE definition
     * shared by q_join_view's oracle shape, q_joinview_served's
     * registered view, and the served query itself (exact-shape
@@ -1253,10 +1245,14 @@ object PipelineQueries extends QueryModule {
         col("o_orderstatus"), col("l_quantity"), col("l_extendedprice"))
   }
 
+  /** The build-once incrementally-built join view. Orders split by
+    * KEY parity, lineitems by LINENUMBER parity — orthogonal splits,
+    * so batch 1 exercises dA x dB (even orders meet their
+    * odd-numbered lines) and batch 2 exercises all three delta terms
+    * (dA x B_old, A_old x dB, dA x dB all non-empty). */
   private[graft] def joinViewFor(spark: SparkSession, dir: String): String =
-    graft.ops.BuildOnce.cached(joinViewMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_join_view").toString
+    graft.ops.BuildOnce.dir("join_view", spark,
+        Tables.paths(dir, "orders", "lineitem")) { base =>
       val orders = Tables(spark, dir, "orders")
       val line = Tables(spark, dir, "lineitem")
         .withColumnRenamed("l_orderkey", "o_orderkey")
@@ -1266,7 +1262,6 @@ object PipelineQueries extends QueryModule {
       graft.ops.JoinView.applyDelta(spark, base, "o_orderkey",
         orders.filter(col("o_orderkey") % 2 === 1),
         line.filter(col("l_linenumber") % 2 === 0), "b2")
-      base
     }
 
   private def listSqlPub(ws: Seq[String]): String =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, QueryModule}
+import graft.{QueryDef, QueryModule, Tables}
 
 /** Hybrid retrieval — the fusion layer of a modern RAG / search stack:
   * a LEXICAL ranking (exact-rational BM25, shared expression tree with
@@ -55,28 +55,18 @@ object RetrievalQueries extends QueryModule {
   private def cosSqlOf(a: String, b: String): String =
     SimilarityQueries.cosSqlOf(a, b)
 
-  /** Build-once memo for the plain-IVF `VectorIndex` layout the
-    * indexed hybrid's semantic leg probes (same bounded-memo policy
-    * as the ANN index memos; trained with the SHARED `q_ann_ivf`
-    * centroids, so one training serves every consumer). Holds the
-    * OPENED DataFrame so repeat probes reuse the resolved FileIndex
-    * (the same serving-handle discipline as the IVF-PQ / inverted
-    * index memos). */
-  private val vecIdxMemo = graft.ops.BuildOnce.memo[String, DataFrame]()
-
-  private def vecIndexFor(spark: SparkSession, dir: String): DataFrame = {
-    vecIdxMemo.get(dir).foreach { ix =>
-      if (!(ix.sparkSession eq spark)) vecIdxMemo.remove(dir)
-    }
-    graft.ops.BuildOnce.cached(vecIdxMemo, dir) {
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_hybrid_vec_index").toString
-      graft.ops.VectorIndex.build(
-        SimilarityQueries.embCorpus(spark, dir),
-        SimilarityQueries.ivfCentroids(spark, dir), idx)
-      spark.read.parquet(idx)
-    }
-  }
+  /** The build-once plain-IVF `VectorIndex` layout the indexed
+    * hybrid's semantic leg probes, trained with the SHARED `q_ann_ivf`
+    * centroids (one training serves every consumer) and opened once
+    * per session, so repeat probes reuse the resolved FileIndex. */
+  private def vecIndexFor(spark: SparkSession, dir: String): DataFrame =
+    graft.ops.Fs.resolvedParquet(spark,
+      graft.ops.BuildOnce.dir("hybrid_vec_index", spark,
+          Tables.paths(dir, "embeddings")) { idx =>
+        graft.ops.VectorIndex.build(
+          SimilarityQueries.embCorpus(spark, dir),
+          SimilarityQueries.ivfCentroids(spark, dir), idx)
+      })
 
   override def defs: Seq[(String, QueryDef)] = Seq(
 

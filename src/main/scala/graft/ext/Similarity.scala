@@ -394,25 +394,21 @@ object Similarity {
 object SimilarityQueries extends QueryModule {
   import VectorFunctions._
 
-  /** Train-once memo: Lloyd centroid/codebook training is
-    * DETERMINISTIC in (dataset dir, params) — the training output is
-    * the in-memory twin of what [[graft.ops.VectorIndex.build]]
+  /** Train once: Lloyd centroid/codebook training is DETERMINISTIC
+    * in (embeddings table, params) — the training output is the
+    * in-memory twin of what [[graft.ops.VectorIndex.build]]
     * materializes on disk. Queries reuse the trained index instead of
     * re-running Lloyd per invocation (no served ANN system retrains
-    * per query). The FIRST use trains for real, the memo holds only
-    * nlist×d / m×16×subDim doubles (the bounded driver-data class),
-    * and the DuckDB oracle independently replays the identical
-    * training chain — correctness is untouched, only repeat-call
-    * latency changes. */
-  private val centMemo =
-    graft.ops.BuildOnce.memo[(String, Int), Seq[(Long, Seq[Double])]]()
-  private val bookMemo = graft.ops.BuildOnce
-    .memo[(String, Int, Int, Int), Seq[(Int, Long, Seq[Double])]]()
-
+    * per query). The FIRST use trains for real, the catalog holds
+    * only nlist×d / m×16×subDim doubles (the bounded driver-data
+    * class), and the DuckDB oracle independently replays the
+    * identical training chain — correctness is untouched, only
+    * repeat-call latency changes. */
   private def centroidsFor(spark: SparkSession, dir: String,
       iters: Int): DataFrame = {
     import spark.implicits._
-    graft.ops.BuildOnce.cached(centMemo, (dir, iters))(
+    graft.ops.BuildOnce.value("centroids", spark,
+      Tables.paths(dir, "embeddings"), iters)(
       Similarity.trainedCentroidSeq(embFrame(spark, dir), iters))
       .toDF("c_id", "c_v")
   }
@@ -429,14 +425,12 @@ object SimilarityQueries extends QueryModule {
   private[ext] def embCorpus(spark: SparkSession, dir: String): DataFrame =
     embFrame(spark, dir)
 
-  private val countMemo = graft.ops.BuildOnce.memo[String, Long]()
-
-  /** Memoized corpus row count — the regime gate for [[pairJoin]]
+  /** Build-once corpus row count — the regime gate for [[pairJoin]]
     * (the pageRank broadcast-vs-copartition idea applied to the pair
-    * generators). One cheap count job per dataset dir, ever. */
+    * generators). One cheap count job per embeddings table state. */
   private def corpusRows(spark: SparkSession, dir: String): Long =
-    graft.ops.BuildOnce.cached(countMemo, dir)(
-      embFrame(spark, dir).count())
+    graft.ops.BuildOnce.value("corpus_rows", spark,
+      Tables.paths(dir, "embeddings"))(embFrame(spark, dir).count())
 
   /** Corpora at or below this row count ride the broadcast pair
     * regime (~0.5 GB of 64-dim doubles — inside executor memory with
@@ -488,7 +482,8 @@ object SimilarityQueries extends QueryModule {
 
   private def codebooksFor(spark: SparkSession, dir: String, m: Int,
       subDim: Int, iters: Int): Seq[(Int, Long, Seq[Double])] =
-    graft.ops.BuildOnce.cached(bookMemo, (dir, m, subDim, iters))(
+    graft.ops.BuildOnce.value("codebooks", spark,
+      Tables.paths(dir, "embeddings"), m, subDim, iters)(
       Similarity.pqCodebooks(embFrame(spark, dir), m, subDim, iters))
 
   /** The previous invocation's persisted PQ-code index — released when
@@ -530,14 +525,6 @@ object SimilarityQueries extends QueryModule {
     * restriction, border attachment all read it) — same bounding. */
   private val lastDbscanEdges =
     graft.ops.BuildOnce.swapRef()
-
-  /** Test hook: drop EVERY build-once memo (training, index layouts,
-    * the star warehouse) so a spec can force the artifacts to be
-    * REBUILT under a changed runtime config (partition counts etc.).
-    * Without this, invariance tests would silently compare one build
-    * against itself. Delegates to the shared registry so memos added
-    * in other modules are covered automatically. */
-  def clearTrainingMemo(): Unit = graft.ops.BuildOnce.clearAll()
 
   /** The fixed demo query set: corpus vectors with id < 20, as
     * (q_id, q_v). */
@@ -854,7 +841,7 @@ object SimilarityQueries extends QueryModule {
   /** An OPENED served IVF-PQ index: the on-disk path plus everything a
     * probe session holds resident — the two training sketches READ BACK
     * from the layout (bounded: nlist + m×16 rows; parquet round-trips
-    * doubles bit-exactly, so they equal the training memo's values) and
+    * doubles bit-exactly, so they equal the trained values) and
     * the two hive-layout DataFrames, opened ONCE so their resolved
     * FileIndex (directory listing + schema) is reused across probes.
     * Re-listing per probe was q_ann_ivfpq_indexed's measured overhead:
@@ -868,30 +855,16 @@ object SimilarityQueries extends QueryModule {
       codes: DataFrame,
       vectors: DataFrame)
 
-  /** Build-once memo for the MATERIALIZED IVF-PQ index ("build once on
-    * disk, probe many"): first use per (dataset dir, m, subDim) trains
-    * (via the bounded training memos), encodes, writes the
-    * [[graft.ops.VectorIndex.buildPq]] layout, and opens it; repeat
-    * uses return the opened handle. Bounded like the training memos —
-    * on overflow the map clears and a later use rebuilds (the orphaned
-    * temp dirs are harness-lifetime only; a production deployment pins
-    * ONE index dir per corpus). */
-  private val pqIndexMemo =
-    graft.ops.BuildOnce.memo[(String, Int, Int), ServedPqIndex]()
-
+  /** The MATERIALIZED IVF-PQ index ("build once on disk, probe
+    * many"): first use per (embeddings table, m, subDim) trains (via
+    * the build-once training), encodes and writes the
+    * [[graft.ops.VectorIndex.buildPq]] layout; the opened handle is a
+    * per-session build-once value over it. */
   private def pqIndexFor(spark: SparkSession, dir: String, m: Int,
       subDim: Int): ServedPqIndex = {
-    val key = (dir, m, subDim)
-    // an opened handle is session-bound (its DataFrames belong to the
-    // session that resolved them) — a handle from a stopped/previous
-    // session must be dropped, not served
-    pqIndexMemo.get(key).foreach { ix =>
-      if (!(ix.codes.sparkSession eq spark)) pqIndexMemo.remove(key)
-    }
-    graft.ops.BuildOnce.cached(pqIndexMemo, key) {
-      import spark.implicits._
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_index").toString
+    import spark.implicits._
+    val idx = graft.ops.BuildOnce.dir("ivfpq_index", spark,
+        Tables.paths(dir, "embeddings"), m, subDim) { idx =>
       val emb = embFrame(spark, dir)
       val centroids = centroidsFor(spark, dir, iters = 2)
       val books = codebooksFor(spark, dir, m, subDim, iters = 1)
@@ -904,6 +877,8 @@ object SimilarityQueries extends QueryModule {
         centroids = centroids,
         codebooks = books.toDF("s", "c_id", "c_v"),
         dir = idx)
+    }
+    graft.ops.BuildOnce.value("ivfpq_open", spark, Nil, spark, idx)(
       ServedPqIndex(
         path = idx,
         centroids = spark.read.parquet(s"$idx/centroids")
@@ -913,8 +888,7 @@ object SimilarityQueries extends QueryModule {
           .select("s", "c_id", "c_v").as[(Int, Long, Seq[Double])]
           .collect().toSeq.sortBy(t => (t._1, t._2)),
         codes = spark.read.parquet(s"$idx/codes"),
-        vectors = spark.read.parquet(s"$idx/vectors"))
-    }
+        vectors = spark.read.parquet(s"$idx/vectors")))
   }
 
   /** IVF-PQ top-k served from the MATERIALIZED on-disk index — the

@@ -1634,28 +1634,18 @@ object TextQueries extends QueryModule {
       |        + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1))
       |        * 2654435761 % 1000003 - 501501)), 0)""".stripMargin
 
-  /** Build-once memo for the materialized inverted index (one per
-    * dataset dir) — bounded like the ANN training memos. Orphaned temp
-    * dirs on overflow are harness-lifetime only; production pins ONE
-    * index dir per corpus. The memo holds the OPENED handle
+  /** The build-once materialized inverted index over the documents
+    * table, served as a per-session OPENED handle
     * ([[graft.ops.InvertedIndex.Opened]]) so repeat probes reuse the
     * resolved hive-tree FileIndex instead of re-listing it per run. */
-  private val invIndexMemo =
-    graft.ops.BuildOnce.memo[String, graft.ops.InvertedIndex.Opened]()
-
   private[ext] def invIndexFor(spark: SparkSession,
       dir: String): graft.ops.InvertedIndex.Opened = {
-    // a handle from a previous/stopped session must be reopened, not
-    // served (its DataFrames are bound to the resolving session)
-    invIndexMemo.get(dir).foreach { ix =>
-      if (!(ix.postings.sparkSession eq spark)) invIndexMemo.remove(dir)
-    }
-    graft.ops.BuildOnce.cached(invIndexMemo, dir) {
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_inv_index").toString
+    val idx = graft.ops.BuildOnce.dir("inv_index", spark,
+        Tables.paths(dir, "documents")) { idx =>
       graft.ops.InvertedIndex.build(Tables(spark, dir, "documents"), idx)
-      graft.ops.InvertedIndex.open(spark, idx)
     }
+    graft.ops.BuildOnce.value("inv_open", spark, Nil, spark, idx)(
+      graft.ops.InvertedIndex.open(spark, idx))
   }
 
   /** DuckDB replay of the exact-rational BM25 — shared verbatim by

@@ -1,49 +1,138 @@
 package graft.ops
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.concurrent.TrieMap
 
-/** Build-once memo registry for deterministic derived artifacts —
-  * trained centroids/codebooks, materialized index layouts, the
-  * written star warehouse. One query session builds each artifact the
-  * first time it's needed and probes it thereafter (the served-index
-  * semantics every "build once on disk, probe many" path models).
+import org.apache.spark.sql.SparkSession
+
+/** The build-once ARTIFACT CATALOG: every deterministic derived
+  * artifact — a materialized layout, index or store dir, a trained
+  * centroid/codebook sketch, a resolved relation — is built the first
+  * time a query needs it and served thereafter (the "build once,
+  * probe many" semantics of a serving process). One rule each for:
   *
-  * Every memo is created through [[memo]] so that:
-  *   - it is BOUNDED: on reaching [[MemoMaxEntries]] the whole map is
-  *     dropped — entries are deterministic and cheap to rebuild, so
-  *     clear-on-overflow is as correct as LRU and simpler. A
-  *     long-lived session iterating over many dataset dirs cannot
-  *     grow the driver.
-  *   - it is CLEARABLE: [[clearAll]] resets every registered memo in
-  *     one call. Invariance tests MUST clear between runs — otherwise
-  *     the second run reuses the first run's artifact and the test
-  *     silently compares one build against itself
-  *     (PartitionInvarianceSpec does; new memos get the hook for free
-  *     by being created here instead of hand-rolling a TrieMap).
+  *   - KEY: (kind, params, [[Fs.signature]] of every source path).
+  *     Rewriting a source in place changes its signature, so the next
+  *     lookup rebuilds rather than serving the stale artifact. A value
+  *     that holds DataFrames names its SparkSession among the params:
+  *     a resolved relation belongs to the session that resolved it.
+  *   - BOUND: at most [[MemoMaxEntries]] entries per kind. A build
+  *     that would exceed it drops the whole kind first — entries are
+  *     deterministic and cheap to rebuild, so clear-on-overflow is as
+  *     correct as LRU and simpler.
+  *   - OWNERSHIP: a [[dir]] artifact lives in a temp dir the catalog
+  *     creates and deletes whenever it drops the entry — on overflow,
+  *     on a changed source signature and on [[clearAll]]. Callers never
+  *     create, name or delete an artifact dir, and an artifact dir is
+  *     never written again once its build returns.
+  *
+  * Each kind counts builds, hits and build time ([[stats]]).
+  * Invariance tests MUST [[clearAll]] between runs — otherwise the
+  * second run reuses the first run's artifact and the test silently
+  * compares one build against itself.
   */
 object BuildOnce {
 
-  /** Hard cap on entries per memo. Each entry is a bounded
-    * sketch-class value (nlist×d doubles, an index dir path, ...). */
+  /** Hard cap on entries per kind. */
   val MemoMaxEntries = 32
+
+  private final case class Entry(sig: Seq[Seq[(String, Long, Long)]],
+      value: Any, dir: Option[String])
+
+  /** Builds, hits and total build wall time of one artifact kind. */
+  final case class KindStats(kind: String, builds: Long, hits: Long,
+      buildMs: Long)
+
+  private final class Counters {
+    val builds, hits, buildNanos = new AtomicLong
+  }
+
+  private val catalog =
+    TrieMap.empty[String, TrieMap[(Seq[Any], Seq[String]), Entry]]
+  private val counters = TrieMap.empty[String, Counters]
+
+  /** The artifact value of `kind` for `sources` and `params`: built by
+    * `build` on a miss, served on a hit. */
+  def value[V](kind: String, spark: SparkSession, sources: Seq[String],
+      params: Any*)(build: => V): V =
+    lookup(kind, spark, sources, params)(() => (build, None))
+      .asInstanceOf[V]
+
+  /** The artifact dir of `kind` for `sources` and `params`: on a miss a
+    * fresh catalog-owned temp dir is passed to `build`, which fills
+    * it; a build that throws leaves no dir behind. */
+  def dir(kind: String, spark: SparkSession, sources: Seq[String],
+      params: Any*)(build: String => Unit): String =
+    lookup(kind, spark, sources, params) { () =>
+      val d = java.nio.file.Files.createTempDirectory(s"graft_$kind")
+        .toString
+      try build(d)
+      catch { case e: Throwable => delete(d); throw e }
+      (d, Some(d))
+    }.asInstanceOf[String]
+
+  private def lookup(kind: String, spark: SparkSession,
+      sources: Seq[String], params: Seq[Any])(
+      build: () => (Any, Option[String])): Any = {
+    // the signature is taken BEFORE the build: a source that changes
+    // mid-build is rebuilt on the next lookup, never served stale
+    val sig = sources.map(Fs.signature(spark, _))
+    val slot = (params.toList, sources.toList)
+    val entries = catalog.getOrElseUpdate(kind, TrieMap.empty)
+    val c = counters.getOrElseUpdate(kind, new Counters)
+    entries.get(slot) match {
+      case Some(e) if e.sig == sig =>
+        c.hits.incrementAndGet()
+        e.value
+      case _ =>
+        val t0 = System.nanoTime()
+        val (v, d) = build()
+        c.buildNanos.addAndGet(System.nanoTime() - t0)
+        c.builds.incrementAndGet()
+        synchronized {
+          entries.get(slot) match {
+            // a concurrent lookup published the same artifact first
+            case Some(e) if e.sig == sig => d.foreach(delete); e.value
+            case stale =>
+              stale.foreach(release)
+              if (entries.size >= MemoMaxEntries) drop(entries)
+              entries.put(slot, Entry(sig, v, d))
+              v
+          }
+        }
+    }
+  }
+
+  private def delete(d: String): Unit = Fs.deleteRecursively(new java.io.File(d))
+
+  private def release(e: Entry): Unit = e.dir.foreach(delete)
+
+  private def drop(entries: TrieMap[_, Entry]): Unit = {
+    entries.values.foreach(release)
+    entries.clear()
+  }
+
+  /** Dirs the catalog currently owns. */
+  private[graft] def ownedDirs: Seq[String] =
+    catalog.values.flatMap(_.values.flatMap(_.dir)).toSeq
+
+  /** Per-kind build/hit counters since process start, by kind. */
+  def stats: Seq[KindStats] =
+    counters.toSeq.sortBy(_._1).map { case (k, c) =>
+      KindStats(k, c.builds.get, c.hits.get, c.buildNanos.get / 1000000L)
+    }
 
   private val registry = new java.util.concurrent.CopyOnWriteArrayList[TrieMap[_, _]]
 
-  /** Create a bounded, registered memo. */
+  /** A bounded, registered map for the optimizer-rule registries
+    * (served views, zone-mapped tables): registrations, not builds —
+    * they own no dir and key on no source. Cleared by [[clearAll]]. */
   def memo[K, V](): TrieMap[K, V] = {
     val m = TrieMap.empty[K, V]
     registry.add(m)
     m
   }
-
-  /** First call builds, repeat calls reuse; clear-on-overflow bound. */
-  def cached[K, V](memo: TrieMap[K, V], k: K)(build: => V): V =
-    memo.get(k) match {
-      case Some(v) => v
-      case None =>
-        if (memo.size >= MemoMaxEntries) memo.clear()
-        memo.getOrElseUpdate(k, build)
-    }
 
   private val clearHooks =
     new java.util.concurrent.CopyOnWriteArrayList[() => Unit]
@@ -53,9 +142,11 @@ object BuildOnce {
     * trained-stream cache, which must unpersist its frames). */
   def registerClearHook(f: () => Unit): Unit = clearHooks.add(f)
 
-  /** Reset every registered memo (test hook — forces the next query
-    * to rebuild its artifact under the current session config). */
+  /** Drop every catalog entry (deleting every dir it owns), every
+    * registry and every hooked cache — the test hook that forces the
+    * next query to rebuild its artifacts under the current config. */
   def clearAll(): Unit = {
+    synchronized(catalog.values.foreach(drop))
     val it = registry.iterator()
     while (it.hasNext) it.next().clear()
     val hooks = clearHooks.iterator()

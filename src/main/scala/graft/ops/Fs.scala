@@ -46,24 +46,47 @@ object Fs {
     spark.read.option("mergeSchema", "true").option("basePath", basePath)
       .parquet(dirs: _*)
 
-  private val artifactMemo = BuildOnce.memo[(Int, String), DataFrame]()
+  /** THE source-state signature the [[BuildOnce]] catalog keys on: a
+    * file's (path, length, mtime); for a dir, that triple for each
+    * committed parquet file below it (the [[hasCommittedParquet]]
+    * rule), sorted; Nil for a missing path. A driver-side listing — no
+    * Spark job — so any rewrite, append or delete changes it. */
+  def signature(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st =
+      try fs.getFileStatus(p)
+      catch { case _: java.io.FileNotFoundException => return Nil }
+    if (!st.isDirectory)
+      return Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    val it = fs.listFiles(p, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      val rel = f.getPath.toString.stripPrefix(st.getPath.toString)
+      if (rel.split('/').forall(n => !n.startsWith("_") && !n.startsWith(".")) &&
+        rel.endsWith(".parquet"))
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sortBy(_._1)
+  }
 
-  /** Memoized resolved relation for a WRITE-ONCE artifact directory
-    * (the star warehouse, the multi-file scan replica): every
-    * `spark.read.parquet(dir)` runs a footer/schema-inference job and
-    * rebuilds the FileIndex — plan-metadata work a bench/serving
-    * process repays per query × run (measured: q_weather_star_warehouse
-    * paid five ~30 ms resolution jobs per run, one per star relation).
-    * This is the `Tables`/`ZoneMap.readFilesMemo` read shape for
-    * artifact dirs: the memo holds ONLY the resolved plan — every
-    * execution still scans the parquet data. Callers must pass dirs
-    * that are IMMUTABLE once built (the BuildOnce artifact contract:
-    * rebuilt artifacts land in fresh temp dirs, so the path key
-    * self-invalidates); appendable stores keep going through
-    * [[readStore]], which must see new partitions. */
-  def resolvedParquet(spark: SparkSession, dir: String): DataFrame =
-    BuildOnce.cached(artifactMemo, (System.identityHashCode(spark), dir))(
-      spark.read.parquet(dir))
+  /** The resolved relation over an IMMUTABLE path set (a write-once
+    * artifact dir, a pruned read's surviving files), resolved once per
+    * session: `spark.read.parquet` runs a footer/schema-inference job
+    * and rebuilds the FileIndex on every call — plan metadata a
+    * serving process would repay per query × run. Only the resolved
+    * plan is kept; every execution still scans the data. Appendable
+    * stores keep going through [[readStore]], which must see new
+    * files. */
+  def resolvedParquet(spark: SparkSession, paths: String*): DataFrame = {
+    // digest key: a pruned read's file list is ~10^5 paths at 100 TB,
+    // too large to retain per entry
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    paths.foreach(f => md.update((f + "\n").getBytes("UTF-8")))
+    BuildOnce.value("resolved", spark, Nil, spark, paths.size,
+      md.digest().toSeq)(spark.read.parquet(paths: _*))
+  }
 
   def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

@@ -77,76 +77,22 @@ object ZoneMap {
   def read(spark: SparkSession, statsDir: String): DataFrame =
     Fs.readStore(spark, statsDir)
 
-  /** Exact file-state signature of a store dir (path, length, mtime
-    * per committed parquet file, sorted) — the validity key for the
-    * driver-side catalog snapshot below. Driver listing, the same
-    * file-count-bounded class as the catalog itself. */
-  private def storeSig(spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Nil
-    val it = fs.listFiles(path, true)
-    val out = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet"))
-        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    out.result().sortBy(_._1)
-  }
-
   /** Driver-side CATALOG SNAPSHOT — the lakehouse manifest-cache move:
     * the catalog is file-count-sized (~10^5 rows where the data is
     * 10^11), so its collected rows are bounded driver state, and
     * re-reading the store per pruned read paid a mergeSchema footer
     * job + a scan job + a collect per invocation for metadata that
-    * only changes when the store's files change. Keyed on the store's
-    * exact file listing: any append (ZoneMap.update) or rewrite
-    * changes the signature and forces a re-read — data-side freshness
-    * stays [[pruneBox]]'s completeness gate, which always runs against
-    * the LIVE data listing. Registered in BuildOnce (clearAll resets,
-    * clear-on-overflow bound). */
-  private val catalogMemo = BuildOnce.memo[String,
-    (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.Row])]()
-
+    * only changes when the store's files change. A [[BuildOnce]] value
+    * keyed on the store's file listing: any append (ZoneMap.update) or
+    * rewrite forces a re-read — data-side freshness stays
+    * [[pruneBox]]'s completeness gate, which always runs against the
+    * LIVE data listing. */
   private[graft] def catalogSnapshot(spark: SparkSession, statsDir: String)
-      : (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]) = {
-    val sig = storeSig(spark, statsDir)
-    catalogMemo.get(statsDir) match {
-      case Some((s, sch, rows)) if s == sig => (sch, rows)
-      case _ =>
-        val df = read(spark, statsDir)
-        val rows = df.collect()
-        if (catalogMemo.size >= BuildOnce.MemoMaxEntries) catalogMemo.clear()
-        catalogMemo.put(statsDir, (sig, df.schema, rows))
-        (df.schema, rows)
+      : (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]) =
+    BuildOnce.value("zonemap_catalog", spark, Seq(statsDir)) {
+      val df = read(spark, statsDir)
+      (df.schema, df.collect())
     }
-  }
-
-  /** Memoized explicit-file-list relation: re-resolving
-    * `spark.read.parquet(files…)` per pruned read rebuilds the file
-    * index and re-infers the schema every invocation — plan-metadata
-    * work, not data work. Data files are IMMUTABLE in this engine's
-    * stores (rewrites land as new files in new dirs), so the same
-    * session + file list resolves to the same relation; the memo key
-    * carries the session UUID so a relation never leaks across
-    * sessions. The scan itself still executes per query — this caches
-    * the RESOLVED READ PLAN, never results. */
-  private val readMemo = BuildOnce.memo[String, DataFrame]()
-
-  private def readFilesMemo(spark: SparkSession, files: Seq[String]): DataFrame = {
-    // digest key: at 100 TB the file list is ~10^5 paths, so keying on
-    // the raw join would retain MBs per memo entry; SHA-256 of the
-    // list (plus its size) identifies it without retaining it
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    files.foreach(f => md.update((f + "\n").getBytes("UTF-8")))
-    val key = System.identityHashCode(spark).toString + " " +
-      files.size + " " +
-      md.digest().map("%02x".format(_)).mkString
-    BuildOnce.cached(readMemo, key)(spark.read.parquet(files: _*))
-  }
 
   /** Survival test for one range predicate, with the catalog's
     * NULL-semantics tri-state spelled out (the schema-evolution
@@ -291,8 +237,8 @@ object ZoneMap {
     val residual = preds.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi
     }.reduce(_ && _)
-    if (files.isEmpty) readFilesMemo(spark, Seq(dataDir)).filter(lit(false))
-    else readFilesMemo(spark, files).filter(residual)
+    if (files.isEmpty) Fs.resolvedParquet(spark, dataDir).filter(lit(false))
+    else Fs.resolvedParquet(spark, files: _*).filter(residual)
   }
 
   /** Surviving-file count for a box (the spec/monitoring probe). */

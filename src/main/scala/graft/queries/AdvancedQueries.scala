@@ -2263,17 +2263,14 @@ object AdvancedQueries extends QueryModule {
         |ORDER BY rank""".stripMargin))
   )
 
-  private val groupQuantileStoreMemo = graft.ops.BuildOnce.memo[String, String]()
-
   /** Build-once per-source quantile store for `q_group_quantiles_served`:
     * maintained through two mergeDelta batches (odd/even doc_id — the
     * union is the whole corpus) plus a replayed batch the idempotency
     * stamp turns into a no-op. k=64 matches q_group_quantiles. */
   private[graft] def groupQuantileStoreFor(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.ops.BuildOnce.cached(groupQuantileStoreMemo, dir) {
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_gq_store").toString
+    graft.ops.BuildOnce.dir("gq_store", spark,
+        Tables.paths(dir, "documents")) { store =>
       val k = 64
       def rows(parity: Int) = Tables(spark, dir, "documents")
         .filter(col("doc_id") % 2 === parity)
@@ -2289,6 +2286,5 @@ object AdvancedQueries extends QueryModule {
         .mergeDelta(spark, store, rows(1), "b1", k)
       graft.streaming.GroupQuantileMaintenance
         .mergeDelta(spark, store, rows(1), "b1", k) // replay: no-op
-      store
     }
 }

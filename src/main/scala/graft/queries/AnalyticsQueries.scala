@@ -73,17 +73,13 @@ object AnalyticsQueries extends QueryModule {
     |    o_totalprice * CAST(1.1 AS DOUBLE), 'U', 4
     |  FROM o WHERE o_orderkey % 21 = 0)""".stripMargin.stripPrefix("\n")
 
-  /** Build-once CDC store for q_cdc_asof (memoized per dataset dir like
-    * the star warehouse): base snapshot load, then the log folded in
+  /** Build-once CDC store for q_cdc_asof: base snapshot load, then the log folded in
     * three micro-batches — update wave, delete wave, insert+update
     * waves — through the same mergeBatch path the streaming maintainer
     * runs. */
-  private val cdcStoreMemo = graft.ops.BuildOnce.memo[String, String]()
-
   private def cdcStoreFor(spark: SparkSession, dir: String): String =
-    graft.ops.BuildOnce.cached(cdcStoreMemo, dir) {
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_cdc_store").toString
+    graft.ops.BuildOnce.dir("cdc_store", spark,
+        Tables.paths(dir, "orders")) { store =>
       val keys = Seq("o_orderkey")
       val o = cdcBase(spark, dir)
       val log = cdcLog(o)
@@ -94,7 +90,6 @@ object AnalyticsQueries extends QueryModule {
           graft.streaming.CdcMaintenance.mergeBatch(
             spark, store, log.filter(slice), keys, buckets)
       }
-      store
     }
 
   override def defs: Seq[(String, QueryDef)] = Seq(

@@ -25,20 +25,14 @@ object EventsQueries extends QueryModule {
   private val lastFunnelS2 =
     graft.ops.BuildOnce.swapRef()
 
-  /** Build-once hourly-rollup store per dataset dir (the demo stand-in
-    * for a RollupMaintenance-maintained production store; the memo is
-    * BuildOnce-registered so invariance tests that clearAll() force a
-    * rebuild — and with it a fresh MatViewRewriteRule registration). */
-  private val rollupStoreMemo = graft.ops.BuildOnce.memo[String, String]()
-
+  /** Build-once hourly-rollup store (the demo stand-in for a
+    * RollupMaintenance-maintained production store). */
   private[graft] def rollupStoreFor(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.ops.BuildOnce.cached(rollupStoreMemo, dir) {
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_rollup_store").toString
+    graft.ops.BuildOnce.dir("rollup_store", spark,
+        Tables.paths(dir, "events")) { store =>
       graft.streaming.RollupMaintenance.buildStore(
         Tables(spark, dir, "events"), store)
-      store
     }
 
   override def defs: Seq[(String, QueryDef)] = Seq(

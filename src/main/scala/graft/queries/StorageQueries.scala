@@ -16,34 +16,26 @@ import graft.ops.{BuildOnce, DeleteLedger, Layout, ScaleJoins, ZoneMap}
   */
 object StorageQueries extends QueryModule {
 
-  private val zoneMapMemo = BuildOnce.memo[String, String]()
-
   /** Range-layout the events table by `user_id` and build its zone
     * map — the write-once artifact every pruned read probes. The
     * layout keeps the query's columns only (the ts column's
     * nanos-vs-micros parquet round trip is [[Tables]]' concern, not
     * this demo's). */
   private[graft] def zoneMapFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(zoneMapMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_zonemap").toString
+    BuildOnce.dir("zonemap", spark, Tables.paths(dir, "events")) { base =>
       val events = Tables(spark, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       Layout.writeRangeLayout(events, s"$base/data", 8, "user_id")
       ZoneMap.write(spark, s"$base/data", s"$base/zm", Seq("user_id"))
-      base
     }
-
-  private val deleteMemo = BuildOnce.memo[String, String]()
 
   /** Documents table behind a delete ledger: two delete batches (one
     * replayed, proving idempotency on the query path itself), never
     * compacted here — the query reads through the reconcile
     * anti-join. DeleteLedgerSpec owns compaction/crash schedules. */
   private[graft] def deleteTableFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(deleteMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_delete_ledger").toString
+    BuildOnce.dir("delete_ledger", spark,
+        Tables.paths(dir, "documents")) { base =>
       val docs = Tables(spark, dir, "documents")
       DeleteLedger.create(spark, base, docs)
       val b1 = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
@@ -52,10 +44,7 @@ object StorageQueries extends QueryModule {
         docs.filter(col("doc_id") % 11 === 5).select("doc_id"), "b2")
       // retried batch: dynamic overwrite of its own partition, no dups
       DeleteLedger.delete(spark, base, b1, "b1")
-      base
     }
-
-  private val zorderMemo = BuildOnce.memo[String, String]()
 
   /** Z-order-layout the orders table on (o_custkey, whole dollars)
     * and build a two-column zone map — the 2-D box-query artifact.
@@ -65,9 +54,7 @@ object StorageQueries extends QueryModule {
     * bits=24 attempt at sf10 instead of silently scrambling the
     * layout — the guard working as designed. */
   private[graft] def zorderFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(zorderMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_zorder").toString
+    BuildOnce.dir("zorder", spark, Tables.paths(dir, "orders")) { base =>
       val orders = Tables(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           floor(col("o_totalprice")).cast("long").as("dollars"))
@@ -75,10 +62,7 @@ object StorageQueries extends QueryModule {
         "o_custkey", "dollars", bits = 30)
       ZoneMap.write(spark, s"$base/data", s"$base/zm",
         Seq("o_custkey", "dollars"))
-      base
     }
-
-  private val compactedMemo = BuildOnce.memo[String, String]()
 
   /** Events slice behind a DeleteLedger with a DECLARED range layout:
     * a sparse delete batch is folded by a SHUFFLE-regime compaction
@@ -88,9 +72,7 @@ object StorageQueries extends QueryModule {
     * `q_zonemap_compacted` reads — proving pruning survives the
     * maintenance cycle end-to-end. */
   private[graft] def compactedTableFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(compactedMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_zm_compacted").toString
+    BuildOnce.dir("zm_compacted", spark, Tables.paths(dir, "events")) { base =>
       val events = Tables(spark, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       DeleteLedger.create(spark, base, events,
@@ -100,10 +82,7 @@ object StorageQueries extends QueryModule {
       DeleteLedger.compact(spark, base, "event_id", maxBroadcast = 0L)
       ZoneMap.write(spark, DeleteLedger.dataDir(base), s"$base/zm",
         Seq("user_id"))
-      base
     }
-
-  private val liveMemo = BuildOnce.memo[String, String]()
 
   /** Events slice behind a LIVE DeleteLedger (deletes still in the
     * ledger, nothing compacted), range-layouted v0 with its zone map
@@ -112,9 +91,7 @@ object StorageQueries extends QueryModule {
     * reconcile anti-join, so compliance-deleted tables keep file
     * skipping. */
   private[graft] def liveTableFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(liveMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_zm_live").toString
+    BuildOnce.dir("zm_live", spark, Tables.paths(dir, "events")) { base =>
       val events = Tables(spark, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       DeleteLedger.create(spark, base, events,
@@ -123,10 +100,7 @@ object StorageQueries extends QueryModule {
         events.filter(col("event_id") % 13 === 2).select("event_id"), "b1")
       ZoneMap.write(spark, DeleteLedger.dataDir(base), s"$base/zm",
         Seq("user_id"))
-      base
     }
-
-  private val nullsMemo = BuildOnce.memo[String, String]()
 
   /** Events slice with a DERIVED NULLABLE column — `v` is null for
     * the user_id < 3 population (the "cohort never instrumented"
@@ -137,19 +111,14 @@ object StorageQueries extends QueryModule {
     * files containing a null. The artifact `q_zonemap_nulls` reads
     * through ZoneMapRule. */
   private[graft] def nullsTableFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(nullsMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_zm_nulls").toString
+    BuildOnce.dir("zm_nulls", spark, Tables.paths(dir, "events")) { base =>
       val events = Tables(spark, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           when(col("user_id") < 3L, lit(null).cast("double"))
             .otherwise(col("value")).as("v"))
       Layout.writeRangeLayout(events, s"$base/data", 8, "user_id")
       ZoneMap.write(spark, s"$base/data", s"$base/zm", Seq("user_id", "v"))
-      base
     }
-
-  private val upsertMemo = BuildOnce.memo[String, String]()
 
   /** Documents table behind a MUTATION window: upsert batch seq=1
     * bumps n_chars by 1000 for doc_id % 5 == 0, seq=2 re-bumps the
@@ -158,9 +127,8 @@ object StorageQueries extends QueryModule {
     * compliance-first). Nothing compacted: `q_upsert_ledger` reads
     * through the full three-way reconcile. */
   private[graft] def upsertTableFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(upsertMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_upsert_ledger").toString
+    BuildOnce.dir("upsert_ledger", spark,
+        Tables.paths(dir, "documents")) { base =>
       val docs = Tables(spark, dir, "documents")
       DeleteLedger.create(spark, base, docs)
       DeleteLedger.upsert(spark, base,
@@ -173,19 +141,14 @@ object StorageQueries extends QueryModule {
         "doc_id", "u2", seq = 2L)
       DeleteLedger.delete(spark, base,
         docs.filter(col("doc_id") % 7 === 3).select("doc_id"), "d1")
-      base
     }
-
-  private val cdfMemo = BuildOnce.memo[String, String]()
 
   /** Documents table with a COMPACTION BOUNDARY in its history:
     * v0 = full corpus; b1 deletes folded into v1 by a compact; b2
     * still in the ledger. Gives `q_version_diff` real version dirs +
     * a live ledger to derive its change feed from. */
   private[graft] def cdfTableFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(cdfMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_cdf_table").toString
+    BuildOnce.dir("cdf_table", spark, Tables.paths(dir, "documents")) { base =>
       val docs = Tables(spark, dir, "documents")
       DeleteLedger.create(spark, base, docs)
       DeleteLedger.delete(spark, base,
@@ -193,7 +156,6 @@ object StorageQueries extends QueryModule {
       DeleteLedger.compact(spark, base, "doc_id") // v1: b1 folded in
       DeleteLedger.delete(spark, base,
         docs.filter(col("doc_id") % 11 === 5).select("doc_id"), "b2")
-      base
     }
 
   def defs: Seq[(String, QueryDef)] = Seq(
@@ -630,8 +592,6 @@ object StorageQueries extends QueryModule {
       "CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)")(
       (s, _) => s"md5($s)")
 
-  private val splitScanMemo = BuildOnce.memo[String, String]()
-
   /** Build-once multi-file replica of the lineitem scan columns —
     * range-laid-out on the (l_orderkey, l_linenumber) key via
     * ops/Layout, one file per split. File count is SCALE-ADAPTIVE,
@@ -642,9 +602,7 @@ object StorageQueries extends QueryModule {
     * 100 TB corpus gets ~800k files from the size arm, the width arm
     * is then irrelevant). */
   private[graft] def splitScanFor(spark: SparkSession, dir: String): String =
-    BuildOnce.cached(splitScanMemo, dir) {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_split_scan").toString
+    BuildOnce.dir("split_scan", spark, Tables.paths(dir, "lineitem")) { base =>
       val li = Tables(spark, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       val bytes = li.queryExecution.analyzed.stats.sizeInBytes
@@ -653,6 +611,5 @@ object StorageQueries extends QueryModule {
         (bytes / (128L * 1024 * 1024)).toLong + 1).toInt
       Layout.writeRangeLayout(li, s"$base/data", n,
         "l_orderkey", "l_linenumber")
-      base
     }
 }

@@ -236,18 +236,13 @@ object WeatherQueries extends QueryModule {
       bench = true)
   )
 
-  /** Build-once memo for the written star warehouse (one per dataset
-    * dir) — bounded like the index memos. The warehouse is what
-    * q_weather_star_warehouse and its spec read; production pins ONE
-    * warehouse dir per corpus and re-runs StarSink per batch. */
-  private val warehouseMemo = graft.ops.BuildOnce.memo[String, String]()
-
+  /** The build-once star warehouse written from the events table —
+    * what q_weather_star_warehouse and its spec read; production pins
+    * ONE warehouse dir per corpus and re-runs StarSink per batch. */
   private[graft] def warehouseFor(spark: SparkSession, dir: String): String =
-    graft.ops.BuildOnce.cached(warehouseMemo, dir) {
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_star_wh").toString
+    graft.ops.BuildOnce.dir("star_wh", spark,
+        Tables.paths(dir, "events")) { wh =>
       graft.pipeline.StarSink.write(
         WeatherEtl.enrich(obs(spark, dir, wide = true)), wh)
-      wh
     }
 }

@@ -70,20 +70,31 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("build-once memo is bounded: overflow clears instead of growing") {
-    // the shared mechanics every build-once artifact (training,
-    // index layouts, warehouse) goes through — after MemoMaxEntries+1
-    // distinct keys the memo must have shrunk, never exceeded the
-    // cap, still returned the value it built, and be covered by the
-    // registry's clearAll (the invariance-test hook)
+    // the catalog every build-once artifact (training, index layouts,
+    // warehouse) goes through: MemoMaxEntries+1 distinct builds of one
+    // kind never exceed the cap, the overflow deletes every dir it
+    // evicts, and clearAll empties the catalog and deletes the rest
     import graft.ops.BuildOnce
-    val m = BuildOnce.memo[Int, Long]()
+    def exists(d: String) = new java.io.File(d).exists()
     val n = BuildOnce.MemoMaxEntries + 1
-    val vals = (0 until n).map(i => BuildOnce.cached(m, i)(i.toLong))
-    assert(vals.zipWithIndex.forall { case (v, i) => v == i.toLong })
-    assert(m.size <= BuildOnce.MemoMaxEntries)
-    assert(m.size < n) // the clear actually fired
+    val dirs = (0 until n).map { i =>
+      BuildOnce.dir("bound_probe", spark, Nil, i) { d =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(d, "v"),
+          Array(i.toByte))
+      }
+    }
+    assert(dirs.distinct.size == n)
+    // the overflow dropped the kind and deleted its dirs: only the
+    // build after it is left
+    assert(BuildOnce.ownedDirs.filter(dirs.contains) == Seq(dirs.last))
+    assert(dirs.init.forall(!exists(_)))
+    assert(exists(dirs.last))
+    // a hit serves the built dir without building again
+    assert(BuildOnce.dir("bound_probe", spark, Nil, n - 1)(
+      _ => fail("rebuilt on a hit")) == dirs.last)
     BuildOnce.clearAll()
-    assert(m.isEmpty) // registered: the test hook resets it
+    assert(BuildOnce.ownedDirs.isEmpty)
+    assert(!exists(dirs.last))
   }
 
   test("near-dup candidates are an equi-join on (label, bucket), never label alone") {

@@ -107,7 +107,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     // would never exercise training at the second partition count —
     // exactly the order-dependent-accumulation regression it exists
     // to catch
-    graft.ext.SimilarityQueries.clearTrainingMemo()
+    graft.ops.BuildOnce.clearAll()
     try SparkEntry.queries(name)(spark, sf)
       .collect().map(_.toString).toSeq
     finally spark.conf.set("spark.sql.shuffle.partitions", prior)
