@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Small-file compaction — the operational counterpart of the
   * micro-batch sinks (O-24/O-25): a 5-minute batch cadence writes
@@ -76,7 +77,10 @@ object Compaction {
   }
 
   /** Rewrite the parquet directory `dir` into ~ceil(bytes/targetBytes)
-    * files (>=1). Returns the resulting file count.
+    * files (>=1). Returns the resulting file count and the schema the
+    * rewrite's read resolved (data columns, then partition columns) —
+    * the compacted dir's read schema, so a caller reading it back needs
+    * no second footer job.
     *
     * Hive-partitioned layouts are preserved: partition columns are
     * recovered from the directory names and written back with
@@ -99,7 +103,7 @@ object Compaction {
       targetBytes: Long = 128L * 1024 * 1024,
       // fault-injection seam for the concurrency spec: runs after the
       // rewrite, before the changed-directory check
-      onBeforeSwap: () => Unit = () => ()): Int = {
+      onBeforeSwap: () => Unit = () => ()): (Int, StructType) = {
     val target = new Path(dir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val backup = new Path(s"$dir-__precompact")
@@ -134,6 +138,6 @@ object Compaction {
       throw new java.io.IOException(s"compaction: cannot swap $tmp into place")
     }
     fs.delete(backup, true)
-    dataFileCount(spark, dir)
+    (dataFileCount(spark, dir), df.schema)
   }
 }

@@ -23,13 +23,16 @@ object Fs {
     *     dirs of immutable parquet files. SCHEMA EVOLUTION means adding
     *     nullable columns in new files, never renaming/retyping
     *     existing ones;
-    *   - every reader goes through this helper (a mergeable store
-    *     through [[MergeableStore.read]], which resolves the pointer
-    *     and lands here), which merges the schemas of ALL files — a
-    *     plain read samples one footer and would silently DROP a
-    *     column present only in the other era's files (the
-    *     VectorIngest mixed-era ledger bug, round 8: the replay guard
-    *     read zero admitted docs and re-admitted duplicates);
+    *   - a reader declares the store's schema or goes through this
+    *     helper, which merges the schemas of ALL files — a plain read
+    *     samples one footer and would silently DROP a column present
+    *     only in the other era's files (the VectorIngest mixed-era
+    *     ledger bug, round 8: the replay guard read zero admitted docs
+    *     and re-admitted duplicates). A mergeable store is read by
+    *     [[MergeableStore.read]] with the union schema its `_MANIFEST`
+    *     records (this helper only for a manifest written without
+    *     one); a batch-keyed ledger by [[graft.streaming.BatchLedger]]
+    *     with its writer's schema;
     *   - a column missing in an old file reads as NULL there; each
     *     store declares its null semantics at the call site
     *     (typically coalesce(col, bootstrap-default)).
@@ -38,13 +41,6 @@ object Fs {
     * store file counts are bounded by construction), not a data scan. */
   def readStore(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(dir)
-
-  /** [[readStore]] over chosen partition dirs below `basePath` (their
-    * hive partition columns still resolve). */
-  def readStore(spark: SparkSession, basePath: String,
-      dirs: Seq[String]): DataFrame =
-    spark.read.option("mergeSchema", "true").option("basePath", basePath)
-      .parquet(dirs: _*)
 
   /** THE source-state signature the [[BuildOnce]] catalog keys on: a
     * file's (path, length, mtime); for a dir, that triple for each

@@ -44,8 +44,8 @@ object MaintenanceJob {
   def run(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024,
       histColumns: Seq[String] = Nil): Map[String, Long] = {
-    val files = Compaction.compact(spark, dir, targetBytes)
-    val df = spark.read.parquet(dir)
+    val (files, schema) = Compaction.compact(spark, dir, targetBytes)
+    val df = spark.read.schema(schema).parquet(dir)
     TableStats.write(df, s"$dir-__stats")
     histColumns.foreach { c =>
       Histogram.write(

@@ -4,7 +4,11 @@ import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -17,9 +21,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * combine expression and its idempotence guard.
   *
   * Layout under the store dir:
-  *   - `_MANIFEST`   the pointer: the current version number and, for a
-  *                   partitioned store, its partition columns, schema and
-  *                   the version each live partition is served from.
+  *   - `_MANIFEST`   the pointer: the current version number, the read
+  *                   schema and, for a partitioned store, its partition
+  *                   columns and the version each live partition is
+  *                   served from.
   *                   Replaced by tmp-file + ATOMIC_MOVE, so a reader sees
   *                   the old manifest or the new one, never a mix. The
   *                   leading underscore hides it from Spark's listing.
@@ -38,6 +43,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     (which reuses its version number);
   *   - after the flip, before the collection: the new version is
   *     served; the leftovers are collected by the next publish.
+  * [[mergeTogether]] holds back the flips of merges that run together
+  * until every one has written, so a failed merge moves none of them.
   * A replay of the same batch therefore always merges against a
   * complete version, and the maintainer's idempotence guard (a
   * `last_batch` stamp, a monotone sequence, or a ⊔-semilattice
@@ -55,9 +62,12 @@ object MergeableStore {
   private val StagePrefix = "_stage_v"
 
   /** A published version. `partitionBy` empty ⇔ whole-store shape;
-    * otherwise `schema` is the read schema (serves a store with no live
-    * partition) and `parts` maps each live partition path to its
-    * version. */
+    * otherwise `parts` maps each live partition path to its version.
+    * `schema` is the read schema: the union of every schema published
+    * so far (so an older era's files read a later column as null, the
+    * `mergeSchema` semantics, without a footer job per read). None only
+    * for versions written through [[commitNext]] or before the schema
+    * was recorded for the whole shape; those read with `mergeSchema`. */
   private final case class Manifest(version: Long, partitionBy: Seq[String] = Nil,
       schema: Option[StructType] = None, parts: Map[String, Long] = Map.empty) {
     def render: String = (Seq(s"version $version") ++
@@ -110,14 +120,24 @@ object MergeableStore {
   def partitionDir(dir: String, part: String): Option[String] =
     manifest(dir).flatMap(_.parts.get(part)).map(v => versionDir(s"$dir/$part", v))
 
-  /** The current version through [[Fs.readStore]] (schema merged), or
-    * None before the first publish. */
+  /** The current version read with the manifest's schema, or None
+    * before the first publish. */
   def readOption(spark: SparkSession, dir: String): Option[DataFrame] =
-    manifest(dir).map { m =>
-      if (m.partitionBy.isEmpty) Fs.readStore(spark, versionDir(dir, m.version))
-      else if (m.parts.isEmpty) empty(spark, m.schema.get)
-      else Fs.readStore(spark, dir,
-        m.parts.toSeq.sorted.map { case (p, v) => versionDir(s"$dir/$p", v) })
+    manifest(dir).map(readVersion(spark, dir, _, _ => true))
+
+  /** `m`'s version, restricted to the partitions `keep` admits (a
+    * whole-shape store is read whole). */
+  private def readVersion(spark: SparkSession, dir: String, m: Manifest,
+      keep: String => Boolean): DataFrame =
+    if (m.partitionBy.isEmpty)
+      m.schema.fold(Fs.readStore(spark, versionDir(dir, m.version)))(
+        spark.read.schema(_).parquet(versionDir(dir, m.version)))
+    else {
+      val dirs = m.parts.toSeq.sorted.collect {
+        case (p, v) if keep(p) => versionDir(s"$dir/$p", v)
+      }
+      if (dirs.isEmpty) empty(spark, m.schema.get)
+      else spark.read.schema(m.schema.get).option("basePath", dir).parquet(dirs: _*)
     }
 
   def read(spark: SparkSession, dir: String): DataFrame =
@@ -136,13 +156,31 @@ object MergeableStore {
     * version (or into `zero`, the empty store, before the first
     * publish — so the first merge is the bootstrap) and returns the
     * frame to publish, or None when the idempotence guard finds the
-    * batch already folded. For a partitioned shape the returned frame
-    * holds only the partitions the batch touched. */
-  def merge(spark: SparkSession, dir: String, zero: => DataFrame,
-      partitionBy: Seq[String] = Nil)(
+    * batch already folded. */
+  def merge(spark: SparkSession, dir: String, zero: => DataFrame)(
       combine: DataFrame => Option[DataFrame]): Unit =
-    combine(readOption(spark, dir).getOrElse(zero))
-      .foreach(publish(dir, _, partitionBy))
+    combine(readOption(spark, dir).getOrElse(zero)).foreach(publish(dir, _))
+
+  /** [[merge]] for a partitioned shape: `combine` is handed only the
+    * live partitions `touched` names (its distinct `partitionBy`
+    * values — the batch's keys, collected to the driver), so a merge
+    * reads and lists what its batch touches, never the store's whole
+    * history; the frame it returns holds only those partitions. */
+  def mergePartitions(spark: SparkSession, dir: String, zero: => DataFrame,
+      partitionBy: Seq[String], touched: DataFrame)(
+      combine: DataFrame => Option[DataFrame]): Unit = {
+    val base = manifest(dir).map { m =>
+      val keys = touched.select(partitionBy.map(c => col(c).cast("string")): _*)
+        .distinct().collect().map { r =>
+          partitionBy.indices.map { i =>
+            ExternalCatalogUtils.getPartitionPathString(partitionBy(i),
+              Option(r.getString(i)).getOrElse(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+          }.mkString("/")
+        }.toSet
+      readVersion(spark, dir, m, keys)
+    }
+    combine(base.getOrElse(zero)).foreach(publish(dir, _, partitionBy))
+  }
 
   /** Publish `df` as the next version. Whole-store shape: `df` IS the
     * store. Partitioned shape: each partition present in `df` replaces
@@ -150,13 +188,16 @@ object MergeableStore {
     * other partition keeps its version untouched. */
   def publish(dir: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       dropped: Set[String] = Set.empty): Long = {
-    val v =
-      if (partitionBy.isEmpty) commitNext(dir)(df.write.parquet(_))
-      else {
-        val cur = manifest(dir)
-        require(cur.forall(_.partitionBy == partitionBy),
-          s"store $dir is partitioned by ${cur.map(_.partitionBy)}, not $partitionBy")
-        val next = cur.map(_.version).getOrElse(-1L) + 1
+    val cur = manifest(dir)
+    require(cur.forall(_.partitionBy == partitionBy),
+      s"store $dir is partitioned by ${cur.map(_.partitionBy)}, not $partitionBy")
+    val next = cur.map(_.version).getOrElse(-1L) + 1
+    val schema = unionSchema(cur.flatMap(_.schema), df.schema)
+    val m =
+      if (partitionBy.isEmpty) {
+        writeVersion(dir, next)(df.write.parquet(_))
+        Manifest(next, schema = Some(schema))
+      } else {
         val stage = s"$dir/$StagePrefix$next"
         Fs.deleteRecursively(new File(stage))
         df.write.partitionBy(partitionBy: _*).parquet(stage)
@@ -167,14 +208,15 @@ object MergeableStore {
           target.getParentFile.mkdirs()
           Files.move(Paths.get(stage, p), target.toPath, StandardCopyOption.ATOMIC_MOVE)
         }
-        val data = df.schema.filterNot(f => partitionBy.contains(f.name))
-        flip(dir, Manifest(next, partitionBy,
-          Some(StructType(data ++ partitionBy.map(c => df.schema(c)))),
-          cur.map(_.parts).getOrElse(Map.empty) -- dropped ++ written.map(_ -> next)))
-        next
+        // Spark reads partition columns after the data columns
+        val data = schema.filterNot(f => partitionBy.contains(f.name))
+        Manifest(next, partitionBy,
+          Some(StructType(data ++ partitionBy.map(c => schema(c)))),
+          cur.map(_.parts).getOrElse(Map.empty) -- dropped ++ written.map(_ -> next))
       }
-    gc(dir)
-    v
+    val settle = () => { flip(dir, m); gc(dir) }
+    Option(held.get()).fold(settle())(_ += settle)
+    next
   }
 
   /** Write the next whole-store version through `write` (handed the
@@ -183,11 +225,45 @@ object MergeableStore {
     * them; [[DeleteLedger]] keeps them for time travel. */
   def commitNext(dir: String)(write: String => Unit): Long = {
     val next = version(dir) + 1
-    val target = versionDir(dir, next)
-    Fs.deleteRecursively(new File(target))
-    write(target)
+    writeVersion(dir, next)(write)
     flip(dir, Manifest(next))
     next
+  }
+
+  private def writeVersion(dir: String, v: Long)(write: String => Unit): Unit = {
+    val target = versionDir(dir, v)
+    Fs.deleteRecursively(new File(target))
+    write(target)
+  }
+
+  /** The pointer flips (and collections) [[mergeTogether]] holds back
+    * for the task running on this thread; null outside one. */
+  private val held = new ThreadLocal[mutable.ArrayBuffer[() => Unit]]
+
+  /** Runs independent merges — each publishing its own store, at most
+    * once — together ([[Concurrent.all]]), and flips their pointers
+    * only after every merge has written its new version, in task
+    * order. A failed merge therefore moves no store: the versions the
+    * others wrote stay orphans that their next publish replaces. Only
+    * a crash between two flips leaves a prefix of the stores moved,
+    * which each store's idempotence guard converges on replay. */
+  def mergeTogether(merges: (() => Unit)*): Unit = {
+    val flips = merges.map(_ => mutable.ArrayBuffer.empty[() => Unit])
+    Concurrent.all(merges.zip(flips).map { case (merge, f) =>
+      () => {
+        held.set(f)
+        try merge() finally held.remove()
+      }
+    }: _*)
+    flips.foreach(_.foreach(_()))
+  }
+
+  /** The published frame's schema, then every column only an earlier
+    * version had (nullable: the newer files do not carry it). */
+  private def unionSchema(prior: Option[StructType], now: StructType): StructType = {
+    val fresh = StructType(now.map(_.copy(nullable = true)))
+    StructType(fresh ++ prior.toSeq.flatten
+      .filterNot(f => fresh.fieldNames.contains(f.name)))
   }
 
   private def flip(dir: String, m: Manifest): Unit = {

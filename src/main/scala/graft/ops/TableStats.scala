@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** ANALYZE-style table statistics, and the planning decision they
   * exist to drive: choosing the broadcast side of a join from
@@ -47,11 +48,17 @@ object TableStats {
     one.select(explode(array(stacked: _*)).as("s")).select("s.*")
   }
 
+  /** The row shape [[collect]] produces, whatever the table. */
+  val Schema: StructType = StructType.fromDDL("column string, n_rows bigint, " +
+    "n_nonnull bigint, ndv bigint, min_s string, max_s string")
+
   def write(df: DataFrame, dir: String): Unit =
     collect(df).coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
 
+  /** Stats written by [[write]], read with their fixed [[Schema]] (no
+    * footer job to infer it). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    spark.read.schema(Schema).parquet(dir)
 
   /** Measured row count from a stats frame (same for every column row). */
   def rowCount(stats: DataFrame): Long =
@@ -124,34 +131,10 @@ object TableStats {
       (n, rows.map(x => x.getAs[String]("column") -> x.getAs[Long]("ndv")).toMap)
     }
     // the per-relation ANALYZE jobs are independent — submit them
-    // concurrently so the small stats scans back-fill each other's
-    // stragglers instead of running strictly one after another (the
-    // optimization guide's overlap-independent-jobs pattern; Spark's
-    // scheduler runs concurrent actions fine, and a bounded pool keeps
-    // this from flooding the scheduler on a wide relation list)
-    val m: Map[String, (Long, Map[String, Long])] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(rels.size, 4))
-      try {
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val futures = rels.map(r =>
-          r.name -> scala.concurrent.Future(measured(r))(ec))
-        futures.map { case (n, f) =>
-          // generous but FINITE bound: Duration.Inf on a hung stats
-          // job would block the planner forever, and a thrown sibling
-          // would leave its peers running unobserved
-          n -> scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration(10, "min"))
-        }.toMap
-      } catch {
-        case e: Throwable =>
-          // cancel in-flight stats jobs before propagating — a plain
-          // shutdown() would leave orphaned Spark jobs running after
-          // the ordering call already failed
-          pool.shutdownNow()
-          throw e
-      } finally pool.shutdown()
-    }
+    // together so the small stats scans back-fill each other's
+    // stragglers instead of running strictly one after another
+    val m: Map[String, (Long, Map[String, Long])] =
+      rels.map(_.name).zip(Concurrent.all(rels.map(r => () => measured(r)): _*)).toMap
 
     // Selinger containment estimate for joining a composite (estRows,
     // ndvs) with relation `b` over `keys`; every key pair divides

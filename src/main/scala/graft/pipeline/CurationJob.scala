@@ -57,7 +57,10 @@ object CurationJob {
     val admitted =
       if (graft.ops.Fs.hasCommittedParquet(
           new java.io.File(s"${dirs.nearDupIndex}/sigs")))
-        spark.read.option("basePath", s"${dirs.nearDupIndex}/sigs")
+        // declared as the pipeline writes the index's id column: a
+        // count reads no column, and needs no footer job to plan
+        spark.read.schema("doc_id bigint")
+          .option("basePath", s"${dirs.nearDupIndex}/sigs")
           .parquet(s"${dirs.nearDupIndex}/sigs").count()
       else 0L
     Map("published_batches" -> publishedBatches.toLong,

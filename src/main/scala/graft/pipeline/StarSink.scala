@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.Concurrent
+
 /** Warehouse sink for the star fan-out (SURVEY.md §2 O-24, §3.3).
   *
   * The reference commits the 5 rows of one observation in one MySQL
@@ -15,7 +17,8 @@ import org.apache.spark.storage.StorageLevel
   *   - each table write is atomic (Spark's parquet commit protocol);
   *   - dimensions commit BEFORE the fact table, so a fact row can never
   *     reference a dimension row that doesn't exist (the dangling-FK
-  *     window is benign: dim rows without a fact row yet);
+  *     window is benign: dim rows without a fact row yet); the four
+  *     dims are independent of each other and are written together;
   *   - a batch manifest is written last, marking the batch complete —
   *     readers that require full consistency gate on it.
   *
@@ -63,17 +66,22 @@ object StarSink {
       } else {
         // durable barrier for nondeterministic keys (see class doc)
         keyed.write.mode(SaveMode.Overwrite).parquet(staging)
-        (spark.read.parquet(staging), () => deleteRecursively(staging))
+        (spark.read.schema(keyed.schema).parquet(staging),
+          () => deleteRecursively(staging))
       }
     try {
       val star = StarSchema.splitKeyed(cached)
-      val n = cached.count() // materializes the cache before the 5 scans
-
-      // dims first (any order), fact LAST — see class doc
-      star.timeDim.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/time_dim")
-      star.paramDim.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/param_dim")
-      star.tempDim.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/temp_dim")
-      star.heatIndexDim.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/heat_index_dim")
+      // the row count and the four dims are independent scans of the
+      // cached frame, so they run together (one dispatch gap instead
+      // of five; the first scan to reach a partition caches it, the
+      // others wait on that block). Dims first, fact LAST:
+      // Concurrent.all returns only after every dim write has ended,
+      // so a failed dim leaves no fact dir and no manifest
+      val dims = Seq("time_dim" -> star.timeDim, "param_dim" -> star.paramDim,
+        "temp_dim" -> star.tempDim, "heat_index_dim" -> star.heatIndexDim)
+      val n = Concurrent.all((() => cached.count()) +: dims.map { case (name, dim) =>
+        () => { dim.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/$name"); 0L }
+      }: _*).head
       // the fact's partition column comes straight off the keyed frame
       // (recorded_date_local IS timeDim's record_date by construction)
       // — joining timeDim back would shuffle the full dataset twice

@@ -88,11 +88,10 @@ object CdcMaintenance {
         (Meta ++ payload).map(c => col(s"__last.$c").as(c)): _*)
       .withColumn("bucket", bucketOf(keys, buckets))
       .persist()
-    try MergeableStore.merge(spark, storeDir,
-        MergeableStore.empty(spark, delta.schema), Parts) { store =>
-      val affected = delta.select("bucket").distinct()
+    try MergeableStore.mergePartitions(spark, storeDir,
+        MergeableStore.empty(spark, delta.schema), Parts, delta) { store =>
+      // the touched buckets are exactly the batch's
       val base = store
-        .join(affected, Seq("bucket"), "left_semi")
         .select((keys :+ "bucket").map(col) ++
           (Meta ++ payload).map(c => col(c).as(s"__b_$c")): _*)
       // full outer on the key: the log can open brand-new keys. The

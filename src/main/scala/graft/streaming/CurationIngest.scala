@@ -52,8 +52,8 @@ object CurationIngest {
       .filter(col("rn") === 1).drop("rn")
     // dedup against every PRIOR batch's hashes; a retry's own
     // half-committed partition must not mask its recomputation
-    val fresh = BatchLedger.readOtherBatches(spark, ledgerDir, batchId)
-      .map(_.select("content_hash")) match {
+    val fresh = BatchLedger.readOtherBatches(spark, ledgerDir, batchId,
+        inBatch.select("content_hash").schema) match {
       case Some(seen) => inBatch.join(seen, Seq("content_hash"), "left_anti")
       case None => inBatch
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.Fs
+import graft.ops.{Fs, MergeableStore}
 
 /** The composed streaming curation DAG — the five spec-tested stages
   * wired into ONE per-micro-batch pipeline:
@@ -15,9 +15,10 @@ import graft.ops.Fs
   *       the accumulated signature index)
   *       → rollup maintenance ([[RollupMaintenance.mergeDelta]]:
   *         per-(hour, lang) curation metrics, batch-stamped)
-  *         → frequency-sketch maintenance ([[SketchMaintenance]]:
+  *         ∥ frequency-sketch maintenance ([[SketchMaintenance]]:
   *           the per-source CMS the admission throttle probes,
-  *           batch-stamped)
+  *           batch-stamped) — the two merges run concurrently
+  *           ([[graft.ops.MergeableStore.mergeTogether]])
   *         → atomic publish ([[graft.sources.AtomicSink]]: staged
   *           task writes, driver commit, `_SUCCESS` manifest last).
   *
@@ -79,21 +80,14 @@ object CurationPipeline {
     CurationIngest.processBatch(spark, batch, dirs.curated, dirs.ledger, batchId)
     // read the batch's survivors back (the durable form IS the stage
     // boundary — a retry sees exactly what the first attempt
-    // committed). An all-filtered batch commits a partition with no
-    // data files, which parquet schema inference can't read — feed the
-    // downstream stages an explicitly-typed empty frame instead so an
-    // empty micro-batch flows through the DAG rather than wedging it.
-    val batchDir = s"${dirs.curated}/batch_id=$batchId"
-    val survivors = // (doc_id, lang, quality)
-      if (Fs.hasCommittedParquet(new java.io.File(batchDir)))
-        spark.read.parquet(batchDir)
-      else
-        // derive the empty frame from the SAME lineage CurationIngest
-        // writes (score → project), so the two schemas cannot drift —
-        // a hand-built StructType here would silently diverge the
-        // empty-batch path when the ingest stage adds/renames a column
-        graft.ext.PipelineOps.curationScore(batch)
-          .select("doc_id", "lang", "quality").filter(lit(false))
+    // committed) with the schema of the lineage CurationIngest writes
+    // (score → project): no footer job, and an all-filtered batch —
+    // a partition with no data files — reads as an empty frame of
+    // that schema instead of failing inference and wedging the stream
+    val survivors = spark.read // (doc_id, lang, quality)
+      .schema(graft.ext.PipelineOps.curationScore(batch)
+        .select("doc_id", "lang", "quality").schema)
+      .parquet(s"${dirs.curated}/batch_id=$batchId")
     val withText = survivors.join(batch.select("doc_id", "text"), "doc_id")
 
     // stage 2 — near-dup: LSH admission vs the signature index
@@ -102,13 +96,16 @@ object CurationPipeline {
     val admitted = withText.join(admittedIds, Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "quality").persist()
     try {
+      // stages 3 and 4 fold the same admitted set into two independent
+      // stores, so they run together; both pointers flip only after
+      // both versions are written (rollup first), and publish waits
+      // for both, so a published batch means both stores hold it.
+      //
       // stage 3 — rollup: per-(hour, lang) admitted-doc metrics,
       // stamp-guarded so a replayed epoch can't double-merge. The
       // first epoch merges into the empty store — the bootstrap.
       val events = admitted.select(docTs.as("ts"),
         col("lang").as("event_type"), col("quality").cast("double").as("value"))
-      RollupMaintenance.mergeDelta(spark, dirs.rollup, events, s"b$batchId")
-
       // stage 4 — frequency sketch: fold the admitted docs' source
       // keys into the CMS store ([[SketchMaintenance]] — the
       // per-domain admission-throttle/cap service a curation loop
@@ -117,8 +114,10 @@ object CurationPipeline {
       // rollup makes a replayed epoch rewrite the store UNCHANGED
       // instead of double-folding.
       val admittedSrc = admitted.join(batch.select("doc_id", "source"), "doc_id")
-      SketchMaintenance.mergeDelta(spark, dirs.sketch, admittedSrc,
-        col("source"), s"b$batchId")
+      MergeableStore.mergeTogether(
+        () => RollupMaintenance.mergeDelta(spark, dirs.rollup, events, s"b$batchId"),
+        () => SketchMaintenance.mergeDelta(spark, dirs.sketch, admittedSrc,
+          col("source"), s"b$batchId"))
 
       // stage 5 — atomic publish: batch-keyed dir, pre-cleaned so a
       // replay REPLACES a previously-committed copy instead of adding

@@ -72,9 +72,11 @@ object IncrementalNearDup {
     // vs the accumulated index (excluding a retry's own half-written
     // partition), resolved to signatures for the agreement estimate
     val agree = SigAgreement.sigAgreement(col("sig"), col("idx_sig")) >= tau
-    val vsIndex = BatchLedger.readOtherBatches(spark, s"$indexDir/bands", batchId) match {
+    val vsIndex = BatchLedger.readOtherBatches(spark, s"$indexDir/bands", batchId,
+        bands.schema) match {
       case Some(idxBands) =>
-        val idxSigs = BatchLedger.readOtherBatches(spark, s"$indexDir/sigs", batchId).get
+        val idxSigs = BatchLedger.readOtherBatches(spark, s"$indexDir/sigs", batchId,
+          sigs.schema).get
           .select(col("doc_id").as("idx_doc_id"), col("sig").as("idx_sig"))
         bands
           .join(idxBands.select(col("band_idx"), col("band_hash"),
@@ -112,10 +114,12 @@ object IncrementalNearDup {
 
     // release both per-batch caches NOW (a long-running stream would
     // otherwise accumulate one pinned frame per epoch); the returned
-    // ids read back from the partition this batch just committed
+    // ids read back from the partition this batch just committed,
+    // with the schema it was written with
     sigs.unpersist()
     admitted.unpersist()
-    spark.read.parquet(s"$indexDir/sigs/batch_id=$batchId").select("doc_id")
+    spark.read.schema(admitted.schema)
+      .parquet(s"$indexDir/sigs/batch_id=$batchId").select("doc_id")
   }
 
   /** File-stream form over a parquet directory of documents. */

@@ -91,14 +91,14 @@ object RollupMaintenance {
       delta: DataFrame, batchId: String): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
     // ONE materialization of the delta aggregation: both the
-    // affected-group list and the merge read the persisted frame
+    // touched-partition list and the merge read the persisted frame
     val d = rollupShape(delta).persist()
     val zero = MergeableStore.empty(spark, "n_events bigint, " +
       "total_value double, last_batch string, hour string, event_type string")
-    try MergeableStore.merge(spark, storeDir, zero, Parts) { store =>
-      val affected = d.select("hour", "event_type").distinct()
+    // the store is partitioned by the group key, so the touched
+    // partitions hold exactly the delta's groups
+    try MergeableStore.mergePartitions(spark, storeDir, zero, Parts, d) { store =>
       val base = store
-        .join(affected, Seq("hour", "event_type"), "left_semi")
         .select(col("hour"), col("event_type"),
           col("n_events").as("b_n"), col("total_value").as("b_t"),
           col("last_batch"))

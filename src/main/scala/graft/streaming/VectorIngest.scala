@@ -63,11 +63,12 @@ object VectorIngest {
     * the index directly; the sum of admissions is only a lower bound.
     *
     * Schema evolution: `n_index_rows` was added after the first
-    * ledger era — consumers MUST read the ledger with
-    * `option("mergeSchema", "true")` (as [[BatchLedger]] does) so a
-    * mixed-era ledger surfaces the column as null in pre-change
-    * partitions instead of inferring a one-footer schema that either
-    * drops the column or fails the select.
+    * ledger era — consumers MUST read the ledger with its declared
+    * row schema (as [[BatchLedger.readOtherBatches]] takes it) or with
+    * `option("mergeSchema", "true")`, so a mixed-era ledger surfaces
+    * the column as null in pre-change partitions instead of inferring
+    * a one-footer schema that either drops the column or fails the
+    * select.
     */
   def processBatch(batch: DataFrame, indexDir: String, ledgerDir: String,
       centroidsDir: String, batchId: Long): Long = {

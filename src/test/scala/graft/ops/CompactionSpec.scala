@@ -19,7 +19,7 @@ class CompactionSpec extends SparkSpec {
     val checksum = spark.read.parquet(dir)
       .agg(sum("id"), count(lit(1))).first()
 
-    val after = Compaction.compact(spark, dir, targetBytes = 1L << 30)
+    val (after, _) = Compaction.compact(spark, dir, targetBytes = 1L << 30)
 
     assert(after === 1) // tiny data, one target file
     assert(Compaction.dataFileCount(spark, dir) === 1)

@@ -87,4 +87,40 @@ class MergeableStoreSpec extends SparkSpec {
     val names = new File(dir).list().toSet
     assert(names === Set("_MANIFEST", "p=a", "p=b"))
   }
+
+  test("a partitioned merge reads only the partitions its batch touches") {
+    val dir = fresh()
+    val parts = Seq("p")
+    MergeableStore.publish(dir, Seq(("a", 1L), ("b", 2L)).toDF("p", "n"), parts)
+    // an untouched partition's data file goes bad: a merge that read
+    // (or inferred a schema over) every partition would fail on it
+    val bDir = new File(MergeableStore.partitionDir(dir, "p=b").get)
+    bDir.listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.write(f.toPath, "not parquet".getBytes))
+    val delta = Seq(("a", 10L), ("c", 3L)).toDF("p", "n")
+    MergeableStore.mergePartitions(spark, dir, delta.filter(lit(false)), parts, delta) { store =>
+      assert(store.select("p").as[String].collect().toSeq === Seq("a"))
+      Some(store.join(delta.withColumnRenamed("n", "d"), Seq("p"), "full_outer")
+        .select(col("p"), (coalesce(col("n"), lit(0L)) + col("d")).as("n")))
+    }
+    assert(spark.read.parquet(MergeableStore.partitionDir(dir, "p=a").get)
+      .as[Long].collect().toSeq === Seq(11L))
+    assert(spark.read.parquet(MergeableStore.partitionDir(dir, "p=c").get)
+      .as[Long].collect().toSeq === Seq(3L))
+    assert(MergeableStore.partitionDir(dir, "p=b").contains(bDir.getPath))
+  }
+
+  test("reads take the schema the manifest records: no footer job for either shape") {
+    val whole = fresh()
+    MergeableStore.publish(whole, Seq((1L, "x")).toDF("n", "s"))
+    val parted = fresh()
+    MergeableStore.publish(parted, Seq(("a", 1L), ("b", 2L)).toDF("p", "n"), Seq("p"))
+    val (frames, jobs) = org.apache.spark.sql.graft.JobProbe.jobs(spark) {
+      Seq(MergeableStore.read(spark, whole), MergeableStore.read(spark, parted))
+    }
+    assert(jobs === 0)
+    assert(frames.map(_.columns.toSeq) === Seq(Seq("n", "s"), Seq("n", "p")))
+    assert(frames(1).select("p", "n").as[(String, Long)].collect().toSet ===
+      Set(("a", 1L), ("b", 2L)))
+  }
 }

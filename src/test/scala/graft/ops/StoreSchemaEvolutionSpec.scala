@@ -7,8 +7,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The store schema-evolution contract (Fs.readStore): every
-  * self-managed parquet store reads with schema MERGING, so an
-  * added-column era never silently drops the other era's columns —
+  * self-managed parquet store reads with a schema that covers every
+  * era — merged from the footers (Fs.readStore), recorded in the
+  * store's `_MANIFEST` (MergeableStore.read) or declared by the writer
+  * (BatchLedger.readOtherBatches) — so an added-column era never
+  * silently drops the other era's columns —
   * the class of bug the round-8 VectorIngest ledger hit (a plain
   * read sampled one footer, lost the other era's column, and the
   * replay guard re-admitted duplicates). Null semantics are declared
@@ -99,7 +102,8 @@ class StoreSchemaEvolutionSpec extends SparkSpec {
   test("maintenance stores tolerate a FUTURE-era partition with an extra column") {
     // the forward direction: a newer writer adds a column to the
     // store; today's reader (fixed select list) must keep serving —
-    // readStore surfaces the union, the select ignores the rider
+    // the store reads with its manifest schema, which leaves the
+    // rider column out, and the select never names it
     val src = Files.createTempDirectory("evo_src").toString
     val store = Files.createTempDirectory("evo_store").toString + "/s"
     (0L until 1000L).map(i => (i % 10, i)).toDF("grp", "v")
@@ -122,5 +126,36 @@ class StoreSchemaEvolutionSpec extends SparkSpec {
       .probe(spark, store, keys, col("grp")).orderBy("key").collect()
     assert(after.toSeq === before.toSeq,
       "a future-era store partition broke today's serving path")
+  }
+
+  test("manifest-schema and declared-schema ledger reads over mixed eras: the added column reads null") {
+    // a partitioned store: p=a published in era 1, p=b after the
+    // writer added w; untouched p=a keeps its era-1 files
+    val store = Files.createTempDirectory("evo_manifest").toString + "/s"
+    MergeableStore.publish(store, Seq(("a", 1L)).toDF("p", "n"), Seq("p"))
+    MergeableStore.publish(store, Seq(("b", 2L, 20L)).toDF("p", "n", "w"), Seq("p"))
+    val rows = MergeableStore.read(spark, store).select("p", "n", "w")
+      .orderBy("p").collect()
+    assert(rows.map(_.getString(0)).toSeq === Seq("a", "b"))
+    assert(rows(0).isNullAt(2) && rows(1).getLong(2) === 20L)
+
+    // a whole store keeps a column an earlier version published, as null
+    val whole = Files.createTempDirectory("evo_whole").toString + "/s"
+    MergeableStore.publish(whole, Seq((1L, 10L)).toDF("n", "w"))
+    MergeableStore.publish(whole, Seq(2L).toDF("n"))
+    val w = MergeableStore.read(spark, whole).collect()
+    assert(w.length === 1 && w.head.getLong(0) === 2L && w.head.isNullAt(1))
+
+    // a batch-keyed ledger read with its writer's (era-2) schema
+    val ledger = Files.createTempDirectory("evo_ledger").toString
+    Seq(1L).toDF("h").write.parquet(s"$ledger/batch_id=0")
+    Seq((2L, 7L)).toDF("h", "extra").write.parquet(s"$ledger/batch_id=1")
+    Seq((3L, 8L)).toDF("h", "extra").write.parquet(s"$ledger/batch_id=2")
+    val read = graft.streaming.BatchLedger.readOtherBatches(spark, ledger, 2L,
+      Seq((0L, 0L)).toDF("h", "extra").schema).get
+    assert(read.columns.toSeq === Seq("h", "extra"))
+    val got = read.orderBy("h").collect()
+    assert(got.map(_.getLong(0)).toSeq === Seq(1L, 2L))
+    assert(got(0).isNullAt(1) && got(1).getLong(1) === 7L)
   }
 }

@@ -157,7 +157,7 @@ class VectorIndexSpec extends SparkSpec {
 
     // the GENERIC compactor preserves hive partition columns, so the
     // index layout needs no special-case maintenance path
-    val filesAfter = Compaction.compact(spark, dir)
+    val (filesAfter, _) = Compaction.compact(spark, dir)
     assert(filesAfter < filesBefore,
       s"compaction did not shrink: $filesBefore -> $filesAfter")
     assert(Compaction.partitionColumns(spark, dir) === Seq("bucket"),

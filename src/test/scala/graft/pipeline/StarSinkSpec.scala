@@ -75,4 +75,19 @@ class StarSinkSpec extends SparkSpec {
     val plan = factWithDate.queryExecution.executedPlan.toString()
     assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
   }
+
+  test("a failed dim write leaves no fact dir and no batch manifest") {
+    val dir = Files.createTempDirectory("star_sink_fail").toString
+    // the four dims are written together; one of them dies in its tasks
+    intercept[Exception] {
+      graft.FailingCommitProtocol.failingWritesUnder(spark, s"$dir/param_dim") {
+        StarSink.write(enriched, dir)
+      }
+    }
+    assert(!Files.exists(Paths.get(s"$dir/fact")))
+    assert(!Files.exists(Paths.get(s"$dir/_BATCH_COMPLETE")))
+    // a rerun of the batch completes it
+    assert(StarSink.write(enriched, dir).values.toSet === Set(2L))
+    assert(Files.exists(Paths.get(s"$dir/_BATCH_COMPLETE")))
+  }
 }

@@ -231,4 +231,41 @@ class CurationPipelineSpec extends SparkSpec {
     // crash-after-fold) == one batch-built sketch of the admitted set
     assertSketchConverged(dirs, expected)
   }
+
+  test("a crash with the sketch folded and the rollup not merged converges to the crash-free store") {
+    // stages 3 and 4 run together, so a crash can leave either store
+    // holding a batch the other does not
+    val base = Files.createTempDirectory("curation_half").toString
+    val crashed = CurationPipeline.Dirs(s"$base/crashed")
+    val clean = CurationPipeline.Dirs(s"$base/clean")
+    val b0 = docs((1L, famA), (2L, famB))
+    val b1 = docs((3L, perturb(famA)), (4L, famC), (5L, famD))
+    Seq(crashed, clean).foreach(CurationPipeline.processBatch(spark, b0, _, 0L))
+    CurationPipeline.processBatch(spark, b1, clean, 1L)
+
+    // batch 1 on the crashed side: ingest, near-dup and the sketch fold
+    // are durable, the rollup merge and the publish are not
+    CurationIngest.processBatch(spark, b1, crashed.curated, crashed.ledger, 1L)
+    val withText = spark.read.parquet(s"${crashed.curated}/batch_id=1")
+      .join(b1.select("doc_id", "text"), "doc_id")
+    val admitted = IncrementalNearDup.processBatch(spark,
+      withText.select("doc_id", "text"), crashed.nearDupIndex, 1L)
+    SketchMaintenance.mergeDelta(spark, crashed.sketch,
+      withText.join(admitted, Seq("doc_id"), "left_semi")
+        .join(b1.select("doc_id", "source"), "doc_id"),
+      col("source"), "b1")
+    CurationPipeline.processBatch(spark, b1, crashed, 1L) // retry
+
+    def rollup(d: CurationPipeline.Dirs) = graft.ops.MergeableStore.read(spark, d.rollup)
+      .select("hour", "event_type", "n_events", "total_value", "last_batch")
+      .collect().toSet
+    def cells(d: CurationPipeline.Dirs) =
+      SketchMaintenance.read(spark, d.sketch).collect().toSet
+    assert(rollup(clean).toSeq.map(_.getLong(2)).sum === 4L)
+    assert(rollup(crashed) === rollup(clean))
+    assert(cells(crashed) === cells(clean))
+    assert(publishedIds(clean.publish).toSet === Set(1L, 2L, 4L, 5L))
+    assert(publishedIds(crashed.publish).sorted === publishedIds(clean.publish).sorted)
+    assert(indexedIds(crashed) === indexedIds(clean))
+  }
 }
