@@ -1,9 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.storage.StorageLevel
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.ops.SparseMatVec
 
 /** Iterative graph ranking over relationship graphs a warehouse
   * already holds (entity importance for curation weighting — e.g.
@@ -34,43 +37,43 @@ object GraphOps {
     * pr(u)*w must stay under 2^63 — with scale=1e9 that holds to
     * ~10^9 nodes × weight 8, comfortably past a web-scale domain
     * graph (document the bound, don't discover it in production).
+    * Past it, both regimes throw (ANSI arithmetic in the frames,
+    * `Math.multiplyExact`/`addExact` in the kernel), never wrap.
     *
-    * Scale shape: each iteration is ONE equi-join of ranks against
-    * the edge list on `src` plus one partial-aggregated groupBy on
-    * `dst` — the canonical distributed PageRank. Edges carry their
-    * out-weight (joined once, up front) and nothing ever collects to
-    * the driver. Fixed `iters` (power iteration), so the whole run is
-    * one declarative plan; past ~10 iterations chain
-    * [[PipelineOps.connectedComponents]]'s localCheckpoint-per-round
-    * pattern to stop lineage growth.
-    *
-    * Two join regimes, gated on the measured node count (the same
-    * stats-gated idea as [[graft.ops.TableStats.broadcastIfSmall]]):
+    * Scale shape: the edge frame is cached for the call, and ONE
+    * bounded collect — the out-weight aggregate, `limit(broadcastNodes
+    * + 1)` — is both the node dictionary and the regime gate:
+    *   - node set ≤ `broadcastNodes` (the common curation case —
+    *     entities are few, edges many): the dense-vector kernel
+    *     ([[graft.ops.SparseMatVec]]). The edges are laid out once by
+    *     destination index, and each iteration is ONE shuffle-free
+    *     job: the rank vector ships as a broadcast `long[]`, each task
+    *     returns the contribution sums of its own destination range,
+    *     and the driver collects exactly n longs (the footprint of the
+    *     broadcast the planner would build anyway) and applies the
+    *     damping. The ranks come back as a frame built on the
+    *     executors from a broadcast. Nothing stays persisted and no
+    *     module state is touched, so concurrent callers are safe.
+    *     A null node key runs on the frames instead (their join
+    *     semantics for nulls are the contract).
+    *   - larger graphs: co-partitioned frames. Edges are
+    *     hash-partitioned on `src` ONCE at build (the `repartition`
+    *     below persists WITH that layout), so per-iteration joins
+    *     reuse the exchange and only the node-sized ranks side moves.
+    *     SINGLE CALLER: the layouts live in this module's release
+    *     slots until the next call.
     *   The default threshold is measurement-backed: at the sf10 probe
     *   (1.6M nodes, 110M edges) the co-partitioned regime's steady
     *   state ran 23.6 s vs 35–47 s for per-iteration 1.6M-row
     *   broadcasts, while at sf1 (160k nodes) broadcast wins — so the
     *   crossover sits below 1.6M and the default is 1M.
-    *   - node set ≤ `broadcastNodes` (the common curation case —
-    *     ranks is one row per ENTITY, edges are the big side): ranks
-    *     and contributions broadcast, and the edge cache is re-laid
-    *     out ONCE on hash(dst) — the contribution rollup's group key —
-    *     so an iteration has NO exchange at all: one broadcast-probe +
-    *     rollup stage per iteration. Without the broadcast, every
-    *     iteration shuffle-sorts the full edge frame to meet the
-    *     join's distribution (measured 3 exchanges/iteration at
-    *     sf0.1); without the dst layout, every iteration pays the
-    *     rollup exchange (measured: 5 exchanges + their AQE stage
-    *     jobs across the run).
-    *   - larger graphs: edges are hash-partitioned on `src` ONCE at
-    *     build (the `repartition` below persists WITH that layout), so
-    *     per-iteration joins reuse the exchange and only the tiny
-    *     ranks side moves.
     *
     * Dangling nodes: the node set is derived from edge SOURCES, so
     * callers passing both edge directions (the undirected/bipartite
     * case, like `q_pagerank`) have none by construction; for a truly
     * directed graph, redistribute or drop dangling mass upstream.
+    * Edges into destination-only nodes still count in their source's
+    * out-weight; their contributions leave the graph.
     *
     * @param edges (src, dst, w) directed weighted edges
     * @return (node, pr) fixed-point ranks, pr ≈ rank × scale
@@ -78,66 +81,67 @@ object GraphOps {
   def pageRank(edges: DataFrame, iters: Int,
       scale: Long = 1000000000L, broadcastNodes: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters $iters")
-    // Cache the raw edge frame: the caller's edge-building subtree
-    // (typically a fact join + pair aggregation) is the expensive
-    // part, and the returned plan embeds `iters` references to it —
-    // uncached, every iteration would re-derive it (measured: the
-    // sf0.1 order graph rebuilt lineitem⨝orders 5×). Swap-release
-    // bounds the cache at one copy across invocations.
-    val e = graft.ops.BuildOnce.swapPersist(lastEdges,
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
+    val sel = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+    SparseMatVec.tagged(edges.sparkSession.sparkContext, "graft.graph.pagerank") {
+      withCached(sel) { e =>
+        val dict = e.groupBy("src").agg(sum(col("w")).as("ow"))
+          .limit(gateRows(broadcastNodes, 1)).collect()
+        if (dict.length <= broadcastNodes && !dict.exists(_.isNullAt(0)))
+          pageRankKernel(e, dict, iters, scale)
+        else pageRankCopartitioned(e, iters, scale)
+      }
+    }
+  }
+
+  /** [[pageRank]]'s node-bounded regime: `dict` holds every source
+    * with its out-weight. */
+  private def pageRankKernel(e: DataFrame, dict: Array[Row], iters: Int,
+      scale: Long): DataFrame = {
+    val keys = dict.map(_.get(0))
+    val ow = dict.map(r => if (r.isNullAt(1)) 0L else r.getLong(1))
+    // one matrix: rows = destinations, columns = sources; a null-weight
+    // edge contributes nothing, as its null contribution would not sum
+    val layout = SparseMatVec.layout(e.rdd, Seq(keys.length), (indexOf(keys), ow)) {
+      case ((index, ow), r, emit) =>
+        val d = index.get(r.get(1))
+        if (d != null && !r.isNullAt(2)) {
+          val s: Int = index.get(r.get(0))
+          emit(0, d, s, r.getLong(2), ow(s))
+        }
+    }
+    try {
+      val base = scale * 15L / 100L
+      var pr = Array.fill(keys.length)(scale)
+      for (_ <- 1 to iters)
+        pr = layout.multiply(0, pr).map(s =>
+          Math.addExact(base, Math.multiplyExact(85L, s) / 100L))
+      SparseMatVec.frame(e.sparkSession, e.schema("src").copy(name = "node"),
+        StructField("pr", LongType), keys, pr)
+    } finally layout.release()
+  }
+
+  /** [[pageRank]]'s co-partitioned regime over the cached edge frame. */
+  private def pageRankCopartitioned(sel: DataFrame, iters: Int,
+      scale: Long): DataFrame = {
+    val e = graft.ops.BuildOnce.swapPersist(lastEdges, sel)
     // out-weights — exactly one row per node that HAS out-edges, which
-    // (sources define the node set, see below) IS the node list: so
-    // persist it, count it to pick the join regime, and derive `nodes`
-    // as a projection instead of a distinct over the edge frame. This
-    // count is the ONE eager action of the build: it materializes the
-    // edge cache and the out-weight cache in a single pass.
+    // (sources define the node set) IS the node list: so persist it,
+    // count it (materializing the cache), and derive `nodes` as a
+    // projection instead of a distinct over the edge frame.
     val outw = graft.ops.BuildOnce.swapPersist(lastNodes,
       e.groupBy("src").agg(sum(col("w")).as("ow")))
-    val small = outw.count() <= broadcastNodes
+    outw.count()
     val nodes = outw.select(col("src").as("node"))
-    // every edge must carry its source's total out-weight. Regimes:
-    //   - broadcast (node set ≤ broadcastNodes, the common curation
-    //     case): the attach is NOT materialized at all — each
-    //     iteration's map stage fuses a broadcast hash probe of the
-    //     nlist-bounded out-weight table into its scan of the cached
-    //     edge frame. Measured against both alternatives at sf0.1,
-    //     this is the fastest shape: eagerly persisting the attached
-    //     frame costs a serial build action, and LAZILY persisting it
-    //     (iteration 1 materializes) pays the 4-column cache encode of
-    //     the whole edge list — both cost more than re-probing a
-    //     16k-row broadcast five times (min 2.8 s vs 3.1/3.4 s).
-    //   - co-partitioned (larger graphs, where a per-node broadcast
-    //     would not fit): attach ONCE, pinned to hash(src) so every
-    //     per-iteration join reuses the exchange; materialized eagerly
-    //     FROM the raw edge cache, which is then released — at this
-    //     regime's scale, double-caching the edge list is real memory,
-    //     and a per-iteration re-attach would be a full shuffle each.
-    val iterFrame =
-      if (small) {
-        // re-layout the edge cache on the CONTRIBUTION GROUP key: the
-        // per-iteration join side broadcasts, so the only distribution
-        // requirement left in an iteration is groupBy(dst) — a cache
-        // pinned to hash(dst) satisfies it and the 5 per-iteration
-        // exchanges (and their AQE stage jobs) disappear outright
-        // (guide §2.4: operations keyed the same way share one
-        // exchange). One extra node-bounded-regime edge shuffle at
-        // build, amortized over every iteration; the raw copy is
-        // released once the layout exists (the attach-swap pattern).
-        val byDst = graft.ops.BuildOnce.swapPersist(lastAttached,
-          e.repartition(
-            edges.sparkSession.sessionState.conf.numShufflePartitions,
-            col("dst")))
-        byDst.count()
-        Option(lastEdges.getAndSet(null)).foreach(_.unpersist())
-        byDst.join(broadcast(outw), "src")
-      } else {
-        val attached = graft.ops.BuildOnce.swapPersist(lastAttached,
-          e.repartition(col("src")).join(outw, "src"))
-        attached.count()
-        Option(lastEdges.getAndSet(null)).foreach(_.unpersist())
-        attached
-      }
+    // every edge must carry its source's total out-weight: attach
+    // ONCE, pinned to hash(src) so every per-iteration join reuses the
+    // exchange; materialized eagerly FROM the raw edge cache, which is
+    // then released — at this regime's scale, double-caching the edge
+    // list is real memory, and a per-iteration re-attach would be a
+    // full shuffle each.
+    val attached = graft.ops.BuildOnce.swapPersist(lastAttached,
+      e.repartition(col("src")).join(outw, "src"))
+    attached.count()
+    Option(lastEdges.getAndSet(null)).foreach(_.unpersist())
     // pr as a pure BIGINT function of the previous contribution sum
     // (absent sum ⇒ 0); `div`/left-assoc precedence matches the doc'd
     // recurrence exactly — never Column./ (double division)
@@ -150,26 +154,48 @@ object GraphOps {
     // the edge list (no previous sum row ⇒ coalesce to 0 inside
     // prSql; sums for dst-only nodes simply never match a src), emit
     // the damped contribution, re-aggregate. This halves the
-    // joins/broadcasts per iteration vs materializing ranks each
-    // round; ranks reconstitutes ONCE, at the end, against the node
-    // list to reinstate zero-in-degree nodes.
+    // joins per iteration vs materializing ranks each round; ranks
+    // reconstitutes ONCE, at the end, against the node list to
+    // reinstate zero-in-degree nodes.
     var contrib: Option[DataFrame] = None
     for (_ <- 1 to iters) {
       val joined = contrib match {
         // iteration 1: every node holds exactly `scale`
-        case None => iterFrame.select(col("dst"),
+        case None => attached.select(col("dst"),
           expr(s"CAST($scale AS BIGINT) * w div ow").as("c"))
         case Some(prev) =>
-          val p = if (small) broadcast(prev) else prev
-          iterFrame.join(p, iterFrame("src") === p("node"), "left")
+          attached.join(prev, attached("src") === prev("node"), "left")
             .select(col("dst"), expr(s"$prSql * w div ow").as("c"))
       }
       contrib = Some(joined.groupBy(col("dst").as("node"))
         .agg(sum(col("c")).as("s")))
     }
-    val cFinal = contrib.map(c => if (small) broadcast(c) else c).get
-    nodes.join(cFinal, Seq("node"), "left")
+    nodes.join(contrib.get, Seq("node"), "left")
       .select(col("node"), expr(prSql).as("pr"))
+  }
+
+  /** Rows a gate collect may bring back for `sides` key sets of at
+    * most `bound` keys each: one more than fits, so a full answer
+    * proves the set is over the bound. */
+  private def gateRows(bound: Long, sides: Int): Int =
+    (math.min(math.max(bound, 0L), (Int.MaxValue - 1L) / sides) * sides + 1).toInt
+
+  /** Key → dense index, for the kernel's executors. */
+  private def indexOf(keys: Array[Any]): java.util.HashMap[Any, Integer] = {
+    val m = new java.util.HashMap[Any, Integer](keys.length * 2)
+    keys.indices.foreach(i => m.put(keys(i), i))
+    m
+  }
+
+  /** Runs `body` over `df` persisted for the call: the caller's
+    * edge-building subtree (typically a fact join + pair aggregation)
+    * is the expensive part, and both regimes read the edges more than
+    * once. A frame already cached (by the caller, or a concurrent
+    * call) is left as found. */
+  private def withCached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val own = df.storageLevel == StorageLevel.NONE
+    if (own) df.persist()
+    try body(df) finally if (own) df.unpersist()
   }
 
   /** Personalized PageRank — the same exact fixed-point power
@@ -248,12 +274,11 @@ object GraphOps {
       .select(col("node"), expr(prSql).as("pr"))
   }
 
-  /** Bounded caches for the iteration-invariant frames (one live copy
-    * each across invocations; superseded copies released on swap).
-    * `lastAttached` holds the iteration layout both regimes derive
-    * from the raw copy (small: the dst-pinned re-layout; large: the
-    * src-pinned out-weight attach); the raw slot is released once it
-    * exists. */
+  /** Bounded caches for the iteration-invariant frames of the
+    * co-partitioned pageRank and of personalizedPageRank (one live
+    * copy each across invocations; superseded copies released on
+    * swap). `lastAttached` holds the src-pinned out-weight attach; the
+    * raw slot is released once it exists. */
   private val lastEdges =
     graft.ops.BuildOnce.swapRef()
   private val lastNodes =
@@ -351,7 +376,8 @@ object GraphOps {
     * doubles. Any positive per-iteration rescale preserves the
     * ranking; L∞ additionally pins each side's leader at exactly
     * `scale`, which makes the scores directly readable as "share of
-    * the leader".
+    * the leader". Hubs score the edge sources, authorities the edge
+    * destinations; the two key columns may have different types.
     *
     * On a directed purchase graph (customer → supplier), hubs score
     * customers whose spend concentrates on authoritative suppliers
@@ -365,32 +391,41 @@ object GraphOps {
     *
     * Overflow bound: after each rescale h,a ≤ scale, so a raw sum is
     * bounded by scale · (max per-node incident WEIGHT); the rescale
-    * product itself is widened to DECIMAL(38,0) before the ×scale, so
-    * the only 64-bit budget is scale·W ≤ 2^63 — at scale=1e6 that
-    * admits ~9·10^12 incident weight per node (raise/lower the dial
-    * per graph; the [[pageRank]] bound discussion applies).
+    * product itself is widened to 128 bits (DECIMAL(38,0) in the
+    * frames) before the ×scale, so the only 64-bit budget is
+    * scale·W ≤ 2^63 — at scale=1e6 that admits ~9·10^12 incident
+    * weight per node (raise/lower the dial per graph; the
+    * [[pageRank]] bound discussion applies). Past it, both regimes
+    * throw.
     *
-    * Scale shape: two regimes, gated like [[pageRank]] on the node
-    * count; BOTH pin the same two edge hash layouts (by src and by
-    * dst — the iteration alternates keys, so a single layout would
-    * re-shuffle the edges every half-round) and the raw edge frame is
-    * never cached. Small (entity-bounded node sets — the curation
-    * case): the score frames broadcast and each layout serves its
-    * half-round's GROUP key, so a half-round is one exchange-free
-    * broadcast-probe + rollup stage and the L∞ max rides a
-    * single-partition window over the node-bounded scores — the whole
-    * run is ONE declarative plan with one nested broadcast build per
-    * half-round. Large: each layout serves its half-round's JOIN key,
-    * only the node-sized score frames move per join, and each
-    * half-round is lineage-cut (see rescale).
-    *
-    * Concurrency contract: SINGLE CALLER, like every BuildOnce-backed
-    * operator in this module — the per-half-round lineage cuts rotate
-    * a module-level slot pool (`hitsSlots`), so two concurrent
-    * `hits()` invocations would release each other's checkpointed
-    * frames mid-iteration. One pipeline session drives these
-    * operators sequentially; a multi-tenant service wraps the call in
-    * its own mutual exclusion.
+    * Scale shape: the edge frame is cached for the call, and ONE
+    * bounded collect of the src and dst key sets (at most
+    * 2·`broadcastNodes` + 1 keys) is both the node dictionary and an
+    * exact regime gate:
+    *   - both key sets ≤ `broadcastNodes` (entity-bounded node sets —
+    *     the curation case): the dense-vector kernel
+    *     ([[graft.ops.SparseMatVec]]). The edges are laid out once in
+    *     two layouts, by dst index for the a-step and by src index for
+    *     the h-step; each half-round is ONE shuffle-free job that
+    *     broadcasts the score vector, collects exactly one long per
+    *     node (the footprint of the broadcast the planner would build
+    *     anyway) and rescales on the driver. The scores come back as
+    *     frames built on the executors from a broadcast. Nothing stays
+    *     persisted and no module state is touched, so concurrent
+    *     callers are safe. A null key or weight runs on the frames
+    *     instead (their null semantics are the contract).
+    *   - larger graphs: co-partitioned frames over two pinned edge
+    *     hash layouts (by src and by dst — the iteration alternates
+    *     keys, so a single layout would re-shuffle the edges every
+    *     half-round); each layout serves its half-round's JOIN key,
+    *     only the node-sized score frames move per join, and each
+    *     half-round is lineage-cut (see rescale). Concurrency
+    *     contract: SINGLE CALLER — the lineage cuts rotate a
+    *     module-level slot pool (`hitsSlots`), so two concurrent
+    *     large-regime invocations would release each other's
+    *     checkpointed frames mid-iteration. One pipeline session
+    *     drives these operators sequentially; a multi-tenant service
+    *     wraps the call in its own mutual exclusion.
     *
     * @param edges (src, dst, w) directed weighted edges
     * @return (hubs (node, h), authorities (node, a)) fixed-point
@@ -400,49 +435,94 @@ object GraphOps {
       broadcastNodes: Long = 1000000L): (DataFrame, DataFrame) = {
     require(rounds >= 1 && rounds <= HitsMaxRounds,
       s"rounds $rounds (cache slots sized for <= $HitsMaxRounds)")
-    val nShuffle = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val sel = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+    SparseMatVec.tagged(edges.sparkSession.sparkContext, "graft.graph.hits") {
+      withCached(sel) { e =>
+        // side 0: a src key; side 1: a dst key; side 2: a dst key of a
+        // null-weight edge (sends the call to the frames)
+        val typed = (c: String) => lit(null).cast(e.schema(c).dataType)
+        val limit = gateRows(broadcastNodes, 2)
+        val keys = e.select(explode(array(
+            struct(lit(0).as("side"), col("src").as("s"), typed("dst").as("d")),
+            struct(when(col("w").isNull, lit(2)).otherwise(lit(1)).as("side"),
+              typed("src").as("s"), col("dst").as("d")))).as("k"))
+          .select("k.*").distinct().limit(limit).collect()
+        val srcKeys = keys.filter(_.getInt(0) == 0).map(_.get(1))
+        val dstKeys = keys.filter(_.getInt(0) == 1).map(_.get(2))
+        if (keys.length < limit && !keys.exists(_.getInt(0) == 2) &&
+            srcKeys.length <= broadcastNodes && dstKeys.length <= broadcastNodes &&
+            !srcKeys.contains(null) && !dstKeys.contains(null))
+          hitsKernel(e, srcKeys, dstKeys, rounds, scale)
+        else hitsCopartitioned(e, rounds, scale)
+      }
+    }
+  }
+
+  /** [[hits]]'s node-bounded regime over the exact key sets. */
+  private def hitsKernel(e: DataFrame, srcKeys: Array[Any], dstKeys: Array[Any],
+      rounds: Int, scale: Long): (DataFrame, DataFrame) = {
+    // matrix 0 (a-step): rows = dst, columns = src; matrix 1 (h-step)
+    // its transpose
+    val layout = SparseMatVec.layout(e.rdd, Seq(dstKeys.length, srcKeys.length),
+        (indexOf(srcKeys), indexOf(dstKeys))) {
+      case ((srcIndex, dstIndex), r, emit) =>
+        val s: Int = srcIndex.get(r.get(0))
+        val d: Int = dstIndex.get(r.get(1))
+        emit(0, d, s, r.getLong(2), 1L)
+        emit(1, s, d, r.getLong(2), 1L)
+    }
+    try {
+      var h = Array.fill(srcKeys.length)(scale)
+      var a = Array.empty[Long]
+      for (_ <- 1 to rounds) {
+        a = linfRescale(layout.multiply(0, h), scale)
+        h = linfRescale(layout.multiply(1, a), scale)
+      }
+      (SparseMatVec.frame(e.sparkSession, e.schema("src").copy(name = "node"),
+        StructField("h", LongType), srcKeys, h),
+        SparseMatVec.frame(e.sparkSession, e.schema("dst").copy(name = "node"),
+          StructField("a", LongType), dstKeys, a))
+    } finally layout.release()
+  }
+
+  /** x·scale div max(x) per entry, the product in 128 bits when it
+    * does not fit a long (the frames' DECIMAL(38,0) widening). */
+  private def linfRescale(x: Array[Long], scale: Long): Array[Long] =
+    if (x.isEmpty) x
+    else {
+      val mx = x.max
+      x.map { v =>
+        val lo = v * scale
+        if (Math.multiplyHigh(v, scale) == lo >> 63) lo / mx
+        else java.math.BigInteger.valueOf(v).multiply(java.math.BigInteger.valueOf(scale))
+          .divide(java.math.BigInteger.valueOf(mx)).longValueExact()
+      }
+    }
+
+  /** [[hits]]'s co-partitioned regime over the cached edge frame. */
+  private def hitsCopartitioned(sel: DataFrame, rounds: Int,
+      scale: Long): (DataFrame, DataFrame) = {
+    val nShuffle = sel.sparkSession.sessionState.conf.numShufflePartitions
     // drain the per-half-round checkpoint slots up front: a prior
-    // large-regime invocation leaves up to 2·HitsMaxRounds node-sized
-    // localCheckpoint RDDs in the slots, and a later SMALL-regime call
-    // (which never rotates them) would otherwise strand those blocks
-    // in executor storage until releaseSwapped()
+    // invocation leaves up to 2·HitsMaxRounds node-sized
+    // localCheckpoint RDDs in the slots
     hitsSlots.foreach { s =>
       Option(s.getAndSet(null)).foreach(graft.ops.BuildOnce.releaseFrame(_))
     }
-    val sel = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-    // BOTH regimes pin the same two hash layouts, so the raw edge
-    // frame is never cached at all (one fewer copy and one fewer
-    // build action than the previous raw+distinct+two-layouts shape).
-    // byDst materializes via the regime-gate count; the explicit
-    // partition count keeps AQE from advisory-coalescing the layout
-    // (a cache coalesced to one task would serialize every
-    // half-round's scan).
+    // two hash layouts, so the raw edge frame needs no cache of its
+    // own past the call. The explicit partition count keeps AQE from
+    // advisory-coalescing a layout (a cache coalesced to one task
+    // would serialize every half-round's scan). bySrc's count
+    // materializes both.
     val byDst = graft.ops.BuildOnce.swapPersist(lastHitsByDst,
       sel.repartition(nShuffle, col("dst")))
-    // approximate regime gate (HLL, ±2%): a broadcast-vs-copartition
-    // threshold needs only the magnitude, and the approx aggregate
-    // folds into the layout-materializing pass map-side — the exact
-    // distinct paid a second exchange here. Both regimes are
-    // spec-pinned result-equal, so a borderline flip is cost-only —
-    // but the broadcast regime's cost grows with node count, so the
-    // approx gate is DERATED (×0.95, ~2.5 standard errors of the HLL)
-    // to keep an underestimate near the threshold from selecting
-    // per-half-round broadcasts over a graph slightly past it.
-    val small = byDst.agg(approx_count_distinct(col("src")).as("n"))
-      .head().getLong(0) <= (broadcastNodes * 0.95).toLong
     val bySrc = graft.ops.BuildOnce.swapPersist(lastHitsBySrc,
       byDst.repartition(nShuffle, col("src")))
     bySrc.count()
-    // eA drives the a-step (join hubs ON src, group BY dst), eH the
-    // h-step (join authorities ON dst, group BY src). Small regime:
-    // the score side BROADCASTS, so each step's only distribution
-    // requirement is its GROUP key — serving that key from the cache
-    // layout deletes the per-half-round exchange (guide §2.4). Large
-    // regime: the score side SHUFFLES, so each layout serves its
-    // step's JOIN key (the previous shape; the agg exchange is the
-    // iteration's one shuffle).
-    val (eA, eH) =
-      if (small) (byDst, bySrc) else (bySrc, byDst)
+    // the score side SHUFFLES, so each layout serves its step's JOIN
+    // key: bySrc drives the a-step (join hubs ON src, group BY dst),
+    // byDst the h-step (join authorities ON dst, group BY src); the
+    // agg exchange is the iteration's one shuffle.
     // x·scale div max(x), max crossed in as a broadcast 1-row frame;
     // DECIMAL(38,0) widening makes the product wrap-proof (see bound).
     // The pre-rescale frame is LINEAGE-CUT (eager localCheckpoint,
@@ -457,73 +537,41 @@ object GraphOps {
     // per-round pattern. Slots release the previous invocation's
     // blocks via the LogicalRDD reach-through in releaseFrame.
     var slot = 0
-    def rescale(raw0: DataFrame, c: String, cut: Boolean = true): DataFrame =
-      if (small) {
-        // node-bounded regime (≤ broadcastNodes rows by the gate): the
-        // L∞ max rides a single-partition window instead of the
-        // checkpoint + max-agg + crossJoin — the pre-rescale frame is
-        // then referenced ONCE, so the plan stays a LINEAR chain (the
-        // eager checkpoint existed to stop the double-reference
-        // exponential blowup documented below) and the whole run fuses
-        // into one declarative plan: no per-half-round checkpoint/max
-        // jobs, just one nested broadcast build per half-round. The
-        // single-partition window is the bounded registry-frame class
-        // (the QuantileSketch.levelMeta contract), never data-sized.
-        raw0.withColumn("mx", max(col(c)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy()))
-          .select(col("node"),
-            expr(s"cast($c as decimal(38,0)) * $scale div mx").as(c))
-      } else {
-        // ONE eager lineage cut per ROUND, not per half-round: the a
-        // half-round (cut = false) lazy-persists instead — the h
-        // half-round's checkpoint job then executes the a frame ONCE
-        // (its broadcast-max build populates the cache, the crossJoin
-        // probe reads it back), and the plan between cuts stays
-        // bounded because the persisted a appears exactly twice in
-        // the h frame being cut. Same storage retention as two
-        // checkpoints (both frames ride the same rotating slots);
-        // one fewer eager job + lineage conversion per round.
-        val raw = if (cut) raw0.localCheckpoint(true)
-          else raw0.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Option(hitsSlots(slot).getAndSet(raw))
-          .foreach(graft.ops.BuildOnce.releaseFrame(_))
-        slot += 1
-        val m = raw.agg(max(col(c)).as("mx"))
-        raw.crossJoin(broadcast(m))
-          .select(col("node"),
-            expr(s"cast($c as decimal(38,0)) * $scale div mx").as(c))
-      }
+    def rescale(raw0: DataFrame, c: String, cut: Boolean = true): DataFrame = {
+      // ONE eager lineage cut per ROUND, not per half-round: the a
+      // half-round (cut = false) lazy-persists instead — the h
+      // half-round's checkpoint job then executes the a frame ONCE
+      // (its broadcast-max build populates the cache, the crossJoin
+      // probe reads it back), and the plan between cuts stays
+      // bounded because the persisted a appears exactly twice in
+      // the h frame being cut. Same storage retention as two
+      // checkpoints (both frames ride the same rotating slots);
+      // one fewer eager job + lineage conversion per round.
+      val raw = if (cut) raw0.localCheckpoint(true)
+        else raw0.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Option(hitsSlots(slot).getAndSet(raw))
+        .foreach(graft.ops.BuildOnce.releaseFrame(_))
+      slot += 1
+      val m = raw.agg(max(col(c)).as("mx"))
+      raw.crossJoin(broadcast(m))
+        .select(col("node"),
+          expr(s"cast($c as decimal(38,0)) * $scale div mx").as(c))
+    }
     // initial hubs from the SRC-pinned layout: hash(src) satisfies the
-    // distinct's clustering, so h₀ plans without an exchange in both
-    // regimes (eA is the dst layout in the small regime)
+    // distinct's clustering, so h₀ plans without an exchange
     var h = bySrc.select(col("src").as("hn")).distinct()
       .withColumn("h", lit(scale))
     var a: DataFrame = null
-    for (r <- 1 to rounds) {
-      val hSide = if (small) broadcast(h) else h
+    for (_ <- 1 to rounds) {
       a = rescale(
-        eA.join(hSide, col("src") === col("hn"))
+        bySrc.join(h, col("src") === col("hn"))
           .groupBy(col("dst").as("node"))
           .agg(sum(expr("h * w")).as("a")), "a", cut = false)
         .withColumnRenamed("node", "an")
         .withColumnRenamed("a", "a_")
-      // the FINAL authorities frame has TWO consumers — the returned
-      // frame and the last hub half-round's join side — and in the
-      // fused small regime both would re-execute the whole nested
-      // chain (measured: ~duplicate job pairs through the run). One
-      // node-bounded persist + count materializes it once; the cache
-      // then serves the subtree inside h's plan too (CacheManager
-      // replaces matching subtrees). Large regime already cuts every
-      // half-round, so nothing to share there.
-      if (small && r == rounds) {
-        val aCached = graft.ops.BuildOnce.swapPersist(lastHitsFinalA, a)
-        aCached.count()
-        a = aCached
-      }
-      val aSide = if (small) broadcast(a) else a
       h = rescale(
-        eH.join(aSide, col("dst") === col("an"))
+        byDst.join(a, col("dst") === col("an"))
           .groupBy(col("src").as("node"))
           .agg(sum(expr("a_ * w")).as("h")), "h")
         .withColumnRenamed("node", "hn")
@@ -536,12 +584,11 @@ object GraphOps {
     graft.ops.BuildOnce.swapRef()
   private val lastHitsByDst =
     graft.ops.BuildOnce.swapRef()
-  private val lastHitsFinalA =
-    graft.ops.BuildOnce.swapRef()
 
-  /** One persisted slot per HITS half-round (see rescale); a fixed
-    * pool because swapRef() registers into the global release hook —
-    * per-call allocation would grow the registry unboundedly. */
+  /** One persisted slot per co-partitioned HITS half-round (see
+    * rescale); a fixed pool because swapRef() registers into the
+    * global release hook — per-call allocation would grow the
+    * registry unboundedly. */
   private val HitsMaxRounds = 8
   private val hitsSlots =
     IndexedSeq.fill(2 * HitsMaxRounds)(graft.ops.BuildOnce.swapRef())

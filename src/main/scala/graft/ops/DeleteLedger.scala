@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Merge-on-read deletes: a key-addressed delete LEDGER beside the
   * data instead of rewriting data files per delete — the lakehouse
@@ -117,7 +118,7 @@ object DeleteLedger {
   def create(spark: SparkSession, base: String, df: DataFrame,
       layout: Option[Layout.Spec] = None): Unit = {
     new File(base).mkdirs()
-    MergeableStore.commitNext(base) { dir =>
+    MergeableStore.commitNext(base, df.schema) { dir =>
       layout match {
         case Some(spec) =>
           Layout.write(df, dir, spec)
@@ -194,7 +195,7 @@ object DeleteLedger {
   def upsert(spark: SparkSession, base: String, rows: DataFrame,
       pk: String, batchId: String, seq: Long): Unit = {
     require(batchId.nonEmpty, "empty batchId")
-    val dataCols = spark.read.parquet(dataDir(base)).columns.toSeq
+    val dataCols = MergeableStore.read(spark, base).columns.toSeq
     require(rows.columns.toSet == dataCols.toSet,
       s"upsert schema ${rows.columns.sorted.mkString(",")} != table " +
         s"schema ${dataCols.sorted.mkString(",")}")
@@ -233,7 +234,8 @@ object DeleteLedger {
     * plans equal — production callers take the default. */
   def read(spark: SparkSession, base: String, pk: String,
       maxBroadcast: Long = BroadcastDeleteRows): DataFrame = {
-    val data = spark.read.parquet(dataDir(base))
+    // the current version, read with the schema its commit recorded
+    val data = MergeableStore.read(spark, base)
     val dels = deletedKeys(spark, base, pk)
     val winners = upsertWinners(spark, base, pk)
     def anti(left: DataFrame, keys: DataFrame): DataFrame = {
@@ -274,7 +276,7 @@ object DeleteLedger {
       layout: Option[Layout.Spec] = None,
       maxBroadcast: Long = BroadcastDeleteRows): Int = {
     val live = read(spark, base, pk, maxBroadcast)
-    val next = MergeableStore.commitNext(base) { dir =>
+    val next = MergeableStore.commitNext(base, live.schema) { dir =>
       layout.orElse(declaredLayout(base)) match {
         case Some(spec) => Layout.write(live, dir, spec)
         case None => live.write.parquet(dir)
@@ -334,26 +336,26 @@ object DeleteLedger {
     * composition — foreachBatch delivers at-least-once with a stable
     * batch id, and [[delete]]'s dynamic-partition overwrite makes a
     * replayed id rewrite its own partition instead of duplicating.
-    * `keyExpr` is a SQL expression over the feed's columns producing
-    * the table's pk. */
-  def start(spark: SparkSession, feedDir: String, base: String,
-      keyExpr: String): org.apache.spark.sql.streaming.StreamingQuery =
-    MergeableStore.stream(spark, feedDir, s"$base/__delete_checkpoint") {
+    * `keyExpr` is a SQL expression over the feed's columns (`schema`,
+    * the feed files' row shape) producing the table's pk. */
+  def start(spark: SparkSession, feedDir: String, schema: StructType,
+      base: String, keyExpr: String): org.apache.spark.sql.streaming.StreamingQuery =
+    MergeableStore.stream(spark, feedDir, schema, s"$base/__delete_checkpoint") {
       (batch, id) => delete(batch.sparkSession, base,
         batch.select(expr(keyExpr).as("pk")), s"s$id")
     }
 
   /** Streaming twin for the UPSERT feed (the CDC-update side of the
-    * mutation story): full-table-schema row batches from `feedDir`
-    * fold into the upsert ledger. The micro-batch id serves as BOTH
+    * mutation story): full-table-schema row batches (`schema`) from
+    * `feedDir` fold into the upsert ledger. The micro-batch id serves as BOTH
     * the idempotency key (a replayed id overwrites its own partition)
     * and the window sequence — checkpointed micro-batch ids are
     * monotone, so later feed files win later, which is exactly the
     * latest-wins contract [[upsert]] documents. Exactly-once by the
     * same composition as the delete feed. */
-  def startUpserts(spark: SparkSession, feedDir: String, base: String,
-      pk: String): org.apache.spark.sql.streaming.StreamingQuery =
-    MergeableStore.stream(spark, feedDir, s"$base/__upsert_checkpoint") {
+  def startUpserts(spark: SparkSession, feedDir: String, schema: StructType,
+      base: String, pk: String): org.apache.spark.sql.streaming.StreamingQuery =
+    MergeableStore.stream(spark, feedDir, schema, s"$base/__upsert_checkpoint") {
       (batch, id) => upsert(batch.sparkSession, base, batch, pk, s"u$id", seq = id)
     }
 }

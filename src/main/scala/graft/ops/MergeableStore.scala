@@ -65,9 +65,10 @@ object MergeableStore {
     * otherwise `parts` maps each live partition path to its version.
     * `schema` is the read schema: the union of every schema published
     * so far (so an older era's files read a later column as null, the
-    * `mergeSchema` semantics, without a footer job per read). None only
-    * for versions written through [[commitNext]] or before the schema
-    * was recorded for the whole shape; those read with `mergeSchema`. */
+    * `mergeSchema` semantics, without a footer job per read); for a
+    * [[commitNext]] version, the schema it was written with. None only
+    * in manifests written before schemas were recorded; those read
+    * with `mergeSchema`. */
   private final case class Manifest(version: Long, partitionBy: Seq[String] = Nil,
       schema: Option[StructType] = None, parts: Map[String, Long] = Map.empty) {
     def render: String = (Seq(s"version $version") ++
@@ -221,12 +222,13 @@ object MergeableStore {
 
   /** Write the next whole-store version through `write` (handed the
     * fresh dir, cleared of any crashed attempt's orphan) and flip the
-    * pointer to it. Superseded versions stay — [[publish]] collects
+    * pointer to it, recording `schema` (the written frame's) as the
+    * read schema. Superseded versions stay — [[publish]] collects
     * them; [[DeleteLedger]] keeps them for time travel. */
-  def commitNext(dir: String)(write: String => Unit): Long = {
+  def commitNext(dir: String, schema: StructType)(write: String => Unit): Long = {
     val next = version(dir) + 1
     writeVersion(dir, next)(write)
-    flip(dir, Manifest(next))
+    flip(dir, Manifest(next, schema = Some(unionSchema(None, schema))))
     next
   }
 
@@ -306,12 +308,15 @@ object MergeableStore {
   /** The file-stream wiring every maintainer shares: one micro-batch
     * per arriving source file, AvailableNow (drain and exit), the
     * checkpoint at `checkpoint` (by convention the store's
-    * `-__checkpoint` sibling). `prepare` shapes the stream (e.g. a
-    * watermarked aggregation, with `outputMode` "update"). */
-  def stream(spark: SparkSession, sourceDir: String, checkpoint: String,
-      prepare: DataFrame => DataFrame = identity, outputMode: String = "append")(
-      fold: (DataFrame, Long) => Unit): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
+    * `-__checkpoint` sibling). `schema` is the source files' row shape
+    * as their writer produces it: declared by the caller, because
+    * inferring it from the footers costs a job on every start.
+    * `prepare` shapes the stream (e.g. a watermarked aggregation, with
+    * `outputMode` "update"). */
+  def stream(spark: SparkSession, sourceDir: String, schema: StructType,
+      checkpoint: String, prepare: DataFrame => DataFrame = identity,
+      outputMode: String = "append")(
+      fold: (DataFrame, Long) => Unit): StreamingQuery =
     prepare(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(sourceDir))
@@ -321,5 +326,4 @@ object MergeableStore {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 }

@@ -63,8 +63,10 @@ object StorageJob {
       zonemapCols: Seq[String] = Nil,
       feedKeyExpr: String = ""): Map[String, Long] = {
     // 1. drain the delete feed (no-op when the feed dir is empty)
+    // (the feed's row shape is the operator's — `feedKeyExpr` may read
+    // any of its columns — so it is read from the footers, once a slot)
     if (Fs.hasCommittedParquet(new java.io.File(feedDir)))
-      DeleteLedger.start(spark, feedDir, base,
+      DeleteLedger.start(spark, feedDir, spark.read.parquet(feedDir).schema, base,
         if (feedKeyExpr.nonEmpty) feedKeyExpr else pk).awaitTermination()
 
     // 2. measured compaction gate: pending ops (deletes + upserts)

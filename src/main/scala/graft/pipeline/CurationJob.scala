@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.CurationPipeline
 
@@ -42,6 +43,11 @@ object CurationJob {
     spark.stop()
   }
 
+  /** The landing files' row shape: the document columns the pipeline
+    * reads (a landing file may carry more; those are not read). */
+  val Documents: StructType =
+    StructType.fromDDL("doc_id bigint, text string, lang string, source string")
+
   /** Library entry (testable without spark-submit). Returns the
     * durable outcome counts, read back from the stores the pipeline
     * committed — not from in-flight state — so a caller sees exactly
@@ -49,7 +55,7 @@ object CurationJob {
   def run(spark: SparkSession, sourceDir: String, baseDir: String,
       tau: Double = 0.5): Map[String, Long] = {
     val dirs = CurationPipeline.Dirs(baseDir)
-    CurationPipeline.start(spark, sourceDir, dirs, tau).awaitTermination()
+    CurationPipeline.start(spark, sourceDir, Documents, dirs, tau).awaitTermination()
     val publishedBatches = Option(new java.io.File(dirs.publish).listFiles())
       .toSeq.flatten
       .count(d => d.isDirectory && d.getName.startsWith("batch_id=") &&

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.MergeableStore
 
@@ -108,9 +109,10 @@ object CdcMaintenance {
 
   /** Start maintaining `storeDir` from the parquet changelog stream at
     * `sourceDir` (schema: keys ++ payload ++ op/seq). */
-  def start(spark: SparkSession, sourceDir: String, storeDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      storeDir: String,
       keys: Seq[String], buckets: Int): StreamingQuery =
-    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+    MergeableStore.stream(spark, sourceDir, schema, s"$storeDir-__checkpoint") {
       (batch, _) => mergeBatch(batch.sparkSession, storeDir, batch, keys, buckets)
     }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.MergeableStore
 
@@ -74,9 +75,10 @@ object ChecksumMaintenance {
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`.
     * `colNames` resolve against each micro-batch. */
-  def start(spark: SparkSession, sourceDir: String, storeDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      storeDir: String,
       colNames: Seq[String]): StreamingQuery =
-    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+    MergeableStore.stream(spark, sourceDir, schema, s"$storeDir-__checkpoint") {
       (batch, id) => mergeDelta(batch.sparkSession, storeDir, batch,
         colNames.map(col), s"b$id")
     }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ext.PipelineOps
 
@@ -74,9 +75,10 @@ object CurationIngest {
   /** File-stream ingest over a parquet directory (AvailableNow for
     * replay harnesses; a production run would use a continuous
     * trigger). */
-  def start(spark: SparkSession, sourceDir: String, outDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      outDir: String,
       ledgerDir: String): StreamingQuery =
-    graft.ops.MergeableStore.stream(spark, sourceDir, s"$outDir-__checkpoint") {
+    graft.ops.MergeableStore.stream(spark, sourceDir, schema, s"$outDir-__checkpoint") {
       (batch, batchId) => processBatch(spark, batch, outDir, ledgerDir, batchId)
     }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.{Fs, MergeableStore}
 
@@ -133,9 +134,10 @@ object CurationPipeline {
     * (AvailableNow for replay harnesses). Restart-safe: a new start()
     * on the same checkpoint resumes at the first uncommitted epoch and
     * replays it through the idempotent [[processBatch]]. */
-  def start(spark: SparkSession, sourceDir: String, dirs: Dirs,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      dirs: Dirs,
       tau: Double = 0.5): StreamingQuery =
-    graft.ops.MergeableStore.stream(spark, sourceDir, dirs.checkpoint) {
+    graft.ops.MergeableStore.stream(spark, sourceDir, schema, dirs.checkpoint) {
       (batch, batchId) => processBatch(spark, batch, dirs, batchId, tau)
     }
 }

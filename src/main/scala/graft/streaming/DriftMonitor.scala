@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming distribution-drift monitor COMPOSED from the maintained
   * stores: two [[HistogramMaintenance]] equi-width histograms (a
@@ -93,12 +94,13 @@ object DriftMonitor {
     * `alertDir` (hive-partitioned by batch; replay rewrites in
     * place). `splitCol` routes rows: value `refValue` → store A
     * (reference), everything else → store B (current). */
-  def start(spark: SparkSession, sourceDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
       storeA: String, storeB: String, alertDir: String,
       splitCol: String, refValue: String, valueName: String,
       lo: Long, width: Long, buckets: Int,
       thrPermille: Long): StreamingQuery =
-    graft.ops.MergeableStore.stream(spark, sourceDir, s"$alertDir-__checkpoint") {
+    graft.ops.MergeableStore.stream(spark, sourceDir, schema,
+        s"$alertDir-__checkpoint") {
       (batch, id) =>
         val s = batch.sparkSession
         HistogramMaintenance.mergeDelta(s, storeA,

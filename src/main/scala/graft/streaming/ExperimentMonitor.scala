@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming experiment readout COMPOSED from the maintained stores —
   * the streamed twin of the batch `q_ab_test`: a [[CdcMaintenance]]
@@ -99,9 +100,11 @@ object ExperimentMonitor {
   /** Maintain the conversion store from the parquet events stream at
     * `sourceDir` and append one cumulative alert row per micro-batch
     * to `alertDir`. */
-  def start(spark: SparkSession, sourceDir: String, storeDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      storeDir: String,
       alertDir: String): StreamingQuery =
-    graft.ops.MergeableStore.stream(spark, sourceDir, s"$alertDir-__checkpoint") {
+    graft.ops.MergeableStore.stream(spark, sourceDir, schema,
+        s"$alertDir-__checkpoint") {
       (batch, id) =>
         val s = batch.sparkSession
         CdcMaintenance.mergeBatch(s, storeDir,

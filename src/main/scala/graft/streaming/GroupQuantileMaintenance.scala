@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.{MergeableStore, QuantileSketch}
 import graft.ops.QuantileSketch.QSketch
@@ -255,10 +256,11 @@ object GroupQuantileMaintenance {
     * `gExpr`/`vExpr`/`keyExpr` are SQL expressions over the source
     * columns producing the group, sketched value, and unique hash
     * key. */
-  def start(spark: SparkSession, sourceDir: String, storeDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      storeDir: String,
       gExpr: String, vExpr: String, keyExpr: String,
       k: Int = QuantileSketch.DefaultK): StreamingQuery =
-    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+    MergeableStore.stream(spark, sourceDir, schema, s"$storeDir-__checkpoint") {
       (batch, id) =>
         val rows = batch.select(
           expr(gExpr).cast("string").as("g"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.MergeableStore
 
@@ -125,10 +126,11 @@ object HistogramMaintenance {
     MergeableStore.read(spark, storeDir)
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`. */
-  def start(spark: SparkSession, sourceDir: String, storeDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      storeDir: String,
       valueName: String, lo: Long, width: Long,
       buckets: Int): StreamingQuery =
-    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+    MergeableStore.stream(spark, sourceDir, schema, s"$storeDir-__checkpoint") {
       (batch, id) => mergeDelta(batch.sparkSession, storeDir, batch,
         col(valueName), lo, width, buckets, s"b$id")
     }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.MergeableStore
 
@@ -99,9 +100,10 @@ object HllMaintenance {
     }
 
   /** Maintain `storeDir` from the parquet stream at `sourceDir`. */
-  def start(spark: SparkSession, sourceDir: String, storeDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      storeDir: String,
       grpName: String, keyName: String): StreamingQuery =
-    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint") {
+    MergeableStore.stream(spark, sourceDir, schema, s"$storeDir-__checkpoint") {
       (batch, id) => mergeDelta(batch.sparkSession, storeDir, batch,
         col(grpName), col(keyName), s"b$id")
     }

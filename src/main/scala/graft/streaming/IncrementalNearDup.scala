@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ext.DedupFunctions
 import graft.functions.SigAgreement
@@ -123,9 +124,11 @@ object IncrementalNearDup {
   }
 
   /** File-stream form over a parquet directory of documents. */
-  def start(spark: SparkSession, sourceDir: String, indexDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      indexDir: String,
       admittedDir: String, tau: Double = 0.5): StreamingQuery =
-    graft.ops.MergeableStore.stream(spark, sourceDir, s"$indexDir-__checkpoint") {
+    graft.ops.MergeableStore.stream(spark, sourceDir, schema,
+        s"$indexDir-__checkpoint") {
       (batch, batchId) =>
         processBatch(spark, batch, indexDir, batchId, tau)
           .write.mode(SaveMode.Overwrite)

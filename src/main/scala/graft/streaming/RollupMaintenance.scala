@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.MergeableStore
 
@@ -122,9 +123,10 @@ object RollupMaintenance {
 
   /** Start maintaining `storeDir` from the parquet event stream at
     * `sourceDir`. */
-  def start(spark: SparkSession, sourceDir: String, storeDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      storeDir: String,
       watermark: String = "2 hours"): StreamingQuery =
-    MergeableStore.stream(spark, sourceDir, s"$storeDir-__checkpoint",
+    MergeableStore.stream(spark, sourceDir, schema, s"$storeDir-__checkpoint",
         src => rollupShape(src.withWatermark("ts", watermark)),
         outputMode = "update") { // emit only changed groups per batch
       (batch, _) => upsertBatch(batch, storeDir)

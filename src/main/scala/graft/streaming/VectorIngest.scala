@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.{Fs, VectorIndex}
 
@@ -103,9 +104,11 @@ object VectorIngest {
     * the testdata column names ((vec_id, embedding) → (vec_id, v));
     * the float→double widening matches the batch index pipeline, so
     * the streamed layout is bit-comparable to a one-shot build. */
-  def start(spark: SparkSession, sourceDir: String, indexDir: String,
+  def start(spark: SparkSession, sourceDir: String, schema: StructType,
+      indexDir: String,
       ledgerDir: String, centroidsDir: String): StreamingQuery =
-    graft.ops.MergeableStore.stream(spark, sourceDir, s"$indexDir-__checkpoint") {
+    graft.ops.MergeableStore.stream(spark, sourceDir, schema,
+        s"$indexDir-__checkpoint") {
       (batch, batchId) =>
         processBatch(
           batch.select(col("vec_id"),

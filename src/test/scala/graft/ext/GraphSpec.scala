@@ -340,6 +340,155 @@ class GraphSpec extends SparkSpec {
     assert(hub.map(_._3).distinct.size > 1)
   }
 
+  /** Plain-Scala HITS: the max-normalized recurrence in BigInt. */
+  private def hitsReference[K](raw: Seq[(K, K, Long)], rounds: Int,
+      scale: Long): (Map[K, Long], Map[K, Long]) = {
+    var h = raw.map(_._1).distinct.map(_ -> BigInt(scale)).toMap
+    var a = Map.empty[K, BigInt]
+    for (_ <- 1 to rounds) {
+      val ar = raw.groupBy(_._2).map { case (v, es) =>
+        v -> es.map { case (u, _, w) => h(u) * w }.sum }
+      a = ar.map { case (v, x) => v -> x * scale / ar.values.max }
+      val hr = raw.groupBy(_._1).map { case (u, es) =>
+        u -> es.map { case (_, v, w) => a(v) * w }.sum }
+      h = hr.map { case (u, x) => u -> x * scale / hr.values.max }
+    }
+    (h.map { case (k, v) => k -> v.toLong }, a.map { case (k, v) => k -> v.toLong })
+  }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def causedByOverflow(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(c =>
+      c.isInstanceOf[ArithmeticException] ||
+        String.valueOf(c.getMessage).toLowerCase.contains("overflow"))
+
+  test("hits: seeded random graphs agree across the kernel, co-partitioned and reference") {
+    // multi-edges, self-loops, nodes that are both src and dst, and
+    // dst-only / src-only nodes; both regimes must equal the BigInt
+    // replication exactly, with the same output schemas
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 5) {
+      val n = 4 + rnd.nextInt(8)
+      val raw = Seq.fill(15 + rnd.nextInt(25))(
+        (rnd.nextInt(n).toLong, rnd.nextInt(n + 3).toLong, 1L + rnd.nextInt(9)))
+      val rounds = 1 + rnd.nextInt(4)
+      val df = raw.toDF("src", "dst", "w")
+      val (hK, aK) = GraphOps.hits(df, rounds)
+      val (hL, aL) = GraphOps.hits(df, rounds, broadcastNodes = 0L)
+      val (wantH, wantA) = hitsReference(raw, rounds, 1000000L)
+      val msg = s"trial $trial: n=$n rounds=$rounds"
+      assert(hK.as[(Long, Long)].collect().toMap === wantH, msg)
+      assert(aK.as[(Long, Long)].collect().toMap === wantA, msg)
+      assert(hL.as[(Long, Long)].collect().toMap === wantH, msg)
+      assert(aL.as[(Long, Long)].collect().toMap === wantA, msg)
+      assert(hK.schema === hL.schema && aK.schema === aL.schema, msg)
+    }
+  }
+
+  test("hits: string keys, and src and dst key types of their own") {
+    val raw = Seq(("u1", "s1", 3L), ("u1", "s2", 1L), ("u2", "s1", 2L),
+      ("u3", "s3", 5L), ("s1", "u1", 1L), ("u2", "s2", 4L))
+    val (h, a) = GraphOps.hits(raw.toDF("src", "dst", "w"), rounds = 3)
+    val (wantH, wantA) = hitsReference(raw, 3, 1000000L)
+    assert(h.as[(String, Long)].collect().toMap === wantH)
+    assert(a.as[(String, Long)].collect().toMap === wantA)
+    // customer ids as longs, supplier labels as strings
+    val mixed = Seq((1L, "s1", 2L), (1L, "s2", 1L), (2L, "s2", 3L))
+    val (hm, am) = GraphOps.hits(mixed.toDF("src", "dst", "w"), rounds = 2)
+    val (mh, ma) = hitsReference(mixed, 2, 1000000L)
+    assert(hm.as[(Long, Long)].collect().toMap === mh)
+    assert(am.as[(String, Long)].collect().toMap === ma)
+  }
+
+  test("the node-count gate: broadcastNodes = n and n - 1 agree") {
+    // pageRank counts its sources, HITS the larger of its src and dst
+    // sets; one node past the bound selects the co-partitioned regime,
+    // which pins its layouts in the module's release slots (the
+    // kernel leaves nothing persisted)
+    val pr = Seq(("a", "b", 3L), ("b", "c", 2L), ("c", "a", 1L),
+      ("c", "d", 5L), ("e", "a", 4L)).toDF("src", "dst", "w")
+    val before = persisted
+    val atBound = GraphOps.pageRank(pr, 4, broadcastNodes = 4L)
+    val atRanks = atBound.as[(String, Long)].collect().toMap
+    assert(persisted === before, "n = bound must run the kernel")
+    val past = GraphOps.pageRank(pr, 4, broadcastNodes = 3L)
+    val pastRanks = past.as[(String, Long)].collect().toMap
+    assert(persisted !== before, "n = bound + 1 must run co-partitioned")
+    assert(atRanks === pastRanks)
+    assert(atBound.schema === past.schema)
+    graft.ops.BuildOnce.releaseSwapped()
+
+    val hraw = Seq((0L, 1L, 3L), (0L, 3L, 1L), (2L, 1L, 2L), (2L, 5L, 1L),
+      (4L, 7L, 1L), (4L, 3L, 2L)) // 3 sources, 4 destinations
+    val hdf = hraw.toDF("src", "dst", "w")
+    val beforeH = persisted
+    val hAt = GraphOps.hits(hdf, 3, broadcastNodes = 4L)
+    val atH = (hAt._1.as[(Long, Long)].collect().toMap, hAt._2.as[(Long, Long)].collect().toMap)
+    assert(persisted === beforeH, "max(|src|, |dst|) = bound must run the kernel")
+    val hPast = GraphOps.hits(hdf, 3, broadcastNodes = 3L)
+    val pastH = (hPast._1.as[(Long, Long)].collect().toMap, hPast._2.as[(Long, Long)].collect().toMap)
+    assert(persisted !== beforeH, "one node past the bound must run co-partitioned")
+    assert(atH === pastH)
+    assert(atH === hitsReference(hraw, 3, 1000000L))
+    graft.ops.BuildOnce.releaseSwapped()
+  }
+
+  test("fixed-point overflow throws in both regimes") {
+    // out-weights fit a long, but scale · w does not: the first
+    // contribution product must fail loudly, never wrap
+    val big = 1L << 40
+    val pr = Seq(("a", "b", big), ("b", "a", big)).toDF("src", "dst", "w")
+    for (bn <- Seq(1000000L, 0L)) {
+      val e = intercept[Exception](GraphOps.pageRank(pr, 3, broadcastNodes = bn).collect())
+      assert(causedByOverflow(e), s"pageRank broadcastNodes=$bn: $e")
+    }
+    val hd = Seq((1L, 2L, 1L << 44), (3L, 2L, 1L)).toDF("src", "dst", "w")
+    for (bn <- Seq(1000000L, 0L)) {
+      val e = intercept[Exception] {
+        val (h, a) = GraphOps.hits(hd, 2, broadcastNodes = bn)
+        h.collect(); a.collect()
+      }
+      assert(causedByOverflow(e), s"hits broadcastNodes=$bn: $e")
+    }
+    graft.ops.BuildOnce.releaseSwapped()
+  }
+
+  test("node-bounded pageRank and hits leave the persisted RDDs as they found them") {
+    val raw = Seq((0L, 1L, 3L), (1L, 2L, 2L), (2L, 0L, 1L), (2L, 3L, 5L),
+      (3L, 1L, 1L)).toDF("src", "dst", "w")
+    val before = persisted
+    val pr = GraphOps.pageRank(raw, 4)
+    val (h, a) = GraphOps.hits(raw, 3)
+    assert(persisted === before)
+    pr.collect(); h.collect(); a.collect()
+    assert(persisted === before)
+    // a caller's own cache of the edge frame survives the call
+    val cached = raw.select(col("src"), col("dst"), col("w").cast("long").as("w")).persist()
+    try {
+      cached.count()
+      GraphOps.pageRank(raw, 2).collect()
+      assert(cached.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+    } finally cached.unpersist()
+  }
+
+  test("concurrent node-bounded calls are bit-equal to serial runs") {
+    val rnd = new scala.util.Random(11)
+    def graph(n: Int) = Seq.fill(40)(
+      (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong, 1L + rnd.nextInt(5)))
+    val g1 = graph(12).toDF("src", "dst", "w")
+    val g2 = graph(9).toDF("src", "dst", "w")
+    def rank() = GraphOps.pageRank(g1, 5).as[(Long, Long)].collect().toMap
+    def hubs() = {
+      val (h, a) = GraphOps.hits(g2, 3)
+      (h.as[(Long, Long)].collect().toMap, a.as[(Long, Long)].collect().toMap)
+    }
+    val serial = Seq(rank(), hubs(), rank(), hubs())
+    val together = graft.ops.Concurrent.all(
+      () => rank(), () => hubs(), () => rank(), () => hubs())
+    assert(together === serial)
+  }
+
   test("personalized ranks replay bit-for-bit against a reference") {
     val raw = Seq(
       ("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L), ("c", "a", 1L),

@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
@@ -18,6 +19,8 @@ class DeleteLedgerSpec extends SparkSpec {
     DeleteLedger.create(spark, base, df)
     (base, df)
   }
+
+  private val feedSchema = StructType.fromDDL("user_pk bigint")
 
   private def liveSet(base: String, maxBroadcast: Long = DeleteLedger.BroadcastDeleteRows) =
     DeleteLedger.read(spark, base, "pk", maxBroadcast).collect().toSet
@@ -133,12 +136,12 @@ class DeleteLedgerSpec extends SparkSpec {
 
     writeFeed(0L until 100L)
     writeFeed(100L until 150L)
-    DeleteLedger.start(spark, feed, base, "user_pk").awaitTermination()
+    DeleteLedger.start(spark, feed, feedSchema, base, "user_pk").awaitTermination()
     assert(liveSet(base) === df.filter(col("pk") >= 150L).collect().toSet)
 
     // restart with one more feed file: only it is ingested
     writeFeed(Seq(200L, 201L))
-    DeleteLedger.start(spark, feed, base, "user_pk").awaitTermination()
+    DeleteLedger.start(spark, feed, feedSchema, base, "user_pk").awaitTermination()
     assert(liveSet(base) ===
       df.filter(col("pk") >= 150L && !col("pk").isin(200L, 201L))
         .collect().toSet)
@@ -160,7 +163,7 @@ class DeleteLedgerSpec extends SparkSpec {
     val feed = Files.createTempDirectory("dl_mixed_feed").toString
     (500L until 600L).toDF("user_pk").coalesce(1)
       .write.mode("append").parquet(feed)
-    DeleteLedger.start(spark, feed, base, "user_pk").awaitTermination()
+    DeleteLedger.start(spark, feed, feedSchema, base, "user_pk").awaitTermination()
 
     assert(liveSet(base) ===
       df.filter(col("pk") >= 100L && !(col("pk") >= 500L && col("pk") < 600L))
@@ -339,10 +342,10 @@ class DeleteLedgerSpec extends SparkSpec {
     // later micro-batch must win on the overlap
     writeFeed(df.filter(col("pk") < 100L)
       .withColumn("payload", lit("feed1")))
-    DeleteLedger.startUpserts(spark, feed, base, "pk").awaitTermination()
+    DeleteLedger.startUpserts(spark, feed, df.schema, base, "pk").awaitTermination()
     writeFeed(df.filter(col("pk") >= 50L && col("pk") < 150L)
       .withColumn("payload", lit("feed2")))
-    DeleteLedger.startUpserts(spark, feed, base, "pk").awaitTermination()
+    DeleteLedger.startUpserts(spark, feed, df.schema, base, "pk").awaitTermination()
 
     val live = liveSet(base)
     assert(live.count(_.getString(1) == "feed1") === 50) // 0..49
@@ -377,6 +380,29 @@ class DeleteLedgerSpec extends SparkSpec {
     val surv = ZoneMap.survivingFiles(ZoneMap.read(spark, zm),
       "pk", lit(100L), lit(199L))
     assert(surv.length === 1, s"survivors: ${surv.length}")
+  }
+
+  test("a read after a commit submits no job; a manifest without a schema still reads") {
+    // create and compact both commit through MergeableStore.commitNext,
+    // which records the version's schema: the read infers nothing
+    val (base, df) = freshTable()
+    val (created, jobs) = org.apache.spark.sql.graft.JobProbe.jobs(spark) {
+      DeleteLedger.read(spark, base, "pk")
+    }
+    assert(jobs === 0)
+    assert(created.collect().toSet === df.collect().toSet)
+    DeleteLedger.delete(spark, base, Seq(3L, 4L).toDF("pk"), "b1")
+    DeleteLedger.compact(spark, base, "pk")
+    val (compacted, jobsAfter) = org.apache.spark.sql.graft.JobProbe.jobs(spark) {
+      DeleteLedger.read(spark, base, "pk")
+    }
+    assert(jobsAfter === 0)
+    val live = df.filter(!col("pk").isin(3L, 4L)).collect().toSet
+    assert(compacted.collect().toSet === live)
+    // a pointer written before schemas were recorded: version only
+    Files.write(new File(base, "_MANIFEST").toPath, "version 1\n".getBytes("UTF-8"))
+    assert(liveSet(base) === live)
+    assert(DeleteLedger.read(spark, base, "pk").columns.toSeq === Seq("pk", "payload", "g"))
   }
 
   test("deletes accumulate across compactions") {

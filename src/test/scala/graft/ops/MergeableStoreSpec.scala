@@ -123,4 +123,21 @@ class MergeableStoreSpec extends SparkSpec {
     assert(frames(1).select("p", "n").as[(String, Long)].collect().toSet ===
       Set(("a", 1L), ("b", 2L)))
   }
+
+  test("a stream start submits no job before its first batch") {
+    // the caller declares the source schema, so starting the stream
+    // infers nothing from the footers; the fold runs no action, so
+    // any job here would be the stream's own
+    val src = Files.createTempDirectory("mstore_src").toString + "/src"
+    Seq((1L, "a")).toDF("n", "s").coalesce(1).write.parquet(src)
+    Seq((2L, "b")).toDF("n", "s").coalesce(1).write.mode("append").parquet(src)
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val (_, jobs) = org.apache.spark.sql.graft.JobProbe.jobs(spark) {
+      MergeableStore.stream(spark, src, org.apache.spark.sql.types.StructType.fromDDL(
+          "n bigint, s string"), s"$src-__checkpoint") { (_, id) => batches.add(id); () }
+        .awaitTermination()
+    }
+    assert(batches.size === 2)
+    assert(jobs === 0)
+  }
 }

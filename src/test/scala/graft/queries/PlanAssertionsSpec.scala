@@ -368,30 +368,17 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(below.indexOf("Generate explode", agg) > agg, p)
   }
 
-  test("q_hits: small regime fuses to one linear plan over the pinned layouts") {
+  test("q_hits: node-bounded scores plan as two kernel frames") {
     val p = plan("q_hits")
-    // small (broadcast) regime since r10: no per-half-round lineage
-    // cuts — the L∞ rescale is a single-partition window (its input
-    // referenced ONCE, so the plan chains LINEARLY in rounds; the old
-    // checkpoint existed to stop the crossJoin double-reference's
-    // 2^(2·rounds) blowup), every half-round reads a pinned cache
-    // layout keyed on its GROUP key, and all joins are broadcast —
-    // never a data-sized shuffle join
-    assert(p.contains("InMemoryTableScan"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("ShuffledHashJoin"), p)
-    // the half-round rollups reuse the cache partitioning (the
-    // exchange-free aggregation is pinned structurally in GraphSpec's
-    // half-round plan test); here pin the fused shape: the rescale
-    // windows are the plan's only single-partition funnels and they
-    // run on node-bounded frames
-    assert(p.contains("Window"), p)
-    // linear in rounds (~300k chars today, dominated by the cached
-    // layout subtrees printing in full). Pinned at 1.5× the measured
-    // baseline so even a SUB-exponential duplication regression (one
-    // accidental extra reference per round, ~2× growth) trips it,
-    // not just the 2^(2·rounds) blowup the checkpoint removal risked.
-    assert(p.length < 450000, s"plan unexpectedly large: ${p.length} chars")
+    // the dense-vector kernel ran every half-round as its own job when
+    // the query was built; the plan left for the caller only reads the
+    // two score frames — no cached edge layout, no join, no window,
+    // and its size no longer grows with the rounds
+    assert(p.contains("Range"), p)
+    assert(!p.contains("InMemoryTableScan"), p)
+    assert(!p.contains("Join"), p)
+    assert(!p.contains("Window"), p)
+    assert(p.length < 20000, s"plan unexpectedly large: ${p.length} chars")
   }
 
   test("q_ab_test: user rollup partially aggregates; output frames are row-bounded") {

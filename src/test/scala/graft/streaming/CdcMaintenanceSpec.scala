@@ -174,7 +174,7 @@ class CdcMaintenanceSpec extends SparkSpec {
     CdcMaintenance.buildStore(baseDf, keys, store, B)
     log1.write.parquet(src)
     log2.write.mode("append").parquet(src)
-    val q = CdcMaintenance.start(spark, src, store, keys, B)
+    val q = CdcMaintenance.start(spark, src, log1.schema, store, keys, B)
     q.awaitTermination()
     val want = CdcMerge(baseDf, log1.unionByName(log2), keys)
       .as[(Long, String)].collect().toSet

@@ -56,14 +56,14 @@ class ChecksumMaintenanceSpec extends SparkSpec {
 
     ChecksumMaintenance.build(spark.emptyDataset[(Long, String)]
       .toDF("id", "name"), cols, store)
-    ChecksumMaintenance.start(spark, src, store, Seq("id", "name"))
+    ChecksumMaintenance.start(spark, src, f1.schema, store, Seq("id", "name"))
       .awaitTermination(120000)
     val got = ChecksumMaintenance.read(spark, store)
       .as[(Long, Long, String)].head()
     assert((got._1, got._2) === fp(f1.unionByName(f2)))
 
     // restart over the same checkpoint: no new files => no new folds
-    ChecksumMaintenance.start(spark, src, store, Seq("id", "name"))
+    ChecksumMaintenance.start(spark, src, f1.schema, store, Seq("id", "name"))
       .awaitTermination(120000)
     val again = ChecksumMaintenance.read(spark, store)
       .as[(Long, Long, String)].head()
@@ -72,7 +72,7 @@ class ChecksumMaintenanceSpec extends SparkSpec {
     // new file after restart folds exactly once
     val f3 = Seq((9L, "z")).toDF("id", "name")
     f3.coalesce(1).write.mode("append").parquet(src)
-    ChecksumMaintenance.start(spark, src, store, Seq("id", "name"))
+    ChecksumMaintenance.start(spark, src, f1.schema, store, Seq("id", "name"))
       .awaitTermination(120000)
     val withF3 = ChecksumMaintenance.read(spark, store)
       .as[(Long, Long, String)].head()

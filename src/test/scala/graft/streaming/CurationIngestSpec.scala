@@ -76,7 +76,7 @@ class CurationIngestSpec extends SparkSpec {
     docs((5L, goodText, "en"), (6L, goodText + " yet another new doc", "en"))
       .coalesce(1).write.mode("append").parquet(src)
 
-    val q = CurationIngest.start(spark, src, out, ledger)
+    val q = CurationIngest.start(spark, src, docs().schema, out, ledger)
     q.awaitTermination(120000)
 
     val ingested = ingestedIds(out)

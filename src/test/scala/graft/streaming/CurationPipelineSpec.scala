@@ -91,7 +91,7 @@ class CurationPipelineSpec extends SparkSpec {
 
     // run 1: two fresh families
     docs((1L, famA), (2L, famB)).coalesce(1).write.parquet(src)
-    CurationPipeline.start(spark, src, dirs).awaitTermination(120000)
+    CurationPipeline.start(spark, src, docs().schema, dirs).awaitTermination(120000)
 
     // new files arrive, then a NEW query resumes from the checkpoint:
     //  - 3 near-dups famA  (must be caught against the PRE-restart index)
@@ -102,7 +102,7 @@ class CurationPipelineSpec extends SparkSpec {
       (6L, "short low quality")).coalesce(1).write.mode("append").parquet(src)
     docs((7L, perturb(famC)), (8L, famD)).coalesce(1)
       .write.mode("append").parquet(src)
-    CurationPipeline.start(spark, src, dirs).awaitTermination(120000)
+    CurationPipeline.start(spark, src, docs().schema, dirs).awaitTermination(120000)
 
     val expected = Set(1L, 2L, 5L, 8L)
     val published = publishedIds(dirs.publish)

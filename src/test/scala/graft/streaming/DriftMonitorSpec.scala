@@ -61,13 +61,13 @@ class DriftMonitorSpec extends SparkSpec {
     // same checkpoint — the stores and the alert log must land exactly
     // where a single uninterrupted run would
     f1.coalesce(1).write.parquet(src)
-    DriftMonitor.start(spark, src, sa, sb, alerts,
+    DriftMonitor.start(spark, src, f1.schema, sa, sb, alerts,
       "grp", "a", "v", Lo, W, B, Thr).awaitTermination()
     val afterB0 = ksRow(sa, sb)
 
     f2.coalesce(1).write.mode("append").parquet(src)
     f3.coalesce(1).write.mode("append").parquet(src)
-    DriftMonitor.start(spark, src, sa, sb, alerts,
+    DriftMonitor.start(spark, src, f1.schema, sa, sb, alerts,
       "grp", "a", "v", Lo, W, B, Thr).awaitTermination()
 
     // streamed == batch-built stores

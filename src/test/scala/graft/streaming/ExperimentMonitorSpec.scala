@@ -30,7 +30,7 @@ class ExperimentMonitorSpec extends SparkSpec {
       ev.filter(col("event_id") % 3 === m)
         .repartition(1).write.mode("append").parquet(src)
 
-    ExperimentMonitor.start(spark, src, store, alerts).awaitTermination()
+    ExperimentMonitor.start(spark, src, ev.schema, store, alerts).awaitTermination()
 
     val log = ExperimentMonitor.alerts(spark, alerts)
     assert(log.count() === 3L)

@@ -156,10 +156,12 @@ class GroupQuantileMaintenanceSpec extends SparkSpec {
         .select("doc_id", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(src)
 
+    val srcSchema = Tables(spark, sfDir, "documents")
+      .select("doc_id", "source", "n_chars").schema
     writePart(col("doc_id") % 3 === 0); writePart(col("doc_id") % 3 === 1)
     GroupQuantileMaintenance.build(
       docRows(all).filter(lit(false)), store, K)
-    val q1 = GroupQuantileMaintenance.start(spark, src, store,
+    val q1 = GroupQuantileMaintenance.start(spark, src, srcSchema, store,
       "source", "n_chars", "doc_id", K)
     q1.awaitTermination()
     val (afterTwo, _) = GroupQuantileMaintenance.readSketches(spark, store, K)
@@ -171,7 +173,7 @@ class GroupQuantileMaintenanceSpec extends SparkSpec {
 
     // restart with one more file: only the new file is ingested
     writePart(col("doc_id") % 3 === 2)
-    val q2 = GroupQuantileMaintenance.start(spark, src, store,
+    val q2 = GroupQuantileMaintenance.start(spark, src, srcSchema, store,
       "source", "n_chars", "doc_id", K)
     q2.awaitTermination()
     val (afterAll, _) = GroupQuantileMaintenance.readSketches(spark, store, K)

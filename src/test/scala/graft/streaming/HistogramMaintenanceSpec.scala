@@ -62,7 +62,7 @@ class HistogramMaintenanceSpec extends SparkSpec {
 
     HistogramMaintenance.build(spark.emptyDataset[Double].toDF("v"),
       col("v"), Lo, W, B, store)
-    HistogramMaintenance.start(spark, src, store, "v", Lo, W, B)
+    HistogramMaintenance.start(spark, src, f1.schema, store, "v", Lo, W, B)
       .awaitTermination(120000)
 
     val full = s"$base/full"

@@ -81,7 +81,7 @@ class HllMaintenanceSpec extends SparkSpec {
 
     HllMaintenance.build(spark.emptyDataset[(String, String)].toDF("g", "k"),
       col("g"), col("k"), store)
-    HllMaintenance.start(spark, src, store, "g", "k")
+    HllMaintenance.start(spark, src, f1.toDF("g", "k").schema, store, "g", "k")
       .awaitTermination(120000)
 
     val full = s"$base/full"

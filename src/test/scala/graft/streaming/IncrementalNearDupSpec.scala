@@ -108,7 +108,7 @@ class IncrementalNearDupSpec extends SparkSpec {
     // run 1: A and B land
     docs((1L, baseA)).coalesce(1).write.parquet(src)
     docs((2L, baseB)).coalesce(1).write.mode("append").parquet(src)
-    val q1 = IncrementalNearDup.start(spark, src, idx, out)
+    val q1 = IncrementalNearDup.start(spark, src, docs().schema, idx, out)
     q1.awaitTermination(120000)
 
     // "restart": new files arrive — a near-dup of A (must be caught
@@ -116,7 +116,7 @@ class IncrementalNearDupSpec extends SparkSpec {
     // starts from the same checkpoint
     docs((3L, perturb(baseA)), (4L, baseC)).coalesce(1)
       .write.mode("append").parquet(src)
-    val q2 = IncrementalNearDup.start(spark, src, idx, out)
+    val q2 = IncrementalNearDup.start(spark, src, docs().schema, idx, out)
     q2.awaitTermination(120000)
 
     val admitted = spark.read.option("basePath", out).parquet(out)
@@ -137,7 +137,7 @@ class IncrementalNearDupSpec extends SparkSpec {
     docs((3L, perturb(baseB)), (4L, baseC)).coalesce(1)
       .write.mode("append").parquet(src)
 
-    val q = IncrementalNearDup.start(spark, src, idx, out)
+    val q = IncrementalNearDup.start(spark, src, docs().schema, idx, out)
     q.awaitTermination(120000)
 
     val admitted = spark.read.option("basePath", out).parquet(out)

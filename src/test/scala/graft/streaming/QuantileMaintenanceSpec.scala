@@ -73,9 +73,11 @@ class QuantileMaintenanceSpec extends SparkSpec {
         .select(col("o_orderkey"), col("o_totalprice"))
         .coalesce(1).write.mode("append").parquet(src)
 
+    val srcSchema = Tables(spark, sfDir, "orders")
+      .select(col("o_orderkey"), col("o_totalprice")).schema
     writePart(0L, 1500L); writePart(1500L, 3000L)
     QuantileMaintenance.build(orderRows(0L, 0L), store, K) // empty bootstrap
-    val q1 = QuantileMaintenance.start(spark, src, store,
+    val q1 = QuantileMaintenance.start(spark, src, srcSchema, store,
       "CAST(o_totalprice * 100 AS LONG)", "o_orderkey", K)
     q1.awaitTermination()
     val (afterTwo, _) = QuantileMaintenance.readSketch(spark, store, K)
@@ -85,7 +87,7 @@ class QuantileMaintenanceSpec extends SparkSpec {
 
     // restart with one more file: only the new file is ingested
     writePart(3000L, 100000000L)
-    val q2 = QuantileMaintenance.start(spark, src, store,
+    val q2 = QuantileMaintenance.start(spark, src, srcSchema, store,
       "CAST(o_totalprice * 100 AS LONG)", "o_orderkey", K)
     q2.awaitTermination()
     val (finalSk, _) = QuantileMaintenance.readSketch(spark, store, K)

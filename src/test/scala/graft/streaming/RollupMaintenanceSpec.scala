@@ -34,7 +34,7 @@ class RollupMaintenanceSpec extends SparkSpec {
     f1.write.parquet(src)
     f2.coalesce(1).write.mode("append").parquet(src)
 
-    val q = RollupMaintenance.start(spark, src, store)
+    val q = RollupMaintenance.start(spark, src, f1.schema, store)
     q.awaitTermination(120000)
 
     val all = f1.unionByName(f2)

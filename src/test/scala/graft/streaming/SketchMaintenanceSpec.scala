@@ -57,7 +57,7 @@ class SketchMaintenanceSpec extends SparkSpec {
 
     SketchMaintenance.build(spark.emptyDataset[String].toDF("k"),
       col("k"), store)
-    SketchMaintenance.start(spark, src, store, "k")
+    SketchMaintenance.start(spark, src, f1.schema, store, "k")
       .awaitTermination(120000)
 
     val full = s"$base/full"

@@ -49,7 +49,8 @@ class VectorIngestSpec extends SparkSpec {
     for ((lo, hi) <- Seq((0L, 12L), (12L, 25L), (25L, 38L)))
       slice(lo, hi).repartition(1).write.mode("append").parquet(src)
 
-    VectorIngest.start(spark, src, idx, led, cd).awaitTermination()
+    VectorIngest.start(spark, src, Tables(spark, sf, "embeddings").schema,
+      idx, led, cd).awaitTermination()
 
     val centroids = spark.read.parquet(cd)
     val batch1 = s"$base/batch1"
@@ -62,7 +63,8 @@ class VectorIngestSpec extends SparkSpec {
 
     // restart: one NEW file arrives; the checkpoint replays nothing
     slice(38L, 10000L).repartition(1).write.mode("append").parquet(src)
-    VectorIngest.start(spark, src, idx, led, cd).awaitTermination()
+    VectorIngest.start(spark, src, Tables(spark, sf, "embeddings").schema,
+      idx, led, cd).awaitTermination()
     val batchAll = s"$base/batch_all"
     VectorIndex.build(embAll, centroids, batchAll)
     assert(indexRows(idx) === indexRows(batchAll))
