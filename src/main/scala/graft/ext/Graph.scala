@@ -25,7 +25,18 @@ object GraphOps {
     *
     * Semantics per iteration, all integer ops:
     *   contribution along edge e=(u,v,w) = (pr(u) * w) div out_w(u)
-    *   pr'(v) = scale*15/100 + (85 * sum_contrib(v)) div 100
+    *   pr'(v) = t(v) + (85 * sum_contrib(v)) div 100
+    * where the teleport vector t places the 15% restart mass:
+    *   - no `seeds` (global PageRank): t(v) = scale*15/100 for every
+    *     node, from pr_0 = scale;
+    *   - `seeds` (personalized PageRank, "relevance to this segment":
+    *     rank suppliers for one market, documents near a trusted seed
+    *     corpus): t(v) = (15·scale·n_nodes) div (100·|S|) on the seed
+    *     set S and 0 elsewhere, from pr_0 = t — so the total mass
+    *     matches the global n·scale and the two rankings are directly
+    *     comparable. `seeds` is a frame with a `node` column; keys
+    *     that are not nodes are dropped before the split (the mass
+    *     stays conserved), and an empty remainder fails.
     *
     * Truncation: each `div` rounds toward zero, so a node's out-mass
     * can lose up to out_degree ulps per round — at scale=1e9 that is
@@ -37,8 +48,10 @@ object GraphOps {
     * pr(u)*w must stay under 2^63 — with scale=1e9 that holds to
     * ~10^9 nodes × weight 8, comfortably past a web-scale domain
     * graph (document the bound, don't discover it in production).
-    * Past it, both regimes throw (ANSI arithmetic in the frames,
-    * `Math.multiplyExact`/`addExact` in the kernel), never wrap.
+    * Seeds concentrate the mass near them but never past n·scale, so
+    * the same bound holds. Past it, both regimes throw (ANSI
+    * arithmetic in the frames, `Math.multiplyExact`/`addExact` in the
+    * kernel), never wrap.
     *
     * Scale shape: the edge frame is cached for the call, and ONE
     * bounded collect — the out-weight aggregate, `limit(broadcastNodes
@@ -51,22 +64,28 @@ object GraphOps {
     *     returns the contribution sums of its own destination range,
     *     and the driver collects exactly n longs (the footprint of the
     *     broadcast the planner would build anyway) and applies the
-    *     damping. The ranks come back as a frame built on the
-    *     executors from a broadcast. Nothing stays persisted and no
-    *     module state is touched, so concurrent callers are safe.
+    *     damping and the teleport vector (a seeded call first collects
+    *     its seeds that are nodes, at most n keys). The ranks come
+    *     back as a frame built on the executors from a broadcast.
     *     A null node key runs on the frames instead (their join
     *     semantics for nulls are the contract).
-    *   - larger graphs: co-partitioned frames. Edges are
-    *     hash-partitioned on `src` ONCE at build (the `repartition`
-    *     below persists WITH that layout), so per-iteration joins
-    *     reuse the exchange and only the node-sized ranks side moves.
-    *     SINGLE CALLER: the layouts live in this module's release
-    *     slots until the next call.
+    *   - larger graphs: co-partitioned frames. The node list (out-weight
+    *     and teleport per node) and the edges hash-partitioned on `src`
+    *     with their source's node row attached are each cut ONCE (an
+    *     eager localCheckpoint), so every iteration's join reuses the
+    *     edge layout and only the node-sized sums move.
     *   The default threshold is measurement-backed: at the sf10 probe
     *   (1.6M nodes, 110M edges) the co-partitioned regime's steady
     *   state ran 23.6 s vs 35–47 s for per-iteration 1.6M-row
     *   broadcasts, while at sf1 (160k nodes) broadcast wins — so the
     *   crossover sits below 1.6M and the default is 1M.
+    *
+    * The call keeps nothing after it returns, in either regime: the
+    * kernel's ranks are broadcast-backed, and the co-partitioned ranks
+    * are the call's own eager localCheckpoint (every other frame it
+    * cut is released before it returns; `BuildOnce.releaseFrame` on
+    * the result frees that one). No module state is touched, so
+    * concurrent callers are safe.
     *
     * Dangling nodes: the node set is derived from edge SOURCES, so
     * callers passing both edge directions (the undirected/bipartite
@@ -76,10 +95,12 @@ object GraphOps {
     * out-weight; their contributions leave the graph.
     *
     * @param edges (src, dst, w) directed weighted edges
+    * @param seeds the personalization set (a `node` column), if any
     * @return (node, pr) fixed-point ranks, pr ≈ rank × scale
     */
   def pageRank(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000L, broadcastNodes: Long = 1000000L): DataFrame = {
+      scale: Long = 1000000000L, broadcastNodes: Long = 1000000L,
+      seeds: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters $iters")
     val sel = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
     SparseMatVec.tagged(edges.sparkSession.sparkContext, "graft.graph.pagerank") {
@@ -87,21 +108,34 @@ object GraphOps {
         val dict = e.groupBy("src").agg(sum(col("w")).as("ow"))
           .limit(gateRows(broadcastNodes, 1)).collect()
         if (dict.length <= broadcastNodes && !dict.exists(_.isNullAt(0)))
-          pageRankKernel(e, dict, iters, scale)
-        else pageRankCopartitioned(e, iters, scale)
+          pageRankKernel(e, dict, seeds, iters, scale)
+        else pageRankCopartitioned(e, seeds, iters, scale)
       }
     }
   }
 
   /** [[pageRank]]'s node-bounded regime: `dict` holds every source
     * with its out-weight. */
-  private def pageRankKernel(e: DataFrame, dict: Array[Row], iters: Int,
-      scale: Long): DataFrame = {
+  private def pageRankKernel(e: DataFrame, dict: Array[Row],
+      seeds: Option[DataFrame], iters: Int, scale: Long): DataFrame = {
     val keys = dict.map(_.get(0))
     val ow = dict.map(r => if (r.isNullAt(1)) 0L else r.getLong(1))
+    val index = indexOf(keys)
+    // the teleport vector t and the starting ranks (a seeded call
+    // starts from t)
+    val (t, pr0) = seeds match {
+      case None =>
+        (Array.fill(keys.length)(scale * 15L / 100L), Array.fill(keys.length)(scale))
+      case Some(s) =>
+        val in = seedNodes(s, e).collect().map(r => index.get(r.get(0)).intValue)
+        val tv = seedTeleport(scale, keys.length, in.length)
+        val t = new Array[Long](keys.length)
+        in.foreach(t(_) = tv)
+        (t, t)
+    }
     // one matrix: rows = destinations, columns = sources; a null-weight
     // edge contributes nothing, as its null contribution would not sum
-    val layout = SparseMatVec.layout(e.rdd, Seq(keys.length), (indexOf(keys), ow)) {
+    val layout = SparseMatVec.layout(e.rdd, Seq(keys.length), (index, ow)) {
       case ((index, ow), r, emit) =>
         val d = index.get(r.get(1))
         if (d != null && !r.isNullAt(2)) {
@@ -110,68 +144,102 @@ object GraphOps {
         }
     }
     try {
-      val base = scale * 15L / 100L
-      var pr = Array.fill(keys.length)(scale)
-      for (_ <- 1 to iters)
-        pr = layout.multiply(0, pr).map(s =>
-          Math.addExact(base, Math.multiplyExact(85L, s) / 100L))
+      var pr = pr0
+      for (_ <- 1 to iters) {
+        val s = layout.multiply(0, pr)
+        pr = Array.tabulate(s.length)(v =>
+          Math.addExact(t(v), Math.multiplyExact(85L, s(v)) / 100L))
+      }
       SparseMatVec.frame(e.sparkSession, e.schema("src").copy(name = "node"),
         StructField("pr", LongType), keys, pr)
     } finally layout.release()
   }
 
   /** [[pageRank]]'s co-partitioned regime over the cached edge frame. */
-  private def pageRankCopartitioned(sel: DataFrame, iters: Int,
-      scale: Long): DataFrame = {
-    val e = graft.ops.BuildOnce.swapPersist(lastEdges, sel)
-    // out-weights — exactly one row per node that HAS out-edges, which
-    // (sources define the node set) IS the node list: so persist it,
-    // count it (materializing the cache), and derive `nodes` as a
-    // projection instead of a distinct over the edge frame.
-    val outw = graft.ops.BuildOnce.swapPersist(lastNodes,
-      e.groupBy("src").agg(sum(col("w")).as("ow")))
-    outw.count()
-    val nodes = outw.select(col("src").as("node"))
-    // every edge must carry its source's total out-weight: attach
-    // ONCE, pinned to hash(src) so every per-iteration join reuses the
-    // exchange; materialized eagerly FROM the raw edge cache, which is
-    // then released — at this regime's scale, double-caching the edge
-    // list is real memory, and a per-iteration re-attach would be a
-    // full shuffle each.
-    val attached = graft.ops.BuildOnce.swapPersist(lastAttached,
-      e.repartition(col("src")).join(outw, "src"))
-    attached.count()
-    Option(lastEdges.getAndSet(null)).foreach(_.unpersist())
-    // pr as a pure BIGINT function of the previous contribution sum
-    // (absent sum ⇒ 0); `div`/left-assoc precedence matches the doc'd
-    // recurrence exactly — never Column./ (double division)
-    val prSql =
-      s"(CAST(${scale * 15L / 100L} AS BIGINT)" +
-        " + 85 * coalesce(s, CAST(0 AS BIGINT)) div 100)"
-    // iterate on the CONTRIBUTION SUMS, not the rank vector: pr_i is a
-    // pure function of s_{i-1}, so the per-iteration plan is a single
-    // pass over the cached edges — left join the previous sums onto
-    // the edge list (no previous sum row ⇒ coalesce to 0 inside
-    // prSql; sums for dst-only nodes simply never match a src), emit
-    // the damped contribution, re-aggregate. This halves the
-    // joins per iteration vs materializing ranks each round; ranks
-    // reconstitutes ONCE, at the end, against the node list to
-    // reinstate zero-in-degree nodes.
-    var contrib: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      val joined = contrib match {
-        // iteration 1: every node holds exactly `scale`
-        case None => attached.select(col("dst"),
-          expr(s"CAST($scale AS BIGINT) * w div ow").as("c"))
-        case Some(prev) =>
-          attached.join(prev, attached("src") === prev("node"), "left")
-            .select(col("dst"), expr(s"$prSql * w div ow").as("c"))
+  private def pageRankCopartitioned(e: DataFrame, seeds: Option[DataFrame],
+      iters: Int, scale: Long): DataFrame = {
+    val nShuffle = e.sparkSession.sessionState.conf.numShufflePartitions
+    val cuts = new Cuts
+    try {
+      // out-weights — exactly one row per node that HAS out-edges, which
+      // (sources define the node set) IS the node list — with the
+      // teleport and the starting rank of each node (a seeded call
+      // flags its seeds on the list and starts from t)
+      val outw = e.groupBy("src").agg(sum(col("w")).as("ow"))
+      val (nodes, t, pr0) = seeds match {
+        case None => (cuts(outw), lit(scale * 15L / 100L), lit(scale))
+        case Some(s) =>
+          val nodes = cuts(outw.join(
+            seedNodes(s, outw).withColumn("seed", lit(true)), Seq("src"), "left"))
+          val c = nodes.agg(count(lit(1)), count(col("seed"))).head()
+          val t = when(col("seed"), lit(seedTeleport(scale, c.getLong(0), c.getLong(1))))
+            .otherwise(lit(0L))
+          (nodes, t, t)
       }
-      contrib = Some(joined.groupBy(col("dst").as("node"))
-        .agg(sum(col("c")).as("s")))
+      val nodeRows = nodes.select(col("src"), col("ow"), t.as("t"), pr0.as("pr0"))
+      // every edge carries its source's out-weight, teleport and pr_0:
+      // attached ONCE, pinned to hash(src) (an explicit count, so AQE
+      // cannot coalesce the layout) — every per-iteration join reuses
+      // that layout, where a per-iteration attach would be a full
+      // shuffle each
+      val attached = cuts(e.repartition(nShuffle, col("src")).join(nodeRows, "src"))
+      // pr as a pure BIGINT function of the previous contribution sum
+      // (absent sum ⇒ 0); `div`/left-assoc precedence matches the doc'd
+      // recurrence exactly — never Column./ (double division)
+      val prSql = "(t + 85 * coalesce(s, CAST(0 AS BIGINT)) div 100)"
+      // iterate on the CONTRIBUTION SUMS, not the rank vector: pr_i is a
+      // pure function of s_{i-1}, so the per-iteration plan is a single
+      // pass over the attached edges — left join the previous sums onto
+      // the edge list (sums for dst-only nodes simply never match a
+      // src), emit the damped contribution, re-aggregate. The ranks
+      // reconstitute ONCE, at the end, against the node list to
+      // reinstate zero-in-degree nodes.
+      var contrib: Option[DataFrame] = None
+      for (_ <- 1 to iters) {
+        val joined = contrib match {
+          case None => attached.select(col("dst"), expr("pr0 * w div ow").as("c"))
+          case Some(prev) =>
+            attached.join(prev, attached("src") === prev("node"), "left")
+              .select(col("dst"), expr(s"$prSql * w div ow").as("c"))
+        }
+        contrib = Some(joined.groupBy(col("dst").as("node"))
+          .agg(sum(col("c")).as("s")))
+      }
+      nodeRows.select(col("src").as("node"), col("t"))
+        .join(contrib.get, Seq("node"), "left")
+        .select(col("node"), expr(prSql).as("pr"))
+        .localCheckpoint(true)
+    } finally cuts.release()
+  }
+
+  /** The keys of `seeds`' `node` column that are sources of `edges`,
+    * each once, as a `src` column of the sources' type. */
+  private def seedNodes(seeds: DataFrame, edges: DataFrame): DataFrame =
+    seeds.select(col("node").cast(edges.schema("src").dataType).as("src"))
+      .distinct().join(edges.select("src"), Seq("src"), "left_semi")
+
+  /** A seed's teleport: (15·scale·n) div (100·|S|), checked so the
+    * seeds' total mass stays inside the BIGINT budget. */
+  private def seedTeleport(scale: Long, n: Long, nSeeds: Long): Long = {
+    require(nSeeds > 0, "pageRank: empty seed set")
+    val t = BigInt(15) * scale * n / (BigInt(100) * nSeeds)
+    require(t * nSeeds < BigInt(Long.MaxValue) / 16,
+      s"teleport mass overflows the BIGINT budget: $t x $nSeeds")
+    t.toLong
+  }
+
+  /** The frames one co-partitioned call cuts for itself: each is an
+    * eager localCheckpoint, owned by the call (never a CacheManager
+    * entry another call could share or release), and all are released
+    * when the call ends. */
+  private final class Cuts {
+    private var held = List.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      held ::= c
+      c
     }
-    nodes.join(contrib.get, Seq("node"), "left")
-      .select(col("node"), expr(prSql).as("pr"))
+    def release(): Unit = held.foreach(graft.ops.BuildOnce.releaseFrame(_))
   }
 
   /** Rows a gate collect may bring back for `sides` key sets of at
@@ -198,113 +266,6 @@ object GraphOps {
     try body(df) finally if (own) df.unpersist()
   }
 
-  /** Personalized PageRank — the same exact fixed-point power
-    * iteration as [[pageRank]], but the 15% teleport mass restarts at
-    * a SEED SET instead of uniformly: the standard "relevance to this
-    * segment" ranking (rank suppliers for one market, pages for one
-    * topic, documents near a trusted seed corpus). Semantics per
-    * iteration, all BIGINT ops:
-    *   pr'(v) = t(v) + 85 · Σ_{(u,v,w)} (pr(u)·w div out_w(u)) div 100
-    *   t(v)   = (15·scale·n_nodes) div (100·|S|)  if v ∈ S, else 0
-    * seeded pr_0 = t — so total mass matches pageRank's n·scale and
-    * the two rankings are directly comparable. Seeds outside the
-    * graph's node set are dropped (semi-join), keeping the teleport
-    * mass conserved.
-    *
-    * Scale shape: identical to [[pageRank]]'s broadcast regime (the
-    * curation case — seed-segment graphs are node-bounded); the seed
-    * FLAG rides the edge cache, attached once. For node-heavy graphs
-    * the co-partitioned regime applies unchanged — the flag is one
-    * more narrow column. Overflow bound: t ≤ 15·scale·n div 100, and
-    * rank mass can CONCENTRATE near seeds, so the per-edge product is
-    * bounded by n·scale·w_max — the same 2^63 budget as pageRank,
-    * documented there.
-    */
-  def personalizedPageRank(edges: DataFrame, seedNodes: DataFrame,
-      iters: Int, scale: Long = 1000000000L): DataFrame = {
-    require(iters >= 1, s"iters $iters")
-    // dst-pinned cache for the same reason as [[pageRank]]'s small
-    // regime: PPR is always the broadcast regime (seed-segment graphs
-    // are node-bounded), so groupBy(dst) is each iteration's only
-    // distribution requirement — served by the layout, exchange-free.
-    val e = graft.ops.BuildOnce.swapPersist(lastPprEdges,
-      lpEdgeFrame(edges))
-    val outw = graft.ops.BuildOnce.swapPersist(lastPprOutw,
-      e.groupBy("src").agg(sum(col("w")).as("ow")))
-    val nNodes = outw.count()
-    val seeds = graft.ops.BuildOnce.swapPersist(lastPprSeeds,
-      seedNodes.select(col("node")).distinct()
-        .join(outw.select(col("src").as("node")), Seq("node"), "semi"))
-    val nSeeds = seeds.count()
-    require(nSeeds > 0, "personalizedPageRank: empty seed set")
-    val tBig = (BigInt(15) * scale * nNodes) / (BigInt(100) * nSeeds)
-    require(tBig * nSeeds < BigInt(Long.MaxValue) / 16,
-      s"teleport mass overflows the BIGINT budget: $tBig x $nSeeds")
-    val t = tBig.toLong
-    val flag = broadcast(seeds.select(col("node").as("__sn")))
-    // per-edge teleport of the SOURCE (drives contributions) — the
-    // edge cache never moves; outw and the seed flag broadcast
-    val iterFrame = e.join(broadcast(outw), "src")
-      .join(flag, col("src") === col("__sn"), "left")
-      .withColumn("t",
-        when(col("__sn").isNotNull, lit(t)).otherwise(lit(0L)))
-    val prSql =
-      s"(t + 85 * coalesce(s, CAST(0 AS BIGINT)) div 100)"
-    var contrib: Option[DataFrame] = None
-    for (i <- 1 to iters) {
-      val joined = contrib match {
-        // iteration 1: pr_0 = t, so only seed sources contribute
-        case None => iterFrame.filter(col("__sn").isNotNull)
-          .select(col("dst"), expr(s"CAST($t AS BIGINT) * w div ow").as("c"))
-        case Some(prev) =>
-          iterFrame.join(broadcast(prev),
-              iterFrame("src") === prev("node"), "left")
-            .select(col("dst"), expr(s"$prSql * w div ow").as("c"))
-      }
-      contrib = Some(joined.groupBy(col("dst").as("node"))
-        .agg(sum(col("c")).as("s")))
-    }
-    // final ranks over the full node list (zero-in-degree nodes keep
-    // their teleport-only rank; non-seed sinks' in-sums decide theirs)
-    outw.select(col("src").as("node"))
-      .join(flag, col("node") === col("__sn"), "left")
-      .withColumn("t",
-        when(col("__sn").isNotNull, lit(t)).otherwise(lit(0L)))
-      .join(broadcast(contrib.get), Seq("node"), "left")
-      .select(col("node"), expr(prSql).as("pr"))
-  }
-
-  /** Bounded caches for the iteration-invariant frames of the
-    * co-partitioned pageRank and of personalizedPageRank (one live
-    * copy each across invocations; superseded copies released on
-    * swap). `lastAttached` holds the src-pinned out-weight attach; the
-    * raw slot is released once it exists. */
-  private val lastEdges =
-    graft.ops.BuildOnce.swapRef()
-  private val lastNodes =
-    graft.ops.BuildOnce.swapRef()
-  private val lastAttached =
-    graft.ops.BuildOnce.swapRef()
-  private val lastPprEdges =
-    graft.ops.BuildOnce.swapRef()
-  private val lastPprOutw =
-    graft.ops.BuildOnce.swapRef()
-  private val lastPprSeeds =
-    graft.ops.BuildOnce.swapRef()
-
-  /** BFS hop distances from `source` over directed edges (src, dst),
-    * capped at `maxHops` — frontier-style Pregel traversal: each round
-    * expands ONLY the nodes discovered last round (one equi-join),
-    * anti-joins the already-visited set, and unions the new layer in.
-    * All-integer semantics, so any engine replays it exactly.
-    *
-    * Scale shape: round r moves |frontier_r|·avg_degree rows through
-    * one shuffle — the textbook distributed BFS; the visited set is
-    * only ever the build side of an anti-join (never collected). Each
-    * round's frontier is localCheckpoint'd: dist_r's lineage would
-    * otherwise nest r copies of the join tree (the connectedComponents
-    * pattern; eager — BFS reads every frontier exactly once more).
-    */
   /** Synchronous label propagation — community detection by iterated
     * weighted majority vote: each round, every node adopts the label
     * carrying the greatest total incident edge weight (ties → the
@@ -410,22 +371,25 @@ object GraphOps {
     *     broadcasts the score vector, collects exactly one long per
     *     node (the footprint of the broadcast the planner would build
     *     anyway) and rescales on the driver. The scores come back as
-    *     frames built on the executors from a broadcast. Nothing stays
-    *     persisted and no module state is touched, so concurrent
-    *     callers are safe. A null key or weight runs on the frames
-    *     instead (their null semantics are the contract).
-    *   - larger graphs: co-partitioned frames over two pinned edge
-    *     hash layouts (by src and by dst — the iteration alternates
-    *     keys, so a single layout would re-shuffle the edges every
+    *     frames built on the executors from a broadcast. A null key
+    *     or weight runs on the frames instead (their null semantics
+    *     are the contract).
+    *   - larger graphs: co-partitioned frames over two edge hash
+    *     layouts (by src and by dst — the iteration alternates keys,
+    *     so a single layout would re-shuffle the edges every
     *     half-round); each layout serves its half-round's JOIN key,
     *     only the node-sized score frames move per join, and each
-    *     half-round is lineage-cut (see rescale). Concurrency
-    *     contract: SINGLE CALLER — the lineage cuts rotate a
-    *     module-level slot pool (`hitsSlots`), so two concurrent
-    *     large-regime invocations would release each other's
-    *     checkpointed frames mid-iteration. One pipeline session
-    *     drives these operators sequentially; a multi-tenant service
-    *     wraps the call in its own mutual exclusion.
+    *     half-round is lineage-cut (see rescale). The layouts and the
+    *     cuts are the call's own eager localCheckpoints; a round's
+    *     cuts are released once the next round is cut, and the rest
+    *     when the call returns.
+    *
+    * The call keeps nothing after it returns, in either regime: the
+    * kernel's scores are broadcast-backed, and the co-partitioned
+    * scores are the call's own eager localCheckpoints
+    * (`BuildOnce.releaseFrame` on each frees it). No module state is
+    * touched, so concurrent callers are safe, and `rounds` has no
+    * upper limit.
     *
     * @param edges (src, dst, w) directed weighted edges
     * @return (hubs (node, h), authorities (node, a)) fixed-point
@@ -433,8 +397,7 @@ object GraphOps {
     */
   def hits(edges: DataFrame, rounds: Int, scale: Long = 1000000L,
       broadcastNodes: Long = 1000000L): (DataFrame, DataFrame) = {
-    require(rounds >= 1 && rounds <= HitsMaxRounds,
-      s"rounds $rounds (cache slots sized for <= $HitsMaxRounds)")
+    require(rounds >= 1, s"rounds $rounds")
     val sel = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
     SparseMatVec.tagged(edges.sparkSession.sparkContext, "graft.graph.hits") {
       withCached(sel) { e =>
@@ -503,96 +466,73 @@ object GraphOps {
   private def hitsCopartitioned(sel: DataFrame, rounds: Int,
       scale: Long): (DataFrame, DataFrame) = {
     val nShuffle = sel.sparkSession.sessionState.conf.numShufflePartitions
-    // drain the per-half-round checkpoint slots up front: a prior
-    // invocation leaves up to 2·HitsMaxRounds node-sized
-    // localCheckpoint RDDs in the slots
-    hitsSlots.foreach { s =>
-      Option(s.getAndSet(null)).foreach(graft.ops.BuildOnce.releaseFrame(_))
-    }
-    // two hash layouts, so the raw edge frame needs no cache of its
-    // own past the call. The explicit partition count keeps AQE from
-    // advisory-coalescing a layout (a cache coalesced to one task
-    // would serialize every half-round's scan). bySrc's count
-    // materializes both.
-    val byDst = graft.ops.BuildOnce.swapPersist(lastHitsByDst,
-      sel.repartition(nShuffle, col("dst")))
-    val bySrc = graft.ops.BuildOnce.swapPersist(lastHitsBySrc,
-      byDst.repartition(nShuffle, col("src")))
-    bySrc.count()
-    // the score side SHUFFLES, so each layout serves its step's JOIN
-    // key: bySrc drives the a-step (join hubs ON src, group BY dst),
-    // byDst the h-step (join authorities ON dst, group BY src); the
-    // agg exchange is the iteration's one shuffle.
-    // x·scale div max(x), max crossed in as a broadcast 1-row frame;
-    // DECIMAL(38,0) widening makes the product wrap-proof (see bound).
-    // The pre-rescale frame is LINEAGE-CUT (eager localCheckpoint,
-    // one rotating slot per half-round): the max aggregate and the
-    // crossJoin both reference it, so every half-round DOUBLES its
-    // predecessor's appearances in the logical plan — a persist alone
-    // bounds execution but not the plan, and the driver's
-    // optimize/codegen work still grows 2^(2·rounds) (measured: 93 s
-    // uncached, 17 s persisted-only, ~2 s cut, at sf0.1, rounds = 3;
-    // all ~3 s of actual executor work). The checkpoint job per
-    // half-round is node-sized — the BFS/connectedComponents
-    // per-round pattern. Slots release the previous invocation's
-    // blocks via the LogicalRDD reach-through in releaseFrame.
-    var slot = 0
-    def rescale(raw0: DataFrame, c: String, cut: Boolean = true): DataFrame = {
-      // ONE eager lineage cut per ROUND, not per half-round: the a
-      // half-round (cut = false) lazy-persists instead — the h
-      // half-round's checkpoint job then executes the a frame ONCE
-      // (its broadcast-max build populates the cache, the crossJoin
-      // probe reads it back), and the plan between cuts stays
-      // bounded because the persisted a appears exactly twice in
-      // the h frame being cut. Same storage retention as two
-      // checkpoints (both frames ride the same rotating slots);
-      // one fewer eager job + lineage conversion per round.
-      val raw = if (cut) raw0.localCheckpoint(true)
-        else raw0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Option(hitsSlots(slot).getAndSet(raw))
-        .foreach(graft.ops.BuildOnce.releaseFrame(_))
-      slot += 1
-      val m = raw.agg(max(col(c)).as("mx"))
-      raw.crossJoin(broadcast(m))
-        .select(col("node"),
-          expr(s"cast($c as decimal(38,0)) * $scale div mx").as(c))
-    }
-    // initial hubs from the SRC-pinned layout: hash(src) satisfies the
-    // distinct's clustering, so h₀ plans without an exchange
-    var h = bySrc.select(col("src").as("hn")).distinct()
-      .withColumn("h", lit(scale))
-    var a: DataFrame = null
-    for (_ <- 1 to rounds) {
-      a = rescale(
-        bySrc.join(h, col("src") === col("hn"))
+    val cuts = new Cuts
+    try {
+      // two hash layouts, so the raw edge frame needs no cache of its
+      // own past the call. The explicit partition count keeps AQE from
+      // advisory-coalescing a layout (a layout coalesced to one task
+      // would serialize every half-round's scan).
+      val byDst = cuts(sel.repartition(nShuffle, col("dst")))
+      val bySrc = cuts(byDst.repartition(nShuffle, col("src")))
+      // the score side SHUFFLES, so each layout serves its step's JOIN
+      // key: bySrc drives the a-step (join hubs ON src, group BY dst),
+      // byDst the h-step (join authorities ON dst, group BY src); the
+      // agg exchange is the iteration's one shuffle.
+      // x·scale div max(x), max crossed in as a broadcast 1-row frame;
+      // DECIMAL(38,0) widening makes the product wrap-proof (see bound).
+      // Every pre-rescale frame is LINEAGE-CUT: the max aggregate and
+      // the crossJoin both reference it, so uncut, every half-round
+      // would DOUBLE its predecessor's appearances in the logical plan
+      // and the driver's optimize/codegen work would grow 2^(2·rounds)
+      // (measured: 93 s uncached, 17 s persisted-only, ~2 s cut, at
+      // sf0.1, rounds = 3; all ~3 s of actual executor work). The cut
+      // per half-round is a node-sized job — the
+      // BFS/connectedComponents per-round pattern.
+      def rescale(raw: DataFrame, c: String): DataFrame = {
+        val m = raw.agg(max(col(c)).as("mx"))
+        raw.crossJoin(broadcast(m))
+          .select(col("node"),
+            expr(s"cast($c as decimal(38,0)) * $scale div mx").as(c))
+      }
+      // initial hubs from the SRC-pinned layout: hash(src) satisfies the
+      // distinct's clustering, so h₀ plans without an exchange
+      var h = bySrc.select(col("src").as("hn")).distinct()
+        .withColumn("h", lit(scale))
+      var a: DataFrame = null
+      var previous = List.empty[DataFrame]
+      for (_ <- 1 to rounds) {
+        val aRaw = cuts(bySrc.join(h, col("src") === col("hn"))
           .groupBy(col("dst").as("node"))
-          .agg(sum(expr("h * w")).as("a")), "a", cut = false)
-        .withColumnRenamed("node", "an")
-        .withColumnRenamed("a", "a_")
-      h = rescale(
-        byDst.join(a, col("dst") === col("an"))
+          .agg(sum(expr("h * w")).as("a")))
+        a = rescale(aRaw, "a")
+          .withColumnRenamed("node", "an")
+          .withColumnRenamed("a", "a_")
+        val hRaw = cuts(byDst.join(a, col("dst") === col("an"))
           .groupBy(col("src").as("node"))
-          .agg(sum(expr("a_ * w")).as("h")), "h")
-        .withColumnRenamed("node", "hn")
-    }
-    (h.select(col("hn").as("node"), col("h")),
-      a.select(col("an").as("node"), col("a_").as("a")))
+          .agg(sum(expr("a_ * w")).as("h")))
+        h = rescale(hRaw, "h").withColumnRenamed("node", "hn")
+        // this round is cut, so nothing reads the last round's frames
+        previous.foreach(graft.ops.BuildOnce.releaseFrame(_))
+        previous = List(aRaw, hRaw)
+      }
+      (h.select(col("hn").as("node"), col("h")).localCheckpoint(true),
+        a.select(col("an").as("node"), col("a_").as("a")).localCheckpoint(true))
+    } finally cuts.release()
   }
 
-  private val lastHitsBySrc =
-    graft.ops.BuildOnce.swapRef()
-  private val lastHitsByDst =
-    graft.ops.BuildOnce.swapRef()
-
-  /** One persisted slot per co-partitioned HITS half-round (see
-    * rescale); a fixed pool because swapRef() registers into the
-    * global release hook — per-call allocation would grow the
-    * registry unboundedly. */
-  private val HitsMaxRounds = 8
-  private val hitsSlots =
-    IndexedSeq.fill(2 * HitsMaxRounds)(graft.ops.BuildOnce.swapRef())
-
+  /** BFS hop distances from `source` over directed edges (src, dst),
+    * capped at `maxHops` — frontier-style Pregel traversal: each round
+    * expands ONLY the nodes discovered last round (one equi-join),
+    * anti-joins the already-visited set, and unions the new layer in.
+    * All-integer semantics, so any engine replays it exactly.
+    *
+    * Scale shape: round r moves |frontier_r|·avg_degree rows through
+    * one shuffle — the textbook distributed BFS; the visited set is
+    * only ever the build side of an anti-join (never collected). Each
+    * round's frontier is localCheckpoint'd: dist_r's lineage would
+    * otherwise nest r copies of the join tree (the connectedComponents
+    * pattern; eager — BFS reads every frontier exactly once more).
+    */
   def bfsHops(edges: DataFrame, source: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops $maxHops")
     val e = edges.select(col("src"), col("dst"))
@@ -907,8 +847,8 @@ object GraphQueries extends QueryModule {
           .join(broadcast(nation),
             col("c_nationkey") === col("n_nationkey"))
           .select((col("c_custkey").cast("long") * 2).as("node"))
-        GraphOps.personalizedPageRank(
-            orderGraphEdges(spark, dir), seeds, iters = 4)
+        GraphOps.pageRank(orderGraphEdges(spark, dir), iters = 4,
+            seeds = Some(seeds))
           .filter(col("node") % 2 === 1)
           .select(
             concat(lit("S"), shiftright(col("node"), 1).cast("string"))

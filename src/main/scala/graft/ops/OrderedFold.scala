@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Per-key ORDERED folds via secondary sort — the scale path for
-  * sequential recurrences (`q_ema_decay` documents it; this is the
-  * implementation): instead of collecting each key's values into an
-  * array and folding the array (per-key memory ∝ key's row count),
-  * repartition by key, sort WITHIN partitions by (key, order), and
-  * stream one pass over each partition folding run-by-run. Memory per
+/** Per-key ORDERED folds via secondary sort — the one implementation
+  * of sequential recurrences (`q_ema_decay` runs on it): instead of
+  * collecting each key's values into an array and folding the array
+  * (per-key memory ∝ key's row count), repartition by key, sort
+  * WITHIN partitions by (key, order), and stream one pass over each
+  * partition folding run-by-run. Memory per
   * task is O(1) regardless of how hot a key is — the pathological
   * 10M-event user costs time, never heap — and the sort is the same
   * shuffle the groupBy would have paid.
@@ -19,9 +19,10 @@ import org.apache.spark.sql.types._
   * imperative logic): `repartition(k)` guarantees all rows of a key
   * share a partition; `sortWithinPartitions(k, o...)` makes each
   * key's rows adjacent and ordered; the fold is then a single
-  * sequential scan. The per-element op chain is IDENTICAL to the
-  * array fold's, so results are bit-for-bit equal (OrderedFoldSpec
-  * pins this against `q_ema_decay` on the sf data).
+  * sequential scan. The per-element op chain is the textbook
+  * left-to-right one, so results are bit-for-bit those of a plain
+  * sequential fold (OrderedFoldSpec pins this on the sf data) and of
+  * DuckDB's `list_reduce` (the `q_ema_decay` oracle).
   */
 object OrderedFold {
 

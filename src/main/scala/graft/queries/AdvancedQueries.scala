@@ -216,8 +216,8 @@ object AdvancedQueries extends QueryModule {
     // heavy work (the orderkey equi-join, the per-day rollup with
     // map-side partials) is unordered and shuffles normally; the only
     // SEQUENTIAL step runs over the date dimension, which is bounded
-    // (~hundreds of rows at any corpus size — same two-level trick as
-    // q_ema_decay: aggregate to the bounded key first, fold second),
+    // (~hundreds of rows at any corpus size — the two-level trick:
+    // aggregate to the bounded key first, fold second),
     // so the single-partition prefix window is never the bottleneck
     // at 100 TB. Integer counts end-to-end ⇒ hash-exact.
     "q_sweepline_concurrency" -> QueryDef(

@@ -32,32 +32,17 @@ object TimeSeriesQueries extends QueryModule {
     // recurrence s_i = α·x_i + (1−α)·s_{i−1}, seeded s_1 = x_1 — the
     // canonical time-decay feature (recency-weighted engagement).
     // A recurrence cannot be a window aggregate, but it IS an ordered
-    // left fold: collect each user's values under the total order
-    // (ts, event_id) and fold with `aggregate`. Both engines execute
-    // the identical IEEE multiply-add chain left-to-right (DuckDB
-    // `list_reduce` seeds with the first element; Spark folds
-    // `slice(.., 2, ..)` from `vals[0]`), so the double hash-matches.
-    // Scale shape: ONE shuffle (the groupBy), state bounded by
-    // per-user event count — the same bound any sessionization already
-    // carries; a pathological entity would be handled by period
-    // sub-folds (EMA composes: fold a day, carry the tail) without
-    // changing the plan. α = 0.125 and 1−α = 0.875 are exact binary
-    // doubles (dyadic rationals), so the literals themselves are
-    // engine-identical too.
+    // left fold: ops/OrderedFold streams each user's values under the
+    // total order (ts, event_id) through one repartition + in-partition
+    // sort, so task memory is O(1) however hot a user is. Both engines
+    // execute the identical IEEE multiply-add chain left-to-right
+    // (DuckDB `list_reduce` seeds with the first element, as the fold
+    // does), so the double hash-matches. α = 0.125 and 1−α = 0.875 are
+    // exact binary doubles (dyadic rationals), so the literals
+    // themselves are engine-identical too.
     "q_ema_decay" -> QueryDef(
       fn = (spark, dir) =>
-        Tables(spark, dir, "events")
-          .select("user_id", "ts", "event_id", "value")
-          .groupBy("user_id")
-          .agg(
-            count(lit(1)).as("n_events"),
-            sort_array(collect_list(
-              struct(col("ts"), col("event_id"), col("value")))).as("seq"))
-          .withColumn("vals", expr("transform(seq, s -> s.value)"))
-          .withColumn("ema", expr(
-            "aggregate(slice(vals, 2, size(vals) - 1), vals[0]," +
-              " (acc, x) -> acc * 0.875D + x * 0.125D)"))
-          .select(col("user_id"), col("n_events"), col("ema"))
+        graft.ops.OrderedFold.emaByUser(Tables(spark, dir, "events"))
           .orderBy("user_id"),
       oracle = Some("""
         |WITH seq AS (

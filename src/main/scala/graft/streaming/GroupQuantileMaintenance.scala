@@ -24,12 +24,11 @@ import graft.ops.QuantileSketch.QSketch
   *
   * Scale shape per batch: the batch reduces DISTRIBUTED to ≤k pairs
   * per group through [[QuantileSketch.QuantileSketchAgg]]'s
-  * partial-aggregated buffers (one exchange of group × k rows); the
-  * fold is a driver-side per-group merge over the collected sketches.
-  * Driver state is groups × k pairs — the bounded-registry class
-  * (sources, langs, shards). An UNBOUNDED group domain needs the
-  * store partitioned by group hash instead; this store's contract is
-  * the registry-sized one, like [[graft.ext.PipelineOps.waterfill]].
+  * partial-aggregated buffers (one exchange of group × k rows), and
+  * the fold is distributed too — one exchange on the group key, each
+  * group rebuilt and merged in ≤2(k+1)-row bounded memory — so no
+  * group domain, registry-sized (sources, langs, shards) or unbounded
+  * (per-user, per-document), turns maintenance into a driver collect.
   */
 object GroupQuantileMaintenance {
 
@@ -54,10 +53,11 @@ object GroupQuantileMaintenance {
       .withColumn("last_batch", lit(stamp)).coalesce(1)
   }
 
-  /** Store rows back to per-group sketches + the idempotency stamp. */
-  private def decode(store: DataFrame,
-      k: Int): (Map[String, QSketch], String) = {
-    val rows = store.select("g", "h", "v", "total", "last_batch").collect()
+  /** Read the store back: per-group sketches + the idempotency stamp. */
+  def readSketches(spark: SparkSession, storeDir: String,
+      k: Int = QuantileSketch.DefaultK): (Map[String, QSketch], String) = {
+    val rows = MergeableStore.read(spark, storeDir)
+      .select("g", "h", "v", "total", "last_batch").collect()
     val stamp = rows.head.getString(4)
     val byG = rows.filterNot(_.getString(0) == StampG)
       .groupBy(_.getString(0)).map { case (g, rs) =>
@@ -69,11 +69,6 @@ object GroupQuantileMaintenance {
       }
     (byG, stamp)
   }
-
-  /** Read the store back: per-group sketches + the idempotency stamp. */
-  def readSketches(spark: SparkSession, storeDir: String,
-      k: Int = QuantileSketch.DefaultK): (Map[String, QSketch], String) =
-    decode(MergeableStore.read(spark, storeDir), k)
 
   /** Distributed batch → per-group sketches: ONE typed aggregation
     * whose partial buffers carry ≤k pairs per group, then a
@@ -100,24 +95,11 @@ object GroupQuantileMaintenance {
     MergeableStore.publish(storeDir,
       storeRows(rows.sparkSession, sketchesOf(rows, k), stamp))
 
-  /** Bounded-registry ceiling for the DRIVER-side fold: at or below
-    * it the per-group merge collects groups × k pairs (sources,
-    * langs, shards — the store's original contract); past it the
-    * fold runs DISTRIBUTED — one exchange on the group key, each
-    * group rebuilt and merged in ≤2(k+1)-row bounded memory — so an
-    * unbounded group domain (per-user, per-document) never turns the
-    * maintenance loop into a driver collect. The measured-gate
-    * pattern of [[graft.ops.TableStats.statsJoin]]: the regime is
-    * chosen from counted groups, never from hope. Both regimes are
-    * spec-pinned bit-equal. */
-  val MaxDriverGroups: Long = 8192L
-
-  /** The distributed fold as a frame of store rows (g, h, v, total):
-    * stored rows ⊎ the delta's distributed per-group sketch rows,
-    * one groupByKey on g, per-group imperative rebuild + the SAME
-    * QSketch.merge the driver regime runs — bit-identical output by
-    * construction. private[graft] so the spec can plan-assert the
-    * exchange + mapGroups shape. */
+  /** The fold as a frame of store rows (g, h, v, total): stored rows
+    * ⊎ the delta's distributed per-group sketch rows, one groupByKey
+    * on g, per-group imperative rebuild + QSketch.merge.
+    * private[graft] so the spec can plan-assert the exchange +
+    * mapGroups shape. */
   private[graft] def mergedRowsDistributed(spark: SparkSession,
       storeDir: String, delta: DataFrame, k: Int): DataFrame =
     foldDistributed(spark, MergeableStore.read(spark, storeDir), delta, k)
@@ -164,16 +146,10 @@ object GroupQuantileMaintenance {
 
   /** Fold one batch of (g, h, v) rows into the store (the zero-group
     * store before the first publish) — idempotent per batchId; a group
-    * unseen so far merges from the empty sketch. Regime is gated on
-    * the MEASURED group count (stored meta rows + delta distinct
-    * groups — an upper bound on the union): at or under
-    * `maxDriverGroups` the original driver fold runs; above it the
-    * distributed fold (same rows, spec-pinned). The stamp check is one
-    * filtered head — no group-domain-sized collect (the regime gate
-    * must not pay the collect it exists to avoid). */
+    * unseen so far merges from the empty sketch. The stamp check is
+    * one filtered head — no group-domain-sized collect. */
   def mergeDelta(spark: SparkSession, storeDir: String, delta: DataFrame,
-      batchId: String, k: Int = QuantileSketch.DefaultK,
-      maxDriverGroups: Long = MaxDriverGroups): Unit = {
+      batchId: String, k: Int = QuantileSketch.DefaultK): Unit = {
     require(batchId.nonEmpty && batchId != "__init", s"bad batchId $batchId")
     MergeableStore.merge(spark, storeDir,
         storeRows(spark, Map.empty, "__init")) { store =>
@@ -181,24 +157,12 @@ object GroupQuantileMaintenance {
         .select("last_batch").head().getString(0)
       if (stamp == batchId) None
       else {
-        val storedGroups = store
-          .filter(col("g") =!= lit(StampG) && col("h") === lit(MetaH)).count()
-        val deltaGroups = delta.select(col("g")).distinct().count()
-        if (storedGroups + deltaGroups <= maxDriverGroups) {
-          val (stored, _) = decode(store, k)
-          val fresh = sketchesOf(delta, k)
-          Some(storeRows(spark, (stored.keySet ++ fresh.keySet).map { g =>
-            g -> stored.getOrElse(g, QSketch.empty(k))
-              .merge(fresh.getOrElse(g, QSketch.empty(k)))
-          }.toMap, batchId))
-        } else {
-          import spark.implicits._
-          val stampRow = Seq((StampG, MetaH, 0L, 0L))
-            .toDF("g", "h", "v", "total")
-          Some(foldDistributed(spark, store, delta, k)
-            .union(stampRow)
-            .withColumn("last_batch", lit(batchId)))
-        }
+        import spark.implicits._
+        val stampRow = Seq((StampG, MetaH, 0L, 0L))
+          .toDF("g", "h", "v", "total")
+        Some(foldDistributed(spark, store, delta, k)
+          .union(stampRow)
+          .withColumn("last_batch", lit(batchId)))
       }
     }
   }

@@ -239,8 +239,8 @@ class GraphSpec extends SparkSpec {
     // every node at 15% of scale.
     val edges = Seq(("a", "b", 1L), ("b", "a", 1L),
       ("c", "d", 1L), ("d", "c", 1L)).toDF("src", "dst", "w")
-    val got = GraphOps.personalizedPageRank(edges, Seq("a").toDF("node"),
-      iters = 5).as[(String, Long)].collect().toMap
+    val got = GraphOps.pageRank(edges, iters = 5,
+      seeds = Some(Seq("a").toDF("node"))).as[(String, Long)].collect().toMap
     assert(got("c") === 0L && got("d") === 0L, s"unreachable mass: $got")
     assert(got("a") > 0L && got("b") > 0L, s"seed component empty: $got")
   }
@@ -516,9 +516,143 @@ class GraphSpec extends SparkSpec {
       pr
     }
 
-    val got = GraphOps.personalizedPageRank(raw.toDF("src", "dst", "w"),
-      seedIn.toDF("node"), iters, scale)
+    val got = GraphOps.pageRank(raw.toDF("src", "dst", "w"), iters, scale,
+      seeds = Some(seedIn.toDF("node")))
       .as[(String, Long)].collect().toMap
     assert(got === reference())
+  }
+
+  /** Plain-Scala personalized PageRank: the seeded recurrence. */
+  private def pprReference[K](raw: Seq[(K, K, Long)], seeds: Seq[K], iters: Int,
+      scale: Long): Map[K, Long] = {
+    val outw = raw.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+    val nodes = raw.map(_._1).distinct
+    val in = seeds.toSet.intersect(nodes.toSet)
+    val t = 15L * scale * nodes.size / (100L * in.size)
+    def tele(n: K) = if (in(n)) t else 0L
+    var pr = nodes.map(n => n -> tele(n)).toMap
+    for (_ <- 1 to iters) {
+      val contrib = raw
+        .flatMap { case (s, d, w) =>
+          if (outw.contains(d)) Some(d -> (pr(s) * w / outw(s))) else None }
+        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+      pr = nodes.map(n => n -> (tele(n) + 85L * contrib.getOrElse(n, 0L) / 100L)).toMap
+    }
+    pr
+  }
+
+  /** The RDD a checkpointed frame holds its rows in. */
+  private def rddOf(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+
+  test("personalized pageRank: kernel == co-partitioned == reference on seeded random graphs") {
+    // string and long keys, dst-only nodes, and seeds outside the graph
+    // (dropped before the teleport split)
+    val rnd = new scala.util.Random(23)
+    for (trial <- 1 to 6) {
+      val n = 5 + rnd.nextInt(8)
+      val ids = Seq.fill(20 + rnd.nextInt(20))(
+        (rnd.nextInt(n), rnd.nextInt(n + 2), 1L + rnd.nextInt(9)))
+      val seedIds = ids.head._1 +: Seq.fill(1 + rnd.nextInt(3))(rnd.nextInt(n + 4))
+      val iters = 1 + rnd.nextInt(5)
+      val scale = 1000000000L
+      val msg = s"trial $trial: n=$n iters=$iters seeds=$seedIds"
+      def check[K](raw: Seq[(K, K, Long)], seeds: Seq[K])(
+          implicit enc: org.apache.spark.sql.Encoder[(K, Long)],
+          encE: org.apache.spark.sql.Encoder[(K, K, Long)],
+          encS: org.apache.spark.sql.Encoder[K]): Unit = {
+        val df = spark.createDataset(raw)(encE).toDF("src", "dst", "w")
+        val sd = Some(spark.createDataset(seeds)(encS).toDF("node"))
+        val kernel = GraphOps.pageRank(df, iters, scale, seeds = sd)
+        val copart = GraphOps.pageRank(df, iters, scale, broadcastNodes = 0L, seeds = sd)
+        val want = pprReference(raw, seeds, iters, scale)
+        assert(kernel.as[(K, Long)](enc).collect().toMap === want, msg)
+        assert(copart.as[(K, Long)](enc).collect().toMap === want, msg)
+        assert(kernel.schema === copart.schema, msg)
+        graft.ops.BuildOnce.releaseFrame(copart)
+      }
+      check(ids.map { case (s, d, w) => (s.toLong, d.toLong, w) }, seedIds.map(_.toLong))
+      check(ids.map { case (s, d, w) => (s"n$s", s"n$d", w) }, seedIds.map(i => s"n$i"))
+    }
+    // no seed is a node: both regimes refuse the teleport split
+    val g = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    for (bn <- Seq(1000000L, 0L)) {
+      val e = intercept[IllegalArgumentException](GraphOps.pageRank(g, 2,
+        broadcastNodes = bn, seeds = Some(Seq(7L).toDF("node"))).collect())
+      assert(e.getMessage.contains("empty seed set"), s"broadcastNodes=$bn: $e")
+    }
+  }
+
+  test("hits runs 12 rounds in both regimes") {
+    val rnd = new scala.util.Random(5)
+    val raw = Seq.fill(40)(
+      (rnd.nextInt(10).toLong, rnd.nextInt(12).toLong, 1L + rnd.nextInt(9)))
+    val want = hitsReference(raw, 12, 1000000L)
+    for (bn <- Seq(1000000L, 0L)) {
+      val (h, a) = GraphOps.hits(raw.toDF("src", "dst", "w"), 12, broadcastNodes = bn)
+      assert((h.as[(Long, Long)].collect().toMap, a.as[(Long, Long)].collect().toMap) === want,
+        s"broadcastNodes=$bn")
+    }
+  }
+
+  test("concurrent co-partitioned calls are bit-equal to serial runs") {
+    // two calls each of pageRank, seeded pageRank and hits on one graph,
+    // and a third on another graph, all at once on one session
+    val rnd = new scala.util.Random(17)
+    def graph(n: Int) = Seq.fill(40)(
+      (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong, 1L + rnd.nextInt(5)))
+      .toDF("src", "dst", "w")
+    val graphs = Seq(graph(12), graph(9))
+    val seeds = Some(Seq(0L, 1L, 2L, 3L).toDF("node"))
+    def ranks(df: org.apache.spark.sql.DataFrame) = {
+      val m = df.as[(Long, Long)].collect().toMap
+      graft.ops.BuildOnce.releaseFrame(df)
+      m
+    }
+    def rank(g: Int) = ranks(GraphOps.pageRank(graphs(g), 5, broadcastNodes = 0L))
+    def ppr(g: Int) = ranks(GraphOps.pageRank(graphs(g), 4, broadcastNodes = 0L,
+      seeds = seeds))
+    def hubs(g: Int) = {
+      val (h, a) = GraphOps.hits(graphs(g), 3, broadcastNodes = 0L)
+      (ranks(h), ranks(a))
+    }
+    val calls: Seq[() => Any] = Seq(0, 0, 1).flatMap(g =>
+      Seq(() => rank(g), () => ppr(g), () => hubs(g)))
+    val serial = calls.map(_())
+    val together = graft.ops.Concurrent.all(calls: _*)
+    assert(together === serial)
+  }
+
+  test("co-partitioned calls keep nothing but their results, which release") {
+    val g = Seq((0L, 1L, 3L), (1L, 2L, 2L), (2L, 0L, 1L), (2L, 3L, 5L),
+      (3L, 1L, 1L), (4L, 2L, 2L)).toDF("src", "dst", "w")
+    val swaps = graft.ops.BuildOnce.liveSwapCount
+    val before = persisted
+    val pr = GraphOps.pageRank(g, 4, broadcastNodes = 0L)
+    val ppr = GraphOps.pageRank(g, 4, broadcastNodes = 0L,
+      seeds = Some(Seq(1L, 4L).toDF("node")))
+    val (h, a) = GraphOps.hits(g, 3, broadcastNodes = 0L)
+    val results = Seq(pr, ppr, h, a)
+    assert(graft.ops.BuildOnce.liveSwapCount === swaps)
+    // the results are materialized: each holds one persisted RDD, and
+    // nothing else the calls made is left
+    assert(persisted -- before === results.map(rddOf).toSet)
+    results.foreach(_.collect())
+    results.foreach(graft.ops.BuildOnce.releaseFrame(_, blocking = true))
+    assert((persisted -- before).isEmpty)
+  }
+
+  test("a co-partitioned hits call then kernel calls pin only the first call's results") {
+    val rnd = new scala.util.Random(29)
+    val raw = Seq.fill(30)((rnd.nextInt(8).toLong, rnd.nextInt(8).toLong, 1L))
+      .toDF("src", "dst", "w")
+    val before = persisted
+    val (h, a) = GraphOps.hits(raw, 8, broadcastNodes = 0L)
+    h.collect(); a.collect()
+    val (hk, ak) = GraphOps.hits(raw, 8)
+    hk.collect(); ak.collect()
+    GraphOps.pageRank(raw, 3).collect()
+    assert(persisted -- before === Set(rddOf(h), rddOf(a)))
+    Seq(h, a).foreach(graft.ops.BuildOnce.releaseFrame(_, blocking = true))
   }
 }

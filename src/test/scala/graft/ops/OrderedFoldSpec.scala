@@ -2,26 +2,34 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
 
-/** OrderedFold.emaByUser (the secondary-sort scale path) must be
-  * bit-identical to `q_ema_decay`'s array fold: same per-element IEEE
-  * chain, different physical shape (streaming one-pass fold, O(1)
-  * task memory vs per-key arrays).
+/** OrderedFold.emaByUser (the secondary-sort fold `q_ema_decay` runs
+  * on) must be bit-identical to a plain sequential fold: same
+  * per-element IEEE chain, different physical shape (streaming
+  * one-pass fold, O(1) task memory).
   */
 class OrderedFoldSpec extends SparkSpec {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("secondary-sort fold == array fold bit-for-bit on sf data") {
+  test("secondary-sort fold == plain-Scala fold bit-for-bit on sf data") {
     val events = graft.Tables(spark, sf, "events")
     val got = OrderedFold.emaByUser(events)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
-    val ref = SparkEntry.queries("q_ema_decay")(spark, sf)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-      .toMap
+    // the same events folded on the driver under (ts, event_id)
+    // order; (epoch second, nanos) orders timestamps at full precision
+    val ref = events.select("user_id", "ts", "event_id", "value").collect()
+      .groupBy(_.getLong(0)).map { case (u, rs) =>
+        val xs = rs.sortBy { r =>
+          val t = r.getTimestamp(1)
+          (math.floorDiv(t.getTime, 1000L), t.getNanos, r.getLong(2))
+        }.map(_.getDouble(3))
+        u -> (rs.length.toLong,
+          xs.tail.foldLeft(xs.head)((a, x) => a * 0.875 + x * 0.125))
+      }
     assert(got.keySet === ref.keySet)
     ref.foreach { case (u, (n, ema)) =>
       assert(got(u)._1 === n, s"user $u count")

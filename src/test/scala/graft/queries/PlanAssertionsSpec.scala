@@ -182,14 +182,16 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(p.contains("ExistingRDD") || p.contains("LocalTableScan"), p)
   }
 
-  test("q_ema_decay: one data exchange (the groupBy), partial agg, no join") {
+  test("q_ema_decay: one hash exchange, a streamed fold, no join") {
     val p = plan("q_ema_decay")
-    // exactly one HASH exchange moves data (the per-user groupBy; the
-    // trailing rangepartitioning exchange is the output-order contract)
+    // exactly one HASH exchange moves data (the per-user repartition;
+    // the trailing rangepartitioning exchange is the output-order
+    // contract)
     val hashEx = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(hashEx === 1, s"expected exactly one hash exchange:\n$p")
-    // the collect_list aggregation combines map-side first
-    assert(p.contains("partial_collect_list"), p)
+    // the fold streams each sorted partition: no per-user array
+    assert(p.contains("MapPartitions"), p)
+    assert(!p.contains("collect_list"), p)
     assert(!p.contains("Join"), p)
   }
 

@@ -46,33 +46,23 @@ class GroupQuantileMaintenanceSpec extends SparkSpec {
     }
   }
 
-  test("driver and distributed fold regimes produce bit-identical stores; replay guarded") {
-    val storeA = Files.createTempDirectory("graft_gqm_drv").toString
+  test("distributed fold: replay skipped, one exchange on g") {
     val storeB = Files.createTempDirectory("graft_gqm_dist").toString
     val seed = docRows(col("doc_id") % 2 === 0)
-    GroupQuantileMaintenance.build(seed, storeA, K)
     GroupQuantileMaintenance.build(seed, storeB, K)
 
     val delta = docRows(col("doc_id") % 2 === 1)
-    // regime A: the default driver fold (groups are registry-sized)
-    GroupQuantileMaintenance.mergeDelta(spark, storeA, delta, "b1", K)
-    // regime B: maxDriverGroups=0 forces the DISTRIBUTED fold — the
-    // unbounded-group-domain path
-    GroupQuantileMaintenance.mergeDelta(spark, storeB, delta, "b1", K,
-      maxDriverGroups = 0L)
+    GroupQuantileMaintenance.mergeDelta(spark, storeB, delta, "b1", K)
 
     def rows(dir: String) =
       graft.ops.Fs.readStore(spark, graft.ops.MergeableStore.liveDir(dir))
       .select("g", "h", "v", "total", "last_batch")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getString(4))).sorted.toSeq
-    assert(rows(storeA) === rows(storeB),
-      "distributed fold diverged from the driver fold")
 
-    // replayed epoch in the distributed regime: the stamp guard skips
+    // replayed epoch: the stamp guard skips
     val before = rows(storeB)
-    GroupQuantileMaintenance.mergeDelta(spark, storeB, delta, "b1", K,
-      maxDriverGroups = 0L)
+    GroupQuantileMaintenance.mergeDelta(spark, storeB, delta, "b1", K)
     assert(rows(storeB) === before, "distributed replay double-folded")
 
     // and the distributed plan has the shape the contract claims:
